@@ -1,35 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      // AQE partition-coalescing knobs, parameterised for production
-      // (guide §2.2/§9: size post-shuffle partitions by bytes at scale —
-      // SPARK_GRAFT_PARALLELISM_FIRST=false + SPARK_GRAFT_ADVISORY=256m
-      // on a real cluster). DEFAULTS STAY SPARK'S OWN: a two-round
-      // order-swapped A/B at sf0.1 (OPTIMIZATION_r17.md) showed the flip
-      // is inside box noise locally (±5 s swings both directions), and a
-      // config default without a measured local win is exactly the
-      // "config-only tuning" the optimization guide ranks last.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "true"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY", "64m"))
-      // ContextCleaner reclaims broadcasts/shuffles only after a driver GC;
-      // the default 30-min periodic GC never fires inside a ~2-min bench,
-      // so ~100 queries of accumulated state squeeze the heap and the
-      // job-heavy late queries pay it in GC (measured: 3-4× inflation)
-      .config("spark.cleaner.periodicGC.interval", "15s")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession()
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark) // native SQL surface
     // JIT/codegen/file-index warmup so the first measured query isn't
     // charged for JVM startup (standard bench hygiene; reported separately)
     val w0 = System.nanoTime()

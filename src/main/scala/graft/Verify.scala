@@ -1,28 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    // default to every core: the driver's gate is wall-clock-budgeted and
-    // the dump half of it is embarrassingly parallel across 200+ queries'
-    // jobs — 4 threads was a dev-era default that cost ~4× gate wall time
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // ~100 queries in one session never reach the default 30-min
-      // periodic GC, so ContextCleaner reclaims nothing and late
-      // job-heavy queries run under heap pressure (see Bench)
-      .config("spark.cleaner.periodicGC.interval", "15s")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession()
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark) // native SQL surface
     new java.io.File(outDir).mkdirs()
     // dev-loop narrowing: SPARK_GRAFT_ONLY=x82,x83 runs only queries whose
     // name starts with a listed prefix (unset in driver runs — full sweep)

@@ -777,7 +777,7 @@ object Dedup {
     * (gram, id) pairs, never document text; output is one row per
     * contaminated train doc. The standard pretrain decontamination pass. */
   /** `bloomPreFilter` — opt-in bloom probe ahead of the broadcast join.
-    * MEASURED at bench scale (tools/X23Bench, sf0.1, interleaved warm
+    * MEASURED at bench scale (PERF.md Round 4, sf0.1, interleaved warm
     * runs): a wash to slightly negative (~7.1 s vs ~6.7-7.2 s) — the
     * eval-gram hash map is tiny and cache-resident, so the BHJ probe a
     * negative gram pays is already as cheap as the bloom probe. The knob

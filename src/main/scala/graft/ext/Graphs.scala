@@ -87,10 +87,9 @@ object Graphs {
   private[ext] def stageEdgesBucketed(e0: DataFrame): (DataFrame, () => Unit) =
     stageEdgesBucketedOn(e0, "_pr_src")
 
-  /** [[stageEdgesBucketed]] on an explicit key — HITS stages the edge
-    * table TWICE (by `_ht_src` for the authority half-step, by
-    * `_ht_dst` for the hub half-step), so both directions' per-round
-    * joins are exchange- and sort-free. */
+  /** [[stageEdgesBucketed]] on an explicit key — HITS stages ONE copy
+    * of the edge table, bucketed by `_ht_src` (its hub half-step
+    * re-keys that copy by `_ht_dst`; see [[hits]]). */
   private[ext] def stageEdgesBucketedOn(e0: DataFrame,
                                         key: String): (DataFrame, () => Unit) = {
     val st = stageProjectedEdges(e0, key)
@@ -143,12 +142,11 @@ object Graphs {
     skeletonRows(e, weighted)
       .groupBy(col("node")).agg(sum(col("_pr_od")).as("_pr_od"))
 
-  /** Diagnostic accessor for the plan-evidence tooling
-    * ([[graft.tools.SkeletonPlan]]): the skeleton frame of a (src, dst)
-    * edge list, exactly as every ranker round (and every EdgeStage
-    * init/append merge) builds it. NOT engine surface — the final
-    * staged-query explain cannot show this intra-operator plan (the r17
-    * verdict's evidence gap), so the tool dumps it directly. */
+  /** Test accessor: the skeleton frame of a (src, dst) edge list,
+    * exactly as every ranker round (and every EdgeStage init/append
+    * merge) builds it. NOT engine surface — the final staged-query
+    * explain cannot show this intra-operator plan, so PlanSpec's
+    * "ranker skeleton builds in ONE exchange" case pins it directly. */
   private[graft] def skeletonDiag(edges: DataFrame, srcCol: String,
                                   dstCol: String): DataFrame =
     skeletonOf(edges.select(col(srcCol).cast("long").as("_pr_src"),
@@ -279,8 +277,7 @@ object Graphs {
     val st = stageProjectedEdges(
       edges.select(col(srcCol).cast("long").as("_pr_src"),
         col(dstCol).cast("long").as("_pr_dst")), "_pr_src")
-    if (!sys.env.get("SPARK_GRAFT_EDGESTAGE_SKEL").contains("off"))
-      st.initSkeleton()
+    st.initSkeleton()
     st
   }
 
@@ -292,8 +289,7 @@ object Graphs {
         col(dstCol).cast("long").as("_pr_dst"),
         col(weightCol).cast("long").as("_pr_w")), "_pr_src",
       weighted = true)
-    if (!sys.env.get("SPARK_GRAFT_EDGESTAGE_SKEL").contains("off"))
-      st.initSkeleton()
+    st.initSkeleton()
     st
   }
 
@@ -943,7 +939,7 @@ object Graphs {
     // round re-executes the caller's edge-build lineage several times.
     // HITS joins the edge list on BOTH ends (src for the authority
     // half-step, dst for the hub half-step). Staged layout (r17 A/B,
-    // tools/HitsAb, measured both ways at 100×): ONE src-bucketed copy;
+    // PERF.md, measured both ways at 100×): ONE src-bucketed copy;
     // the authority half-step rides the bucket (no edge-side Exchange
     // or Sort), and the hub half-step joins the SAME copy on _ht_dst
     // with the |V|-row score table as the shuffled-hash BUILD side —
@@ -1026,7 +1022,7 @@ object Graphs {
     *
     * Scale shape per round: the directed adjacency (each undirected
     * edge, both ways — built once, staged) is filtered to
-    * both-endpoints-alive by two node-keyed joins, then one
+    * alive destinations by one node-keyed semi-join, then one
     * map-side-combining degree count; the survivor set stages per
     * round ([[Dedup.stageSignatures]] — constant plan size), and the
     * ONLY driver scalar is the per-round survivor count backing the
@@ -1039,7 +1035,6 @@ object Graphs {
             maxRounds: Int = 32): DataFrame = {
     require(k >= 1, s"k must be >= 1: $k")
     require(maxRounds >= 1, s"maxRounds must be >= 1: $maxRounds")
-    val spark = edges.sparkSession
     val und = edges
       .select(least(col(srcCol).cast("long"), col(dstCol).cast("long")).as("_kc_u"),
         greatest(col(srcCol).cast("long"), col(dstCol).cast("long")).as("_kc_v"))
@@ -1055,50 +1050,38 @@ object Graphs {
     // exchange the bucketing could remove, and the sorted bucketed
     // write plus 32-task bucket scans per round are pure overhead
     // (guide §1.1: the "ideal" plan lost to the measurement; §2.4's
-    // shuffle removal has nothing to remove here). FLAT stage is the
-    // measured default; SPARK_GRAFT_KCORE_BUCKET=on opts into the
-    // bucketed form for graphs dense enough that the alive set cannot
-    // broadcast and rounds are many.
-    val adjacency = und
+    // shuffle removal has nothing to remove here). FLAT stage it is.
+    val ee = Dedup.stageAndRead(und
       .select(col("_kc_u").as("_kc_a"), col("_kc_v").as("_kc_b"))
       .unionAll(und.select(col("_kc_v").as("_kc_a"),
-        col("_kc_u").as("_kc_b")))
-    val (ee, dropEe) =
-      if (sys.env.get("SPARK_GRAFT_KCORE_BUCKET").contains("on"))
-        stageEdgesBucketedOn(adjacency, "_kc_b")
-      else (Dedup.stageAndRead(adjacency), () => ())
-    try {
-      var alive = ee.select(col("_kc_a").as("node")).distinct()
-      var n = alive.count()
-      var result: DataFrame = null
-      var r = 0
-      while (result == null && r < maxRounds) {
-        r += 1
-        // ONE alive-join per round, not two: restricting the a-side to
-        // alive nodes is redundant — peeling is monotone (alive sets only
-        // shrink), so a node removed in an earlier round has degree < k
-        // over ANY later alive set and the `deg >= k` filter drops it
-        // anyway. Each round therefore joins the staged edge table once
-        // (b-side alive semi-filter) instead of twice — half the per-round
-        // join work at every scale, identical survivor set per round.
-        val deg = ee
-          .join(alive.select(col("node").as("_kc_b")), "_kc_b")
-          .groupBy(col("_kc_a").as("node"))
-          .agg(count(lit(1)).as("deg"))
-          .filter(col("deg") >= k)
-        val next = Dedup.stageAndRead(deg)
-        val m = next.count()
-        if (m == n) result = next.select(col("node"), col("deg"))
-        else { n = m; alive = next.select(col("node")) }
-      }
-      if (result == null) throw new IllegalStateException(
-        s"kCore did not reach a fixpoint in $maxRounds rounds — raise " +
-          "maxRounds (and the oracle unroll) for this graph")
-      // the result frame reads from per-round stage dirs, not the edge
-      // table — materialized by the count above, so dropping ee in
-      // finally is safe for every consumer of the returned frame
-      result
-    } finally dropEe()
+        col("_kc_u").as("_kc_b"))))
+    var alive = ee.select(col("_kc_a").as("node")).distinct()
+    var n = alive.count()
+    var result: DataFrame = null
+    var r = 0
+    while (result == null && r < maxRounds) {
+      r += 1
+      // ONE alive-join per round, not two: restricting the a-side to
+      // alive nodes is redundant — peeling is monotone (alive sets only
+      // shrink), so a node removed in an earlier round has degree < k
+      // over ANY later alive set and the `deg >= k` filter drops it
+      // anyway. Each round therefore joins the staged edge table once
+      // (b-side alive semi-filter) instead of twice — half the per-round
+      // join work at every scale, identical survivor set per round.
+      val deg = ee
+        .join(alive.select(col("node").as("_kc_b")), "_kc_b")
+        .groupBy(col("_kc_a").as("node"))
+        .agg(count(lit(1)).as("deg"))
+        .filter(col("deg") >= k)
+      val next = Dedup.stageAndRead(deg)
+      val m = next.count()
+      if (m == n) result = next.select(col("node"), col("deg"))
+      else { n = m; alive = next.select(col("node")) }
+    }
+    if (result == null) throw new IllegalStateException(
+      s"kCore did not reach a fixpoint in $maxRounds rounds — raise " +
+        "maxRounds (and the oracle unroll) for this graph")
+    result
   }
 
   /** TRIANGLE COUNTING + local clustering coefficient by DEGREE-ORDERED

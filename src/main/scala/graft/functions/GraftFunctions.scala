@@ -8,8 +8,9 @@ import org.apache.spark.sql.graftbridge.Bridge
 /** Registration surface for graft's native Catalyst expressions.
   *
   * Two entry points:
-  *  - [[GraftExtensions]] for `SparkSession.builder.withExtensions` /
-  *    `spark.sql.extensions=graft.functions.GraftExtensions` (SQL users);
+  *  - [[GraftExtensions]], which [[graft.GraftSession]] installs on every
+  *    session it builds (or `spark.sql.extensions=graft.functions.GraftExtensions`
+  *    for sessions built elsewhere);
   *  - [[GraftFunctions]] column API + runtime registration for an
   *    already-built session.
   */

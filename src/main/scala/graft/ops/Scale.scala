@@ -153,11 +153,6 @@ object Scale {
       .format("parquet").saveAsTable(table)
   }
 
-  /** Pre-shuffle both sides to the same partitioning once, reuse across
-    * several joins/aggs on that key in one job (exchange reuse). */
-  def coPartition(dfs: Seq[DataFrame], key: String, n: Int): Seq[DataFrame] =
-    dfs.map(_.repartition(n, col(key)))
-
   /** Range-partitioned, sorted-within-file layout: global range split
     * across files + in-file ordering ⇒ every file (and every parquet row
     * group inside it) covers a DISJOINT key range, so a read with a key

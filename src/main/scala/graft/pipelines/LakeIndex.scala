@@ -2,7 +2,6 @@ package graft.pipelines
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.ops.Aggs
 import graft.sources.XmlDictSource
 
 /** LakeFS XML-index lifecycle (SURVEY.md §3.3) — the reference's only
@@ -32,8 +31,4 @@ object LakeIndex {
       repoNames.tail.map(r =>
         sum(when(col("repository") === r, col("n_variables")).otherwise(0L)).as(r)): _*)
   }
-
-  /** A7 as a rollup with subtotals (expressible via Aggs.rollupCounts). */
-  def rollupWithSubtotals(vars: DataFrame): DataFrame =
-    Aggs.rollupCounts(vars, "study_id", "repository")
 }

@@ -149,32 +149,6 @@ object EventStreams {
       }
   }
 
-  /** flatMapGroupsWithState variant: emits ONLY closed sessions (append
-    * semantics — nothing reaches the sink until the session times out),
-    * the shape to use when downstream must never see partial sessions. */
-  def sessionizeClosedOnly(events: Dataset[(Long, Double)],
-                           timeoutMs: Long = 30 * 60 * 1000): Dataset[SessionUpdate] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    events.groupByKey(_._1)
-      .flatMapGroupsWithState[SessionState, SessionUpdate](
-        OutputMode.Append(), GroupStateTimeout.ProcessingTimeTimeout()) {
-        (userId: Long, rows: Iterator[(Long, Double)], state: GroupState[SessionState]) =>
-          if (state.hasTimedOut) {
-            val s = state.get
-            state.remove()
-            Iterator.single(SessionUpdate(userId, s.nEvents, s.totalValue, closed = true))
-          } else {
-            val prev = state.getOption.getOrElse(SessionState(0L, 0.0))
-            val batch = rows.toSeq
-            state.update(SessionState(prev.nEvents + batch.size,
-              prev.totalValue + batch.map(_._2).sum))
-            state.setTimeoutDuration(timeoutMs)
-            Iterator.empty
-          }
-      }
-  }
-
   /** Per-user running totals via Spark 4's transformWithState (see
     * [[RunningTotalProcessor]]); state accumulates across micro-batches
     * and survives restarts through the checkpointed state store. */

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `.explain("formatted")` for catalog queries to files — the
   * plan-evidence artifact of optimization rounds (plans/rNN/<q>_before.txt
   * / _after.txt). Not part of the engine surface.
@@ -9,8 +7,9 @@ import org.apache.spark.sql.SparkSession
   * Usage: runMain graft.tools.PlanDump <outDir> <suffix> <query>[,<query>…]
   *   e.g. runMain graft.tools.PlanDump plans/r17 before x37_pretrain_build,x68_char_bpe
   *
-  * Environment: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS —
-  * same session shape as Bench so the dumped plans are the benched plans.
+  * Environment: SPARK_GRAFT_SF_DIR (default sf0.1). The session is
+  * [[graft.GraftSession]]'s, as in Bench, so the dumped plans are the
+  * benched plans.
   * Queries whose construction stages side tables (graph EdgeStage, IVF
   * layouts) run those stages as part of building the frame; the dumped
   * plan is the FINAL returned frame's, which is what the query times. */
@@ -20,14 +19,8 @@ object PlanDump {
     val suffix = args(1)
     val names = args(2).split(",").map(_.trim).filter(_.nonEmpty)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession()
     spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.GraftFunctions.register(spark)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { name =>
       val df = graft.SparkEntry.queries(name)(spark, sfDir)

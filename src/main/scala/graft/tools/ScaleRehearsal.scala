@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-rehearsal main (diagnostic, not part of the engine surface):
@@ -57,13 +57,8 @@ object ScaleRehearsal {
     val factor = if (args.length > 3) args(3).toInt else 10
     require(factor >= 2 && factor <= 312,
       s"factor must be in [2, 312] (affine cipher count): $factor")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.cleaner.periodicGC.interval", "15s")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession()
     spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.GraftFunctions.register(spark)
     val off = 15000000L // multiple of 15: preserves % 3 and % 5 splits
 
     val lower = "abcdefghijklmnopqrstuvwxyz"

@@ -1456,4 +1456,15 @@ class PlanSpec extends SparkSpec {
       }
     }
   }
+
+  test("ranker skeleton builds in ONE exchange (one aggregation instead of three)") {
+    // the (node, out-degree) skeleton every ranker round and EdgeStage
+    // merge builds: a single map-side-combining sum over the 2|E|
+    // endpoint rows, not a nodes distinct + degree agg + join
+    import spark.implicits._
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (4L, 1L), (4L, 2L))
+      .toDF("src", "dst")
+    val p = tree(graft.ext.Graphs.skeletonDiag(edges, "src", "dst"))
+    assert(p.linesIterator.count(_.contains("Exchange")) == 1, p)
+  }
 }

@@ -1562,11 +1562,12 @@ class ExtSpec extends SparkSpec {
     // a C4-style dedup targets. (Word-token Jaccard is NOT that measure:
     // it saturates on same-domain template text — 73% of all fixture
     // pairs clear token-j 0.5 — so judging shingle-LSH by it is a
-    // category error; tools/LshRecall measures both.) At (k=4, r=2, b=2)
+    // category error.) At (k=4, r=2, b=2)
     // theory gives P(candidate) = 1-(1-j²)² ≥ 0.44 at shingle-j 0.5
     // rising to ~1 near j=1; the fixture's true pairs are all high-j and
     // measured recall is 1.0 (28/28) — pinned at ≥ 0.95 with the verify
-    // stage downstream to restore precision.
+    // stage downstream to restore precision. A failure message prints the
+    // measured recall and its hit/truth counts.
     val d = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val sets = d.select(col("doc_id"), expr(
       "array_distinct(transform(sequence(1, greatest(length(text)-4, 1)), i -> substring(text, i, 5)))").as("sh"))
@@ -1587,10 +1588,10 @@ class ExtSpec extends SparkSpec {
 
   test("ANN recall@5 vs brute force: IVF stays high, nProbe is monotone, training never hurts") {
     // QUALITY pin, not just determinism: the approximate paths must stay
-    // close to exact top-k on the fixture (bounds measured via
-    // tools/RecallProbe; the fixture's near-uniform synthetic vectors are
-    // PQ's worst case — 4×16-dim subspaces to 16 entries is very coarse
-    // there, so its honest bound is low while IVF's is high)
+    // close to exact top-k on the fixture (each failure message prints
+    // the measured recall; the fixture's near-uniform synthetic vectors
+    // are PQ's worst case — 4×16-dim subspaces to 16 entries is very
+    // coarse there, so its honest bound is low while IVF's is high)
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
       .select(col("vec_id"), col("embedding"))
     val q = emb.filter(col("vec_id") < 8)
