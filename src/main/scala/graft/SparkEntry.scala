@@ -2850,8 +2850,8 @@ object SparkEntry {
           (col("o_custkey") * 2).as("dst"))
       val weighted = fwd.union(rev)
         .groupBy(col("src"), col("dst")).agg(count(lit(1)).as("w"))
-      graft.ext.Graphs.pageRankWeighted(weighted, "src", "dst", "w", 3,
-        stagePerIteration = true)
+      graft.ext.Graphs.pageRank(weighted, "src", "dst", 3,
+        weightCol = Some("w"), stagePerIteration = true)
     }),
     "x59b_trustrank" -> ((s, dir) => {
       // TrustRank over the same host graph: teleport confined to the
@@ -2871,8 +2871,8 @@ object SparkEntry {
       val seeds = t(s, dir, "supplier")
         .filter(col("s_suppkey") % 4 === 0)
         .select((col("s_suppkey") * 2 + 1).as("seed"))
-      graft.ext.Graphs.trustRank(fwd.union(rev), "src", "dst",
-        seeds, "seed", 3, stagePerIteration = true)
+      graft.ext.Graphs.pageRank(fwd.union(rev), "src", "dst", 3,
+        seeds = Some(seeds), stagePerIteration = true)
     }),
     "x59d_pagerank_incremental" -> ((s, dir) => {
       // incremental re-rank on edge APPEND — the per-crawl cadence: the
@@ -2908,7 +2908,7 @@ object SparkEntry {
         val prior = graft.ext.Graphs.pageRankStaged(st, 3)
         st.append(graph(pairs.filter(col("o_orderkey") % 5 === 0)),
           "src", "dst")
-        graft.ext.Graphs.pageRankWarmStaged(st, 2, prior)
+        graft.ext.Graphs.pageRankStaged(st, 2, prior = Some(prior))
       } finally st.drop()
     }),
     "x59e_pagerank_multicrawl" -> ((s, dir) => {
@@ -2939,10 +2939,10 @@ object SparkEntry {
         val r0 = graft.ext.Graphs.pageRankStaged(st, 3)
         st.append(graph(pairs.filter(col("o_orderkey") % 5 === 0)),
           "src", "dst")
-        val r1 = graft.ext.Graphs.pageRankWarmStaged(st, 2, r0)
+        val r1 = graft.ext.Graphs.pageRankStaged(st, 2, prior = Some(r0))
         st.append(graph(pairs.filter(col("o_orderkey") % 5 === 1)),
           "src", "dst")
-        graft.ext.Graphs.pageRankWarmStaged(st, 2, r1)
+        graft.ext.Graphs.pageRankStaged(st, 2, prior = Some(r1))
       } finally st.drop()
     }),
     "x59g_trustrank_crawl" -> ((s, dir) => {
@@ -2972,10 +2972,12 @@ object SparkEntry {
       val st = graft.ext.Graphs.stageEdgeTable(
         graph(pairs.filter(col("o_orderkey") % 5 =!= 0)), "src", "dst")
       try {
-        val prior = graft.ext.Graphs.trustRankStaged(st, seeds, "seed", 3)
+        val prior = graft.ext.Graphs.pageRankStaged(st, 3,
+          seeds = Some(seeds))
         st.append(graph(pairs.filter(col("o_orderkey") % 5 === 0)),
           "src", "dst")
-        graft.ext.Graphs.trustRankWarmStaged(st, seeds, "seed", 2, prior)
+        graft.ext.Graphs.pageRankStaged(st, 2, prior = Some(prior),
+          seeds = Some(seeds))
       } finally st.drop()
     }),
     "x59f_weighted_crawl" -> ((s, dir) => {
@@ -3001,14 +3003,14 @@ object SparkEntry {
         .join(t(s, dir, "lineitem")
           .select(col("l_orderkey"), col("l_suppkey"), col("l_quantity")),
           col("o_orderkey") === col("l_orderkey"))
-      val st = graft.ext.Graphs.stageEdgeTableWeighted(
-        graph(pairs.filter(col("o_orderkey") % 5 =!= 0)), "src", "dst", "w")
+      val st = graft.ext.Graphs.stageEdgeTable(
+        graph(pairs.filter(col("o_orderkey") % 5 =!= 0)), "src", "dst",
+        weightCol = Some("w"))
       try {
-        val prior = graft.ext.Graphs.pageRankWeightedStaged(st, 3)
-        st.appendWeighted(
-          graph(pairs.filter(col("o_orderkey") % 5 === 0)),
-          "src", "dst", "w")
-        graft.ext.Graphs.pageRankWeightedWarmStaged(st, 2, prior)
+        val prior = graft.ext.Graphs.pageRankStaged(st, 3)
+        st.append(graph(pairs.filter(col("o_orderkey") % 5 === 0)),
+          "src", "dst", weightCol = Some("w"))
+        graft.ext.Graphs.pageRankStaged(st, 2, prior = Some(prior))
       } finally st.drop()
     }),
     "x60_margin_mine" -> ((s, dir) => {
@@ -8814,9 +8816,12 @@ object SparkEntry {
     // seeded from the cold release, 2 warm on the full set seeded from
     // crawl₁'s release
     "x59e_pagerank_multicrawl" -> {
+      // each round reads `prev` twice (contribution + dangling mass);
+      // inlined, 7 chained rounds expand DuckDB's plan ~2^7-fold and
+      // exhaust memory, so every round is a MATERIALIZED CTE
       def round(prev: String, cur: String, edges: String, base: String,
                 nn: String, bq: String) =
-        s"""$cur AS (SELECT b.node, b.od,
+        s"""$cur AS MATERIALIZED (SELECT b.node, b.od,
               CAST(((150::HUGEINT * bq.bq)
                     + 850::HUGEINT * (COALESCE(c.s, 0) + dg.dm // nn.n))
                    // 1000 AS BIGINT) AS rq

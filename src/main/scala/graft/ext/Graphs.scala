@@ -107,13 +107,28 @@ object Graphs {
     new EdgeStage(tbl, key, buckets, spark, weighted)
   }
 
+  /** The (_pr_src, _pr_dst[, _pr_w]) projection every ranker and every
+    * [[EdgeStage]] write reads: ids and weight cast to long. A NULL node
+    * id raises HERE, as an expression inside this select (coalesce
+    * evaluates raise_error only for a null row, and drops it entirely
+    * when the id column is non-nullable — no extra job either way): the
+    * skeleton's sum-with-null algebra groups null ids into one node and
+    * gives it an out-degree, so a null must never reach it. */
+  private def projectEdges(edges: DataFrame, srcCol: String, dstCol: String,
+                           weightCol: Option[String]): DataFrame = {
+    def nodeId(c: String, as: String) = coalesce(col(c).cast("long"),
+      raise_error(lit(s"graph edge column $c holds a null node id"))).as(as)
+    edges.select(Seq(nodeId(srcCol, "_pr_src"), nodeId(dstCol, "_pr_dst")) ++
+      weightCol.map(w => col(w).cast("long").as("_pr_w")): _*)
+  }
+
   /** Per-endpoint (node, _pr_od-contribution) rows of an edge frame —
     * the PRE-AGGREGATION form of [[skeletonOf]]: each src endpoint
     * contributes its edge's out-degree mass (1, or _pr_w when weighted),
     * each dst endpoint contributes null (present, no out-mass). One
     * `sum` groupBy over these rows IS the skeleton, because `sum`
     * ignores nulls and an all-null group (dst-only = dangling) sums to
-    * null. Exposed separately so [[EdgeStage.appendRows]] can merge a
+    * null. Exposed separately so [[EdgeStage.append]] can merge a
     * delta into an existing skeleton with the SAME single aggregation
     * (old skel rows are just pre-summed contributions — addition is
     * associative). */
@@ -149,20 +164,20 @@ object Graphs {
     * "ranker skeleton builds in ONE exchange" case pins it directly. */
   private[graft] def skeletonDiag(edges: DataFrame, srcCol: String,
                                   dstCol: String): DataFrame =
-    skeletonOf(edges.select(col(srcCol).cast("long").as("_pr_src"),
-      col(dstCol).cast("long").as("_pr_dst")), weighted = false)
+    skeletonOf(projectEdges(edges, srcCol, dstCol, None), weighted = false)
 
   /** A staged, bucketed, APPENDABLE edge table — the cross-call form of
     * [[stageEdgesBucketed]] for the per-crawl cadence: stage the
-    * resident graph ONCE, [[EdgeStage.append]] each crawl's delta (a
-    * delta-sized write — one new file per touched bucket, the
-    * allPairsIndexAppend discipline), and run [[pageRankStaged]] /
-    * [[pageRankWarmStaged]] against the combined table without ever
-    * re-bucketing resident edges. After an append a bucket holds more
-    * than one file, so the scan stops advertising its sortBy order;
-    * the staged rankers therefore hash the rank side instead of merge-
-    * joining (see [[prContrib]]) — the edge side still never exchanges
-    * or sorts. Lifecycle is CALLER-owned: `drop()` in a finally. */
+    * resident graph ONCE ([[stageEdgeTable]]), [[EdgeStage.append]] each
+    * crawl's delta (a delta-sized write — one new file per touched
+    * bucket, the allPairsIndexAppend discipline), and run
+    * [[pageRankStaged]] (cold, warm, or seeded) against the combined
+    * table without ever re-bucketing resident edges. After an append a
+    * bucket holds more than one file, so the scan stops advertising its
+    * sortBy order; the staged rankers therefore hash the rank side
+    * instead of merge-joining (see [[prContrib]]) — the edge side still
+    * never exchanges or sorts. Lifecycle is CALLER-owned: `drop()` in a
+    * finally. */
   final class EdgeStage private[ext] (
       private[ext] val table: String,
       private[ext] val key: String,
@@ -188,112 +203,64 @@ object Graphs {
       * fall back to deriving it from the edge table when absent. */
     private[ext] def skeletonOpt: Option[DataFrame] = skel
 
-    // data files currently under the managed table's directory (the
-    // single-writer contract every append-only stage here carries makes
-    // a before/after diff of this listing exactly the appended delta).
-    // RECURSIVE: a future partitioned/subdirectory layout must not make
-    // the diff silently miss delta files and corrupt the skeleton — the
-    // walk finds them wherever the writer puts them.
-    private def dataFiles(): Set[String] = {
-      val loc = new org.apache.hadoop.fs.Path(
-        org.apache.spark.sql.graftbridge.Bridge.tableLocation(spark, table))
-      val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val out = Set.newBuilder[String]
-      val it = fs.listFiles(loc, /* recursive = */ true)
-      while (it.hasNext) {
-        val st = it.next()
-        val name = st.getPath.getName
-        if (st.isFile && !name.startsWith("_") && !name.startsWith("."))
-          out += st.getPath.toString
-      }
-      out.result()
-    }
-
-    private def appendRows(d: DataFrame): Unit = {
-      require(key == "_pr_src", s"EdgeStage.append expects a _pr_src-keyed " +
-        s"stage (got $key)")
-      val before = if (skel.isDefined) dataFiles() else Set.empty[String]
+    /** APPEND a delta's edges under the same (srcCol, dstCol[,
+      * weightCol]) projection as [[pageRank]]; `weightCol` is required
+      * exactly when the stage is weighted. A (src, dst) pair present in
+      * both resident and delta simply holds two rows — the additive
+      * multiset algebra (see [[pageRank]]) makes that identical to one
+      * merged row, so appends never rewrite. Cost is delta-sized: one
+      * stage of the delta, one repartition of it by the bucket key, one
+      * sorted file per touched bucket; resident files are never
+      * rewritten. */
+    def append(delta: DataFrame, srcCol: String, dstCol: String,
+               weightCol: Option[String] = None): Unit = {
+      require(weightCol.isDefined == weighted,
+        if (weighted) "weighted EdgeStage: append needs weightCol"
+        else "unweighted EdgeStage: append takes no weightCol")
+      // stage the delta ONCE: the caller's delta lineage (typically a
+      // corpus-scale join) runs exactly once, and both the bucketed
+      // append and the skeleton merge read this delta-sized flat
+      // parquet. A throw here has written nothing — the table and the
+      // skeleton both still describe the resident edges.
+      val d = Dedup.stageAndRead(projectEdges(delta, srcCol, dstCol, weightCol))
+      // from the write on the table may hold rows the skeleton lacks: a
+      // throw before the merge lands leaves NO skeleton (rankers derive
+      // it from the edge table), never a stale one
+      val prev = skel
+      skel = None
       d.repartition(buckets, col(key)).write.mode("append")
         .bucketBy(buckets, key).sortBy(key)
         .format("parquet").saveAsTable(table)
       // merge the delta's skeleton: node sets union, out-degrees add
       // (sum ignores nulls, all-null stays null — dangling stays
       // dangling), so the merged table is bit-identical to a full
-      // rebuild over resident + delta (GraphsSpec pins it). The delta
-      // rows are read BACK from the files this append just wrote — a
-      // delta-sized flat scan — never by re-executing the caller's
-      // delta lineage (typically a corpus-scale join) a second time.
-      // ONE aggregation, not a skeleton-build feeding a second one: the
-      // old skeleton's rows are pre-summed [[skeletonRows]]
-      // contributions, so old rows ∪ delta endpoint rows → one `sum`
-      // groupBy IS the merged skeleton (addition is associative, sum
-      // still ignores nulls). A failed merge must not leave a STALE
-      // skeleton over the larger edge table — reset to None (rankers
-      // fall back to the full O(E) derivation) before rethrowing.
-      skel.foreach { s =>
-        val newFiles = (dataFiles() -- before).toSeq
-        // an empty delta wrote no files: the skeleton is already exact
-        if (newFiles.nonEmpty) {
-          skel = None
-          val delta = spark.read.schema(
-              org.apache.spark.sql.graftbridge.Bridge.asNullable(edges.schema))
-            .parquet(newFiles: _*)
-          skel = Some(Dedup.stageAndRead(
-            s.unionByName(skeletonRows(delta, weighted))
-              .groupBy(col("node")).agg(sum(col("_pr_od")).as("_pr_od"))))
-        }
-      }
-    }
-
-    /** APPEND a delta's edges under the same (srcCol, dstCol) projection
-      * contract as [[pageRank]]. Cost is delta-sized: one repartition of
-      * the delta by the bucket key, one sorted file per touched bucket;
-      * the resident files are never rewritten. */
-    def append(delta: DataFrame, srcCol: String, dstCol: String): Unit = {
-      require(!weighted, "weighted EdgeStage: use appendWeighted")
-      appendRows(delta.select(col(srcCol).cast("long").as("_pr_src"),
-        col(dstCol).cast("long").as("_pr_dst")))
-    }
-
-    /** [[append]] for a weighted stage. A (src, dst) pair present in
-      * both resident and delta simply holds two weighted rows — the
-      * additive multiset algebra ([[pageRankWeightedWarm]]) makes that
-      * identical to one merged row, so appends never need a rewrite. */
-    def appendWeighted(delta: DataFrame, srcCol: String, dstCol: String,
-                       weightCol: String): Unit = {
-      require(weighted, "unweighted EdgeStage: use append")
-      appendRows(delta.select(col(srcCol).cast("long").as("_pr_src"),
-        col(dstCol).cast("long").as("_pr_dst"),
-        col(weightCol).cast("long").as("_pr_w")))
+      // rebuild over resident + delta (GraphsSpec pins it). ONE
+      // aggregation: the old skeleton's rows are pre-summed
+      // [[skeletonRows]] contributions, so old rows ∪ delta endpoint
+      // rows → one `sum` groupBy IS the merged skeleton.
+      skel = prev.map(s => Dedup.stageAndRead(
+        s.unionByName(skeletonRows(d, weighted))
+          .groupBy(col("node")).agg(sum(col("_pr_od")).as("_pr_od"))))
     }
 
     def drop(): Unit = { spark.sql(s"DROP TABLE IF EXISTS `$table`"); () }
   }
 
-  /** Stage a graph's edges as an appendable bucketed table (see
-    * [[EdgeStage]]); the caller owns the handle and must `drop()` it. */
-  def stageEdgeTable(edges: DataFrame, srcCol: String,
-                     dstCol: String): EdgeStage = {
-    val st = stageProjectedEdges(
-      edges.select(col(srcCol).cast("long").as("_pr_src"),
-        col(dstCol).cast("long").as("_pr_dst")), "_pr_src")
+  /** Stage a graph's (src, dst[, weight]) edges as an appendable
+    * bucketed table (see [[EdgeStage]]); the stage is weighted exactly
+    * when `weightCol` is given. The caller owns the handle and must
+    * `drop()` it. */
+  def stageEdgeTable(edges: DataFrame, srcCol: String, dstCol: String,
+                     weightCol: Option[String] = None): EdgeStage = {
+    val st = stageProjectedEdges(projectEdges(edges, srcCol, dstCol, weightCol),
+      "_pr_src", weighted = weightCol.isDefined)
     st.initSkeleton()
     st
   }
 
-  /** [[stageEdgeTable]] for a weighted (src, dst, w) edge list. */
-  def stageEdgeTableWeighted(edges: DataFrame, srcCol: String,
-                             dstCol: String, weightCol: String): EdgeStage = {
-    val st = stageProjectedEdges(
-      edges.select(col(srcCol).cast("long").as("_pr_src"),
-        col(dstCol).cast("long").as("_pr_dst"),
-        col(weightCol).cast("long").as("_pr_w")), "_pr_src",
-      weighted = true)
-    st.initSkeleton()
-    st
-  }
-
-  /** PageRank power iteration in EXACT Q18 integer fixed point.
+  /** PageRank power iteration in EXACT Q18 integer fixed point — with
+    * its weighted, warm-started and seeded (TrustRank) forms selected by
+    * `weightCol`, `prior` and `seeds`.
     *
     * Rank mass lives in units of 10⁻¹⁸ (longs): r₀(v) = S div N with
     * S = 10¹⁸, and each round applies
@@ -309,109 +276,150 @@ object Graphs {
     * N rounds replay bit-for-bit as N unrolled CTEs in any ANSI engine —
     * an ORACLE-CHECKABLE PageRank (x59). Parallel edges are intentional
     * multiplicity: a host linking twice contributes twice, which is how a
-    * link-count-weighted host graph is usually fed.
+    * link-count-weighted host graph is usually fed. Node ids must be
+    * non-null: a null id raises (see [[projectEdges]]).
+    *
+    * WEIGHTED (`weightCol`, x59c): the compact form of parallel edges —
+    * a real host graph ships as (src, dst, link_count) after
+    * aggregation, not as billions of duplicate rows. out(u) becomes Σw
+    * per src and each edge contributes w·(r(u) div Σw) — exactly the sum
+    * of w parallel edges' floor-divided contributions, so the weighted
+    * rounds are BIT-IDENTICAL to the expanded multiset and the x59
+    * oracle verifies them verbatim. Duplicate (src, dst) rows (e.g. the
+    * same pair in two crawls) are additive in both Σw and the
+    * contribution sum, so they equal one merged row. The product stays
+    * within longs while w·rank < 2⁶³ — total weighted degree per node
+    * to ~9·10¹⁸ rank-units, far past any real host graph. Weights must
+    * be positive (a src whose weights sum to 0 hits the ANSI divide
+    * guard loudly; dangling means ABSENT from the edge list).
+    *
+    * WARM START (`prior`, x59d): the production crawl cadence — Common
+    * Crawl re-ranks hosts per crawl; the graph changes a few percent,
+    * the ranking barely moves, and a cold restart wastes almost every
+    * round re-deriving what the last release already knew. The
+    * skeleton, out-degrees, |V| and the Q18 base are built from the
+    * CURRENT edges; a node present in `prior` (exactly (node, rank_q18),
+    * this function's output shape, typically the previous release's
+    * staged table) starts at its prior rank, a NEW node at its cold init,
+    * and a node that left the graph drops; then the unchanged rounds
+    * run. Damping < 1 contracts toward a unique fixed point regardless
+    * of the start vector, so warm converges to the SAME ranking from
+    * much closer (GraphsSpec measures the L1 advantage on an edge
+    * append), and an all-cold-init prior is bit-identical to the cold
+    * run (spec-pinned). Cost: one extra node-keyed left join for r₀.
+    *
+    * TRUSTRANK (`seeds`, x59b; Gyöngyi, Garcia-Molina & Pedersen 2004):
+    * the teleport confined to a TRUSTED seed set — trust mass
+    * originates only at vetted hosts and flows along links, so link-farm
+    * spam that PageRank rewards (it teleports everywhere) scores zero
+    * unless the trusted region links into it. `seeds` is a one-column
+    * frame of node ids; the init and the teleport/dangling targets
+    * become
+    *
+    *   r₀(v)  = (S div |seeds|)·[v ∈ seeds]
+    *   r'(v)  = ( (1000−d)·(S div |seeds|)·[v ∈ seeds]
+    *              + d·( Σ_{u→v} r(u) div out(u)
+    *                    + (D div |seeds|)·[v ∈ seeds] ) ) div 1000
+    *
+    * (dangling mass D returns to the seed distribution, per the paper's
+    * static teleport vector). Ids absent from the graph still absorb
+    * teleport mass (trusted hosts that have no observed links). Seeds
+    * ride the plan as a broadcast. A warm seeded run starts a new node
+    * at its cold init (seed base or zero). Seeds need an unweighted
+    * graph (no caller ranks a weighted graph by trust).
     *
     * Scale shape per iteration: one (src=node)-keyed join moves (node,
     * rank, outdeg) longs onto the edge list — never payloads — one
     * dst-keyed sum with map-side partials, one node-keyed left join back
     * onto the |V|-row node table, and a one-row dangling-mass broadcast.
     * The edge list is the big side and is never re-keyed twice in a
-    * round; pre-partitioning edges by src lets every iteration reuse the
-    * same exchange. The returned plan is lazy and the ranks frame fans
-    * out twice per round (dangling branch + contribution branch), so for
-    * deep runs pass `stagePerIteration = true` to stage each round to a
+    * round. The returned plan is lazy and the ranks frame fans out twice
+    * per round (dangling branch + contribution branch), so for deep runs
+    * pass `stagePerIteration = true`: each round's rank table stages to a
     * unique temp parquet (JVM-exit cleanup, same contract as
     * [[graft.ext.Dedup.stageSignatures]]) — constant plan size, each
-    * round's rank table materialized exactly once. |V| is obtained with
-    * one count() action up front (a single scalar, not a collect).
+    * round materialized exactly once — and the EDGE table stages too,
+    * bucketed ([[stageEdgesBucketed]]), because every round re-reads it
+    * (contribution join, skeleton rejoin) and a lazy edge lineage would
+    * re-execute its whole upstream several times per round — measured 3×
+    * (43 s → 14 s cold) on x59c's join-built graph at sf0.1. The edge
+    * table drops in a finally, on success and failure paths alike. |V|
+    * is one count() action up front (a single scalar, not a collect).
     *
     * Returns (node: long, rank_q18: long) — rank scaled by 10¹⁸; total
     * mass ≈ 10¹⁸ (floor-division leaks at most N+1 units per round). */
-  def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
-               iters: Int, dampingPerMille: Int = 850,
+  def pageRank(edges: DataFrame, srcCol: String, dstCol: String, iters: Int,
+               weightCol: Option[String] = None,
+               prior: Option[DataFrame] = None,
+               seeds: Option[DataFrame] = None,
+               dampingPerMille: Int = 850,
                stagePerIteration: Boolean = false): DataFrame = {
-    require(iters >= 1, "iters must be >= 1")
-    require(dampingPerMille >= 0 && dampingPerMille <= 1000,
-      "damping is per-mille: 0..1000")
+    requireRankArgs(iters, dampingPerMille, weightCol.isDefined, prior, seeds)
     val internal = Set("node", "rank_q", "rank_q18", "_pr_src", "_pr_dst",
-      "_pr_od", "_pr_c", "_pr_s", "_pr_dm")
-    val clashes = edges.columns.filter(c => internal(c) && c != srcCol && c != dstCol)
+        "_pr_od", "_pr_c", "_pr_s", "_pr_dm") ++
+      weightCol.map(_ => "_pr_w") ++ prior.map(_ => "_pr_warm") ++
+      seeds.map(_ => "_pr_seed")
+    val clashes = edges.columns.filter(c =>
+      internal(c) && c != srcCol && c != dstCol && !weightCol.contains(c))
     require(clashes.isEmpty,
       s"pageRank reserves column names ${clashes.mkString(", ")}")
-
-    // stagePerIteration opts into materialized rounds — then the EDGE
-    // table must materialize too: e/base feed every round (contrib join,
-    // skeleton rejoin), so a lazy `edges` lineage would re-execute its
-    // whole upstream (joins, aggregations) several times per round.
-    // Staging once makes each round O(edge-scan) of a flat parquet —
-    // measured 3× (43 s → 14 s cold) on x59c's join-built graph at sf0.1.
-    val e0 = edges.select(col(srcCol).cast("long").as("_pr_src"),
-      col(dstCol).cast("long").as("_pr_dst"))
+    val e0 = projectEdges(edges, srcCol, dstCol, weightCol)
     val (e, dropEdges) =
       if (stagePerIteration) stageEdgesBucketed(e0)
       else (e0, () => ())
-    // staged rounds: every action below (skeleton stage, |V| count, the
-    // rounds themselves) runs while the round-lifetime edge table lives;
-    // the final rank table is materialized before the loop returns, so
-    // the table drops in finally — success AND failure paths (a leaked
-    // managed table has no JVM-exit cleanup contract, unlike stage dirs)
-    try prRun(e, iters, dampingPerMille, stagePerIteration, prior = None)
+    // staged rounds: every action in the runner (skeleton stage, |V|
+    // count, the rounds themselves) runs while the round-lifetime edge
+    // table lives; the final rank table is materialized before it
+    // returns, so the table drops in finally — success AND failure
+    // paths (a leaked managed table has no JVM-exit cleanup contract,
+    // unlike stage dirs)
+    try rankRounds(e, weightCol.isDefined, seeds, prior, dampingPerMille,
+      iters, stagePerIteration, shjRanks = false, baseSkeleton = None)
     finally dropEdges()
   }
 
-  /** Shared head of the unweighted rankers: skeleton (node, outdeg) build
-    * + |V| count + r₀ seed (uniform, or prior-warmed), then [[prRounds]].
-    * ONE implementation — cold, warm, and staged-table entry points all
-    * run the same algebra (the specs pin their pairwise bit-parity). */
-  private def prRun(e: DataFrame, iters: Int, d: Int, staged: Boolean,
-                    prior: Option[DataFrame],
-                    shjRanks: Boolean = false,
-                    baseSkeleton: Option[DataFrame] = None): DataFrame = {
-    // staged rounds re-join the skeleton every iteration: materialize it
-    // ONCE (|V|-row narrow) or each round re-pays the nodes union-distinct
-    // and the out-degree aggregation over the FULL edge list — at 100×
-    // that recomputation, not the rank algebra, dominated the round cost.
-    // An EdgeStage caller passes its INCREMENTALLY-maintained skeleton
-    // (already staged) instead — no O(E) pass at all on warm re-ranks.
-    val base = baseSkeleton.getOrElse {
-      // (node, outdeg-or-null): the per-round skeleton every rank table
-      // rides on; null outdeg marks a dangling node
-      val base0 = skeletonOf(e, weighted = false)
-      if (staged) Dedup.stageAndRead(base0) else base0
-    }
-    val n = base.count()
-    require(n > 0, "pageRank needs a non-empty graph")
-    val baseQ = (BigInt(10).pow(18) / n).toString
-    // r0 = prior rank where the node carried one, uniform S div N where
-    // it is new; departed prior nodes fall out via the skeleton join
-    var ranks0 = prior match {
-      case None => base.select(col("node"), col("_pr_od"),
-        expr(s"cast($baseQ as bigint)").as("rank_q"))
-      case Some(p) => base
-        .join(p.select(col("node"), col("rank_q18").as("_pr_warm")),
-          Seq("node"), "left")
-        .select(col("node"), col("_pr_od"),
-          coalesce(col("_pr_warm"), expr(s"cast($baseQ as bigint)"))
-            .as("rank_q"))
-    }
-    if (staged && prior.isDefined)
-      ranks0 = Dedup.stageAndRead(ranks0)
-    prRounds(e, base, n, baseQ, d, iters, staged, ranks0, shjRanks)
+  /** [[pageRank]] over a caller-owned [[EdgeStage]] — the crawl loop
+    * stages the resident graph once ([[stageEdgeTable]]), ranks, appends
+    * each delta, re-ranks warm from the last release — never
+    * re-bucketing resident edges (r16 verdict #2: a frame-based warm
+    * re-rank re-bucketed the ENTIRE resident+append graph every crawl,
+    * making the per-crawl cost corpus-sized instead of delta-sized).
+    * Rounds are always staged; the stage's incrementally maintained
+    * skeleton replaces the O(E) derivation, and the rank×edge join
+    * hashes the |V|-row rank side (see [[prContrib]]) so appended
+    * multi-file buckets stay free of edge-side Exchange AND Sort. The
+    * stage knows whether it is weighted. Bit-identical to [[pageRank]]
+    * with the same options on the same edges (spec-pinned). */
+  def pageRankStaged(stage: EdgeStage, iters: Int,
+                     prior: Option[DataFrame] = None,
+                     seeds: Option[DataFrame] = None,
+                     dampingPerMille: Int = 850): DataFrame = {
+    requireRankArgs(iters, dampingPerMille, stage.weighted, prior, seeds)
+    rankRounds(stage.edges, stage.weighted, seeds, prior, dampingPerMille,
+      iters, staged = true, shjRanks = true, baseSkeleton = stage.skeletonOpt)
   }
 
-  /** Shared power-iteration tail of [[pageRank]] and [[pageRankWarm]]:
-    * `iters` exact Q18 rounds of the update rule over edge table `e`
-    * (_pr_src, _pr_dst) and skeleton `base` (node, _pr_od), starting
-    * from `ranks0` (node, _pr_od, rank_q). ONE implementation — the
-    * round algebra cannot drift between the cold and warm paths (the
-    * spec pins warm-with-uniform-prior ≡ cold bit-for-bit). */
+  private def requireRankArgs(iters: Int, d: Int, weighted: Boolean,
+                              prior: Option[DataFrame],
+                              seeds: Option[DataFrame]): Unit = {
+    require(iters >= 1, "iters must be >= 1")
+    require(d >= 0 && d <= 1000, "damping is per-mille: 0..1000")
+    prior.foreach(p => require(p.columns.toSet == Set("node", "rank_q18"),
+      "prior must be exactly (node, rank_q18) — pageRank's output shape"))
+    seeds.foreach(s => require(s.columns.length == 1,
+      "seeds must be a one-column frame of node ids"))
+    require(!(weighted && seeds.isDefined),
+      "TrustRank seeds need an unweighted graph")
+  }
+
   /** One round's contribution aggregation — the rank×edge join the
     * bucketed edge stage keeps exchange-free on the edge side
     * (GraphsSpec pins the no-edge-Exchange shape on a staged bucketed
-    * table). Shared by [[pageRank]]/[[pageRankWarm]] (via prRounds) and
-    * [[trustRank]] — identical unweighted round algebra. */
+    * table). Each edge carries rank div out(src), or w·(rank div Σw)
+    * when weighted. */
   private[ext] def prContrib(e: DataFrame, ranks: DataFrame,
-                             shjRanks: Boolean = false): DataFrame = {
+                             shjRanks: Boolean = false,
+                             weighted: Boolean = false): DataFrame = {
     val r0 = ranks.select(col("node"), col("_pr_od"), col("rank_q"))
     // shjRanks: plan the rank×edge join as a SHUFFLED-HASH join with the
     // |V|-row rank table as build side — the APPENDED-edge-stage form: a
@@ -421,474 +429,104 @@ object Graphs {
     // BOTH Exchange and Sort (GraphsSpec pins the shape).
     val r = if (shjRanks) r0.hint("shuffle_hash") else r0
     e.join(r, col("_pr_src") === col("node"))
-      .select(col("_pr_dst"), expr("rank_q div _pr_od").as("_pr_c"))
+      .select(col("_pr_dst"), expr(
+        if (weighted) "_pr_w * (rank_q div _pr_od)"
+        else "rank_q div _pr_od").as("_pr_c"))
       .groupBy(col("_pr_dst"))
       .agg(sum(col("_pr_c")).as("_pr_s"))
   }
 
-  private def prRounds(e: DataFrame, base: DataFrame, n: Long,
-                       baseQ: String, d: Int, iters: Int,
-                       stagePerIteration: Boolean,
-                       ranks0: DataFrame,
-                       shjRanks: Boolean = false): DataFrame = {
-    var ranks = ranks0
-    for (_ <- 1 to iters) {
-      val dang = ranks.filter(col("_pr_od").isNull)
-        .agg(coalesce(sum(col("rank_q")), lit(0L)).as("_pr_dm"))
-      val contrib = prContrib(e, ranks, shjRanks)
-      ranks = base
-        .join(contrib, col("node") === col("_pr_dst"), "left")
-        .crossJoin(broadcast(dang))
-        .select(col("node"), col("_pr_od"), expr(
-          s"""cast((cast(${1000 - d} as decimal(38,0)) * $baseQ
-              + cast($d as decimal(38,0))
-                * (coalesce(_pr_s, 0L) + _pr_dm div $n)) div 1000
-              as bigint)""").as("rank_q"))
-      if (stagePerIteration)
-        ranks = Dedup.stageAndRead(ranks)
-    }
-    ranks.select(col("node"), col("rank_q").as("rank_q18"))
-  }
-
-  /** INCREMENTAL [[pageRank]]: warm-start the power iteration from a
-    * STAGED rank table when the edge list grows — the production crawl
-    * cadence (Common Crawl re-ranks hosts per crawl; the graph changes a
-    * few percent, the ranking barely moves, and a cold restart wastes
-    * almost every round re-deriving what the last release already knew).
-    *
-    * Semantics (exact, oracle-replayable): the skeleton, out-degrees,
-    * |V|, and the Q18 base are rebuilt from the CURRENT edge list; the
-    * initial rank of a node present in `priorRanks` is its prior
-    * `rank_q18`, a NEW node starts at the uniform `S div N`, and a node
-    * that left the graph is dropped — then `iters` rounds of the exact
-    * [[pageRank]] update run unchanged. Because damping < 1 contracts
-    * toward a unique fixed point regardless of the start vector, the
-    * warm start converges to the SAME ranking the cold run does — just
-    * from much closer (GraphsSpec measures the L1 advantage on an edge
-    * append) — and with an all-uniform prior the rounds are bit-identical
-    * to cold [[pageRank]] (spec-pinned).
-    *
-    * Scale shape: identical per-round plans to [[pageRank]] plus ONE
-    * extra node-keyed left join to seed r₀ from the prior table — the
-    * prior is |V|-row narrow (node, rank_q18), typically read from the
-    * previous release's staged parquet. */
-  def pageRankWarm(edges: DataFrame, srcCol: String, dstCol: String,
-                   iters: Int, priorRanks: DataFrame,
-                   dampingPerMille: Int = 850,
-                   stagePerIteration: Boolean = false): DataFrame = {
-    require(iters >= 1, "iters must be >= 1")
-    require(dampingPerMille >= 0 && dampingPerMille <= 1000,
-      "damping is per-mille: 0..1000")
-    require(priorRanks.columns.toSet == Set("node", "rank_q18"),
-      "priorRanks must be exactly (node, rank_q18) — pageRank's output shape")
-    val internal = Set("node", "rank_q", "rank_q18", "_pr_src", "_pr_dst",
-      "_pr_od", "_pr_c", "_pr_s", "_pr_dm", "_pr_warm")
-    val clashes = edges.columns.filter(c => internal(c) && c != srcCol && c != dstCol)
-    require(clashes.isEmpty,
-      s"pageRankWarm reserves column names ${clashes.mkString(", ")}")
-
-    // see pageRank: staged rounds stage the edge table too, or every
-    // round re-executes the caller's edge-build lineage several times
-    val e0 = edges.select(col(srcCol).cast("long").as("_pr_src"),
-      col(dstCol).cast("long").as("_pr_dst"))
-    val (e, dropEdges) =
-      if (stagePerIteration) stageEdgesBucketed(e0)
-      else (e0, () => ())
-    try prRun(e, iters, dampingPerMille, stagePerIteration,
-      prior = Some(priorRanks))
-    finally dropEdges()
-  }
-
-  /** Cold rank rounds over a caller-owned [[EdgeStage]] — the staged
-    * form of [[pageRank]](stagePerIteration = true) minus the internal
-    * edge-table build/drop: the crawl loop stages the resident graph
-    * once ([[stageEdgeTable]]), ranks, appends each delta, re-ranks —
-    * never re-bucketing resident edges (r16 verdict #2: pageRankWarm's
-    * internal stage re-bucketed the ENTIRE resident+append graph every
-    * crawl, making the per-crawl cost corpus-sized instead of
-    * delta-sized). Bit-identical to [[pageRank]] on the same edges
-    * (spec-pinned); the rank×edge join hashes the |V|-row rank side
-    * (see [[prContrib]]) so appended multi-file buckets stay free of
-    * edge-side Exchange AND Sort. */
-  def pageRankStaged(stage: EdgeStage, iters: Int,
-                     dampingPerMille: Int = 850): DataFrame = {
-    require(iters >= 1, "iters must be >= 1")
-    require(dampingPerMille >= 0 && dampingPerMille <= 1000,
-      "damping is per-mille: 0..1000")
-    // a weighted stage's skeleton carries Σw out-degrees; the unweighted
-    // round algebra would divide rank by them as edge counts — mixed
-    // semantics that silently produce wrong ranks (trustRankStaged and
-    // pageRankWeightedStaged carry the mirror guard)
-    require(!stage.weighted,
-      "weighted EdgeStage: use pageRankWeightedStaged")
-    prRun(stage.edges, iters, dampingPerMille, staged = true,
-      prior = None, shjRanks = true, baseSkeleton = stage.skeletonOpt)
-  }
-
-  /** Warm rank rounds over a caller-owned [[EdgeStage]] — the staged
-    * form of [[pageRankWarm]]; see [[pageRankStaged]]. */
-  def pageRankWarmStaged(stage: EdgeStage, iters: Int,
-                         priorRanks: DataFrame,
-                         dampingPerMille: Int = 850): DataFrame = {
-    require(iters >= 1, "iters must be >= 1")
-    require(dampingPerMille >= 0 && dampingPerMille <= 1000,
-      "damping is per-mille: 0..1000")
-    require(priorRanks.columns.toSet == Set("node", "rank_q18"),
-      "priorRanks must be exactly (node, rank_q18) — pageRank's output shape")
-    require(!stage.weighted,
-      "weighted EdgeStage: use pageRankWeightedWarmStaged")
-    prRun(stage.edges, iters, dampingPerMille, staged = true,
-      prior = Some(priorRanks), shjRanks = true,
-      baseSkeleton = stage.skeletonOpt)
-  }
-
-  /** [[pageRank]] over a WEIGHTED edge list — the compact form of
-    * parallel edges: a real host graph ships as (src, dst, link_count)
-    * after aggregation, not as billions of duplicate rows. Bit-identical
-    * to [[pageRank]] on the expanded multiset: out-degree becomes Σw per
-    * src, and each edge contributes w·(rank div Σw) — exactly the sum of
-    * w parallel edges' floor-divided contributions, so the x59 oracle
-    * verifies this form verbatim (x59c aliases it). Same per-iteration
-    * shapes; the contribution product w·(rank div Σw) stays within longs
-    * while w·rank < 2⁶³ — i.e. total weighted degree per node to ~9·10¹⁸
-    * rank-units, far past any real host graph. Weights must be positive
-    * (a src whose weights sum to 0 hits the ANSI divide guard loudly;
-    * dangling means ABSENT from the edge list, same as [[pageRank]]). */
-  def pageRankWeighted(edges: DataFrame, srcCol: String, dstCol: String,
-                       weightCol: String, iters: Int,
-                       dampingPerMille: Int = 850,
-                       stagePerIteration: Boolean = false): DataFrame = {
-    require(iters >= 1, "iters must be >= 1")
-    require(dampingPerMille >= 0 && dampingPerMille <= 1000,
-      "damping is per-mille: 0..1000")
-    val internal = Set("node", "rank_q", "rank_q18", "_pr_src", "_pr_dst",
-      "_pr_w", "_pr_od", "_pr_c", "_pr_s", "_pr_dm")
-    val clashes = edges.columns.filter(c =>
-      internal(c) && c != srcCol && c != dstCol && c != weightCol)
-    require(clashes.isEmpty,
-      s"pageRankWeighted reserves column names ${clashes.mkString(", ")}")
-
-    // see pageRank: staged rounds stage the edge table too, or every
-    // round re-executes the caller's edge-build lineage several times
-    val e0 = edges.select(col(srcCol).cast("long").as("_pr_src"),
-      col(dstCol).cast("long").as("_pr_dst"),
-      col(weightCol).cast("long").as("_pr_w"))
-    val (e, dropEdges) =
-      if (stagePerIteration) stageEdgesBucketed(e0)
-      else (e0, () => ())
-    try prRunWeighted(e, iters, dampingPerMille, stagePerIteration,
-      prior = None)
-    finally dropEdges()
-  }
-
-  /** Weighted twin of [[prRun]]: Σw out-degrees, w-scaled contributions,
-    * same r₀ seeding and round algebra — cold, warm, and staged-table
-    * entry points share it (bit-parity with the expanded multiset is
-    * spec-pinned, so the x59 oracle family verifies every form). */
-  private def prRunWeighted(e: DataFrame, iters: Int, d: Int,
-                            staged: Boolean, prior: Option[DataFrame],
-                            shjRanks: Boolean = false,
-                            baseSkeleton: Option[DataFrame] = None): DataFrame = {
+  /** THE round runner behind [[pageRank]] and [[pageRankStaged]]:
+    * skeleton, |V| (or |seeds|) count, r₀ seeding, then `iters` exact
+    * Q18 rounds over edge frame `e` (_pr_src, _pr_dst[, _pr_w]) —
+    * written once, so no form's algebra can drift from another's (the
+    * specs pin their pairwise bit-parity). Three choices pick the form:
+    * `weighted` the contribution term (see [[prContrib]]), `seeds` the
+    * teleport and dangling terms (uniform `S div N` and `D div N`, or
+    * seed-gated with |seeds|), `prior` the r₀ seeding (cold init, or a
+    * node-keyed left join on the prior ranks). `staged` materializes the
+    * skeleton once and every round's rank table; `baseSkeleton` is an
+    * [[EdgeStage]]'s incrementally maintained (node, _pr_od) table. */
+  private def rankRounds(e: DataFrame, weighted: Boolean,
+                         seeds: Option[DataFrame], prior: Option[DataFrame],
+                         d: Int, iters: Int, staged: Boolean,
+                         shjRanks: Boolean,
+                         baseSkeleton: Option[DataFrame]): DataFrame = {
+    val seedNodes = seeds.map(s =>
+      s.select(col(s.columns.head).cast("long").as("node")).distinct())
     // staged rounds re-join the skeleton every iteration: materialize it
-    // ONCE (|V|-row narrow) or each round re-pays the nodes union-distinct
-    // and the Σw aggregation over the FULL edge list — at 100× that
+    // ONCE (|V|-row narrow) or each round re-pays the nodes union and the
+    // out-degree aggregation over the FULL edge list — at 100× that
     // recomputation, not the rank algebra, dominated the round cost. An
-    // EdgeStage caller passes its incrementally-maintained skeleton.
-    val base = baseSkeleton.getOrElse {
-      val base0 = skeletonOf(e, weighted = true)
-      if (staged) Dedup.stageAndRead(base0) else base0
-    }
-    val n = base.count()
-    require(n > 0, "pageRankWeighted needs a non-empty graph")
-    val baseQ = (BigInt(10).pow(18) / n).toString
-    var ranks = prior match {
-      case None => base.select(col("node"), col("_pr_od"),
-        expr(s"cast($baseQ as bigint)").as("rank_q"))
-      case Some(p) => base
-        .join(p.select(col("node"), col("rank_q18").as("_pr_warm")),
-          Seq("node"), "left")
-        .select(col("node"), col("_pr_od"),
-          coalesce(col("_pr_warm"), expr(s"cast($baseQ as bigint)"))
-            .as("rank_q"))
-    }
-    if (staged && prior.isDefined)
-      ranks = Dedup.stageAndRead(ranks)
-    for (_ <- 1 to iters) {
-      val dang = ranks.filter(col("_pr_od").isNull)
-        .agg(coalesce(sum(col("rank_q")), lit(0L)).as("_pr_dm"))
-      val r0 = ranks.select(col("node"), col("_pr_od"), col("rank_q"))
-      // see prContrib: appended stages hash the |V|-row rank side
-      val r = if (shjRanks) r0.hint("shuffle_hash") else r0
-      val contrib = e
-        .join(r, col("_pr_src") === col("node"))
-        .select(col("_pr_dst"),
-          expr("_pr_w * (rank_q div _pr_od)").as("_pr_c"))
-        .groupBy(col("_pr_dst"))
-        .agg(sum(col("_pr_c")).as("_pr_s"))
-      ranks = base
-        .join(contrib, col("node") === col("_pr_dst"), "left")
-        .crossJoin(broadcast(dang))
-        .select(col("node"), col("_pr_od"), expr(
-          s"""cast((cast(${1000 - d} as decimal(38,0)) * $baseQ
-              + cast($d as decimal(38,0))
-                * (coalesce(_pr_s, 0L) + _pr_dm div $n)) div 1000
-              as bigint)""").as("rank_q"))
-      if (staged)
-        ranks = Dedup.stageAndRead(ranks)
-    }
-    ranks.select(col("node"), col("rank_q").as("rank_q18"))
-  }
-
-  /** INCREMENTAL [[pageRankWeighted]] — warm-start from a prior rank
-    * table on a grown weighted edge list; semantics exactly
-    * [[pageRankWarm]]'s (prior where carried, uniform where new,
-    * departed nodes drop), algebra exactly [[pageRankWeighted]]'s.
-    * Duplicate (src, dst) rows across crawls are WELL-DEFINED: weights
-    * are additive in both the Σw out-degree and the contribution sum,
-    * so appended weighted rows equal one merged row — the multiset
-    * algebra the x59 oracle family replays. */
-  def pageRankWeightedWarm(edges: DataFrame, srcCol: String, dstCol: String,
-                           weightCol: String, iters: Int,
-                           priorRanks: DataFrame,
-                           dampingPerMille: Int = 850,
-                           stagePerIteration: Boolean = false): DataFrame = {
-    require(iters >= 1, "iters must be >= 1")
-    require(dampingPerMille >= 0 && dampingPerMille <= 1000,
-      "damping is per-mille: 0..1000")
-    require(priorRanks.columns.toSet == Set("node", "rank_q18"),
-      "priorRanks must be exactly (node, rank_q18) — pageRank's output shape")
-    val internal = Set("node", "rank_q", "rank_q18", "_pr_src", "_pr_dst",
-      "_pr_w", "_pr_od", "_pr_c", "_pr_s", "_pr_dm", "_pr_warm")
-    val clashes = edges.columns.filter(c =>
-      internal(c) && c != srcCol && c != dstCol && c != weightCol)
-    require(clashes.isEmpty,
-      s"pageRankWeightedWarm reserves column names ${clashes.mkString(", ")}")
-    val e0 = edges.select(col(srcCol).cast("long").as("_pr_src"),
-      col(dstCol).cast("long").as("_pr_dst"),
-      col(weightCol).cast("long").as("_pr_w"))
-    val (e, dropEdges) =
-      if (stagePerIteration) stageEdgesBucketed(e0)
-      else (e0, () => ())
-    try prRunWeighted(e, iters, dampingPerMille, stagePerIteration,
-      prior = Some(priorRanks))
-    finally dropEdges()
-  }
-
-  /** Cold weighted rank rounds over a caller-owned weighted
-    * [[EdgeStage]] (see [[pageRankStaged]] — same crawl-cadence
-    * contract, weighted algebra). */
-  def pageRankWeightedStaged(stage: EdgeStage, iters: Int,
-                             dampingPerMille: Int = 850): DataFrame = {
-    require(iters >= 1, "iters must be >= 1")
-    require(dampingPerMille >= 0 && dampingPerMille <= 1000,
-      "damping is per-mille: 0..1000")
-    require(stage.weighted, "pageRankWeightedStaged needs a weighted " +
-      "EdgeStage (stageEdgeTableWeighted)")
-    prRunWeighted(stage.edges, iters, dampingPerMille, staged = true,
-      prior = None, shjRanks = true, baseSkeleton = stage.skeletonOpt)
-  }
-
-  /** Warm weighted rank rounds over a caller-owned weighted
-    * [[EdgeStage]]; see [[pageRankWeightedStaged]]. */
-  def pageRankWeightedWarmStaged(stage: EdgeStage, iters: Int,
-                                 priorRanks: DataFrame,
-                                 dampingPerMille: Int = 850): DataFrame = {
-    require(iters >= 1, "iters must be >= 1")
-    require(dampingPerMille >= 0 && dampingPerMille <= 1000,
-      "damping is per-mille: 0..1000")
-    require(priorRanks.columns.toSet == Set("node", "rank_q18"),
-      "priorRanks must be exactly (node, rank_q18) — pageRank's output shape")
-    require(stage.weighted, "pageRankWeightedWarmStaged needs a weighted " +
-      "EdgeStage (stageEdgeTableWeighted)")
-    prRunWeighted(stage.edges, iters, dampingPerMille, staged = true,
-      prior = Some(priorRanks), shjRanks = true,
-      baseSkeleton = stage.skeletonOpt)
-  }
-
-  /** TrustRank (Gyöngyi, Garcia-Molina & Pedersen 2004) — PageRank with
-    * the teleport confined to a TRUSTED seed set: trust mass originates
-    * only at vetted hosts and flows along links, so link-farm spam that
-    * PageRank rewards (it teleports everywhere) scores near zero unless
-    * the trusted region links into it. This is the crawl-curation
-    * companion to [[pageRank]]: rank by importance, demote by distrust.
-    *
-    * Same exact Q18 integer arithmetic and shapes as [[pageRank]]; the
-    * differences are the init and the teleport/dangling targets:
-    *
-    *   r₀(v)  = (S div |seeds|)·[v ∈ seeds]
-    *   r'(v)  = ( (1000−d)·(S div |seeds|)·[v ∈ seeds]
-    *              + d·( Σ_{u→v} r(u) div out(u)
-    *                    + (D div |seeds|)·[v ∈ seeds] ) ) div 1000
-    *
-    * (dangling mass D returns to the seed distribution, per the paper's
-    * static teleport vector). `seeds` is a one-column frame of node ids;
-    * ids absent from the graph still absorb teleport mass (they are
-    * trusted hosts that happen to have no observed links — standard).
-    * Seeds ride the plan as a broadcast; everything else matches
-    * [[pageRank]]'s per-iteration shape. Oracle-checked (x59b). */
-  def trustRank(edges: DataFrame, srcCol: String, dstCol: String,
-                seeds: DataFrame, seedCol: String, iters: Int,
-                dampingPerMille: Int = 850,
-                stagePerIteration: Boolean = false): DataFrame = {
-    require(iters >= 1, "iters must be >= 1")
-    require(dampingPerMille >= 0 && dampingPerMille <= 1000,
-      "damping is per-mille: 0..1000")
-    val internal = Set("node", "rank_q", "rank_q18", "_pr_src", "_pr_dst",
-      "_pr_od", "_pr_c", "_pr_s", "_pr_dm", "_pr_seed")
-    val clashes = edges.columns.filter(c =>
-      internal(c) && c != srcCol && c != dstCol)
-    require(clashes.isEmpty,
-      s"trustRank reserves column names ${clashes.mkString(", ")}")
-    // see pageRank: staged rounds stage the edge table too, or every
-    // round re-executes the caller's edge-build lineage several times
-    val e0 = edges.select(col(srcCol).cast("long").as("_pr_src"),
-      col(dstCol).cast("long").as("_pr_dst"))
-    val (e, dropEdges) =
-      if (stagePerIteration) stageEdgesBucketed(e0)
-      else (e0, () => ())
-    try prRunTrust(e, seeds, seedCol, iters, dampingPerMille,
-      stagePerIteration, prior = None)
-    finally dropEdges()
-  }
-
-  /** Shared head + round loop of [[trustRank]] and its warm/staged
-    * forms: seed-flagged skeleton, |seeds| count, r₀ (cold seed init or
-    * prior-warmed), then the seeded rounds. A warm r₀ seeds a CARRIED
-    * node from the prior and a NEW node from its cold init (baseQ for
-    * seeds, 0 otherwise); damping < 1 contracts to the same fixed point
-    * either way, so warm converges to the cold ranking from closer. */
-  private def prRunTrust(e: DataFrame, seeds: DataFrame, seedCol: String,
-                         iters: Int, d: Int, staged: Boolean,
-                         prior: Option[DataFrame],
-                         shjRanks: Boolean = false,
-                         baseSkeleton: Option[DataFrame] = None): DataFrame = {
-    val seedNodes = seeds.select(col(seedCol).cast("long").as("node"))
-      .distinct()
-    // see pageRank: staged rounds materialize the skeleton once. An
-    // EdgeStage caller passes its incrementally-maintained (node, od)
-    // skeleton; seeds absent from the graph still enter the node set
-    // (they absorb teleport mass) via a |V|-scale merge — never an O(E)
-    // re-derivation.
-    val base = baseSkeleton match {
-      case Some(sk) => Dedup.stageAndRead(
-        sk.unionByName(seedNodes
-            .select(col("node"), lit(null).cast("long").as("_pr_od")))
+    // EdgeStage caller passes its INCREMENTALLY-maintained skeleton
+    // instead — no O(E) pass at all on warm re-ranks.
+    val base = (baseSkeleton, seedNodes) match {
+      case (Some(sk), None) => sk
+      case _ =>
+        // the single-aggregation skeleton algebra of [[skeletonOf]] (one
+        // exchange, not distinct+agg+join), over the edge endpoints or
+        // the stage's pre-summed skeleton rows. Seed nodes enter as
+        // null-od rows: a seed absent from the graph sums to null
+        // (dangling, absorbs teleport mass), a seed that is a source
+        // gets its out-degree from its src rows — a |V|-scale merge,
+        // never an O(E) re-derivation on a stage
+        val rows = baseSkeleton.getOrElse(skeletonRows(e, weighted))
+        val od = seedNodes.fold(rows)(sn => rows.unionByName(
+            sn.select(col("node"), lit(null).cast("long").as("_pr_od"))))
           .groupBy(col("node")).agg(sum(col("_pr_od")).as("_pr_od"))
-          .join(broadcast(seedNodes.withColumn("_pr_seed", lit(true))),
+        val b = seedNodes.fold(od)(sn => od
+          .join(broadcast(sn.withColumn("_pr_seed", lit(true))),
             Seq("node"), "left")
           .select(col("node"), col("_pr_od"),
             coalesce(col("_pr_seed"), lit(false)).as("_pr_seed")))
-      case None =>
-        // same single-aggregation skeleton algebra as [[skeletonOf]]
-        // (one exchange, not distinct+agg+join): seed nodes enter as
-        // null-od rows — a seed absent from the graph sums to null
-        // (dangling, absorbs teleport mass), a seed that is a source
-        // gets its out-degree from its src rows
-        val base0 = skeletonRows(e, weighted = false)
-          .unionByName(seedNodes
-            .select(col("node"), lit(null).cast("long").as("_pr_od")))
-          .groupBy(col("node")).agg(sum(col("_pr_od")).as("_pr_od"))
-          .join(broadcast(seedNodes.withColumn("_pr_seed", lit(true))),
-            Seq("node"), "left")
-          .select(col("node"), col("_pr_od"),
-            coalesce(col("_pr_seed"), lit(false)).as("_pr_seed"))
-        if (staged) Dedup.stageAndRead(base0) else base0
+        if (staged) Dedup.stageAndRead(b) else b
     }
-    val nSeeds = seedNodes.count()
-    require(nSeeds > 0, "trustRank needs a non-empty seed set")
-    val baseQ = (BigInt(10).pow(18) / nSeeds).toString
-
+    val n = seedNodes match {
+      case None =>
+        val nv = base.count()
+        require(nv > 0, "pageRank needs a non-empty graph")
+        nv
+      case Some(sn) =>
+        val ns = sn.count()
+        require(ns > 0, "TrustRank needs a non-empty seed set")
+        ns
+    }
+    val baseQ = (BigInt(10).pow(18) / n).toString
+    // the teleport target and the dangling share: every node, or seeds only
+    val seeded = seedNodes.isDefined
+    val tele = if (seeded) s"if(_pr_seed, $baseQ, 0)" else baseQ
+    val dangShare =
+      if (seeded) s"if(_pr_seed, _pr_dm div $n, 0L)" else s"_pr_dm div $n"
+    val carry = Seq(col("node"), col("_pr_od")) ++
+      (if (seeded) Seq(col("_pr_seed")) else Nil)
+    // r0 = prior rank where the node carried one, cold init where it is
+    // new; departed prior nodes fall out via the skeleton join
+    val cold = expr(s"cast($tele as bigint)")
     var ranks = prior match {
-      case None => base.select(col("node"), col("_pr_od"), col("_pr_seed"),
-        expr(s"cast(if(_pr_seed, $baseQ, 0) as bigint)").as("rank_q"))
+      case None => base.select(carry :+ cold.as("rank_q"): _*)
       case Some(p) => base
         .join(p.select(col("node"), col("rank_q18").as("_pr_warm")),
           Seq("node"), "left")
-        .select(col("node"), col("_pr_od"), col("_pr_seed"),
-          coalesce(col("_pr_warm"),
-            expr(s"cast(if(_pr_seed, $baseQ, 0) as bigint)")).as("rank_q"))
+        .select(carry :+ coalesce(col("_pr_warm"), cold).as("rank_q"): _*)
     }
     if (staged && prior.isDefined)
       ranks = Dedup.stageAndRead(ranks)
     for (_ <- 1 to iters) {
       val dang = ranks.filter(col("_pr_od").isNull)
         .agg(coalesce(sum(col("rank_q")), lit(0L)).as("_pr_dm"))
-      val contrib = prContrib(e, ranks, shjRanks)
       ranks = base
-        .join(contrib, col("node") === col("_pr_dst"), "left")
+        .join(prContrib(e, ranks, shjRanks, weighted),
+          col("node") === col("_pr_dst"), "left")
         .crossJoin(broadcast(dang))
-        .select(col("node"), col("_pr_od"), col("_pr_seed"), expr(
-          s"""cast((cast(${1000 - d} as decimal(38,0))
-                * if(_pr_seed, $baseQ, 0)
+        .select(carry :+ expr(
+          s"""cast((cast(${1000 - d} as decimal(38,0)) * $tele
               + cast($d as decimal(38,0))
-                * (coalesce(_pr_s, 0L)
-                   + if(_pr_seed, _pr_dm div $nSeeds, 0L))) div 1000
-              as bigint)""").as("rank_q"))
+                * (coalesce(_pr_s, 0L) + $dangShare)) div 1000
+              as bigint)""").as("rank_q"): _*)
       if (staged)
         ranks = Dedup.stageAndRead(ranks)
     }
     ranks.select(col("node"), col("rank_q").as("rank_q18"))
-  }
-
-  /** INCREMENTAL [[trustRank]] — warm-start the seeded rounds from a
-    * prior release when the edge list grows (the crawl cadence; seeds
-    * are the vetted host list and typically persist across crawls).
-    * Carried nodes seed from the prior, new nodes from their cold init
-    * (seed base or zero); departed nodes drop via the skeleton. */
-  def trustRankWarm(edges: DataFrame, srcCol: String, dstCol: String,
-                    seeds: DataFrame, seedCol: String, iters: Int,
-                    priorRanks: DataFrame,
-                    dampingPerMille: Int = 850,
-                    stagePerIteration: Boolean = false): DataFrame = {
-    require(iters >= 1, "iters must be >= 1")
-    require(dampingPerMille >= 0 && dampingPerMille <= 1000,
-      "damping is per-mille: 0..1000")
-    require(priorRanks.columns.toSet == Set("node", "rank_q18"),
-      "priorRanks must be exactly (node, rank_q18) — trustRank's output shape")
-    val internal = Set("node", "rank_q", "rank_q18", "_pr_src", "_pr_dst",
-      "_pr_od", "_pr_c", "_pr_s", "_pr_dm", "_pr_seed", "_pr_warm")
-    val clashes = edges.columns.filter(c =>
-      internal(c) && c != srcCol && c != dstCol)
-    require(clashes.isEmpty,
-      s"trustRankWarm reserves column names ${clashes.mkString(", ")}")
-    val e0 = edges.select(col(srcCol).cast("long").as("_pr_src"),
-      col(dstCol).cast("long").as("_pr_dst"))
-    val (e, dropEdges) =
-      if (stagePerIteration) stageEdgesBucketed(e0)
-      else (e0, () => ())
-    try prRunTrust(e, seeds, seedCol, iters, dampingPerMille,
-      stagePerIteration, prior = Some(priorRanks))
-    finally dropEdges()
-  }
-
-  /** Cold seeded rounds over a caller-owned [[EdgeStage]]; see
-    * [[pageRankStaged]] — same crawl-cadence contract. */
-  def trustRankStaged(stage: EdgeStage, seeds: DataFrame, seedCol: String,
-                      iters: Int, dampingPerMille: Int = 850): DataFrame = {
-    require(iters >= 1, "iters must be >= 1")
-    require(dampingPerMille >= 0 && dampingPerMille <= 1000,
-      "damping is per-mille: 0..1000")
-    require(!stage.weighted, "trustRankStaged needs an unweighted EdgeStage")
-    prRunTrust(stage.edges, seeds, seedCol, iters, dampingPerMille,
-      staged = true, prior = None, shjRanks = true,
-      baseSkeleton = stage.skeletonOpt)
-  }
-
-  /** Warm seeded rounds over a caller-owned [[EdgeStage]]; see
-    * [[trustRankWarm]]. */
-  def trustRankWarmStaged(stage: EdgeStage, seeds: DataFrame,
-                          seedCol: String, iters: Int,
-                          priorRanks: DataFrame,
-                          dampingPerMille: Int = 850): DataFrame = {
-    require(iters >= 1, "iters must be >= 1")
-    require(dampingPerMille >= 0 && dampingPerMille <= 1000,
-      "damping is per-mille: 0..1000")
-    require(priorRanks.columns.toSet == Set("node", "rank_q18"),
-      "priorRanks must be exactly (node, rank_q18) — trustRank's output shape")
-    require(!stage.weighted, "trustRankWarmStaged needs an unweighted EdgeStage")
-    prRunTrust(stage.edges, seeds, seedCol, iters, dampingPerMille,
-      staged = true, prior = Some(priorRanks), shjRanks = true,
-      baseSkeleton = stage.skeletonOpt)
   }
 
   /** HITS hubs & authorities (Kleinberg 1999, "Authoritative sources in

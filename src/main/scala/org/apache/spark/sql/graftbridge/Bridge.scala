@@ -19,15 +19,6 @@ object Bridge {
   def asNullable(s: org.apache.spark.sql.types.StructType)
       : org.apache.spark.sql.types.StructType = s.asNullable
 
-  /** Storage location of a catalog table (private[sql] sessionState):
-    * lets a single-writer staged-table owner diff the file listing
-    * around an append and read back exactly the rows it just wrote —
-    * delta-sized, without re-executing the caller's delta lineage. */
-  def tableLocation(spark: org.apache.spark.sql.SparkSession,
-                    table: String): java.net.URI =
-    spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(table)).location
-
   /** The VALUE column under a sort wrapper: `col.desc` wraps the column
     * node in an sql-internal SortOrder, which is Unevaluable if it leaks
     * into a value expression (e.g. hashing a caller's order columns to

@@ -83,8 +83,9 @@ class GraphsSpec extends SparkSpec {
 
   private def runWarm(edges: Seq[(Long, Long)], prior: Map[Long, Long],
                       iters: Int, stage: Boolean = false): Map[Long, Long] =
-    Graphs.pageRankWarm(edges.toDF("src", "dst"), "src", "dst", iters,
-        prior.toSeq.toDF("node", "rank_q18"), stagePerIteration = stage)
+    Graphs.pageRank(edges.toDF("src", "dst"), "src", "dst", iters,
+        prior = Some(prior.toSeq.toDF("node", "rank_q18")),
+        stagePerIteration = stage)
       .as[(Long, Long)].collect().toMap
 
   test("pageRankWarm matches the BigInt replay on an edge append (new + carried + dangling nodes)") {
@@ -134,8 +135,8 @@ class GraphsSpec extends SparkSpec {
   test("pageRankWarm guards the prior's shape") {
     val e = Seq((1L, 2L)).toDF("src", "dst")
     assert(intercept[IllegalArgumentException](
-      Graphs.pageRankWarm(e, "src", "dst", 1,
-        Seq((1L, 1L)).toDF("node", "rank"))).getMessage.contains("rank_q18"))
+      Graphs.pageRank(e, "src", "dst", 1,
+        prior = Some(Seq((1L, 1L)).toDF("node", "rank")))).getMessage.contains("rank_q18"))
   }
 
   /** Independent BigInt replay of the trustRank contract. */
@@ -161,8 +162,8 @@ class GraphsSpec extends SparkSpec {
 
   private def runTrust(edges: Seq[(Long, Long)], seedIds: Seq[Long],
                        iters: Int): Map[Long, Long] =
-    Graphs.trustRank(edges.toDF("src", "dst"), "src", "dst",
-        seedIds.toDF("seed"), "seed", iters)
+    Graphs.pageRank(edges.toDF("src", "dst"), "src", "dst", iters,
+        seeds = Some(seedIds.toDF("seed")))
       .as[(Long, Long)].collect().toMap
 
   test("trustRank matches an independent BigInt replay; spam region scores zero") {
@@ -189,8 +190,8 @@ class GraphsSpec extends SparkSpec {
     assert(got == want)
     assert(got.contains(99L) && got(99L) > 0L)
     intercept[IllegalArgumentException](
-      Graphs.trustRank(edges.toDF("src", "dst"), "src", "dst",
-        Seq.empty[Long].toDF("seed"), "seed", 1))
+      Graphs.pageRank(edges.toDF("src", "dst"), "src", "dst", 1,
+        seeds = Some(Seq.empty[Long].toDF("seed"))))
   }
 
   /** Warm replay of the seeded rounds: r₀ = prior where carried, cold
@@ -226,27 +227,28 @@ class GraphsSpec extends SparkSpec {
       prior.map { case (k, v) => k -> BigInt(v) }, 2)
       .map { case (k, v) => k -> v.toLong }
     // lazy warm on the full union
-    val gotLazy = Graphs.trustRankWarm(full.toDF("src", "dst"), "src", "dst",
-        seeds.toDF("seed"), "seed", 2, prior.toSeq.toDF("node", "rank_q18"))
+    val gotLazy = Graphs.pageRank(full.toDF("src", "dst"), "src", "dst", 2,
+        prior = Some(prior.toSeq.toDF("node", "rank_q18")),
+        seeds = Some(seeds.toDF("seed")))
       .as[(Long, Long)].collect().toMap
     assert(gotLazy == want)
-    // staged: stage resident + trustRankStaged ≡ cold; append + warm ≡ lazy
+    // staged: stage resident + seeded pageRankStaged ≡ cold; append + warm ≡ lazy
     val st = Graphs.stageEdgeTable(resident.toDF("src", "dst"), "src", "dst")
     try {
-      val r0 = Graphs.trustRankStaged(st, seeds.toDF("seed"), "seed", 3)
+      val r0 = Graphs.pageRankStaged(st, 3, seeds = Some(seeds.toDF("seed")))
       assert(r0.as[(Long, Long)].collect().toMap == prior)
       st.append(delta.toDF("src", "dst"), "src", "dst")
-      val got = Graphs.trustRankWarmStaged(st, seeds.toDF("seed"), "seed",
-          2, r0).as[(Long, Long)].collect().toMap
+      val got = Graphs.pageRankStaged(st, 2, prior = Some(r0),
+          seeds = Some(seeds.toDF("seed"))).as[(Long, Long)].collect().toMap
       assert(got == want)
     } finally st.drop()
     // a cold-init prior (seed base / zero) warm-runs bit-identical to cold
     val n = (full.map(_._1) ++ full.map(_._2) ++ seeds).distinct
     val baseQ = (BigInt(10).pow(18) / seeds.distinct.size).toLong
     val coldInit = n.map(v => v -> (if (seeds.contains(v)) baseQ else 0L)).toMap
-    val warmFromCold = Graphs.trustRankWarm(full.toDF("src", "dst"), "src",
-        "dst", seeds.toDF("seed"), "seed", 3,
-        coldInit.toSeq.toDF("node", "rank_q18"))
+    val warmFromCold = Graphs.pageRank(full.toDF("src", "dst"), "src",
+        "dst", 3, prior = Some(coldInit.toSeq.toDF("node", "rank_q18")),
+        seeds = Some(seeds.toDF("seed")))
       .as[(Long, Long)].collect().toMap
     assert(warmFromCold == runTrust(full, seeds, 3))
   }
@@ -260,15 +262,15 @@ class GraphsSpec extends SparkSpec {
     val weighted = multi.groupBy(identity).view
       .map { case ((s, d2), es) => (s, d2, es.size.toLong) }.toSeq
       .toDF("src", "dst", "w")
-    val got = Graphs.pageRankWeighted(weighted, "src", "dst", "w", 3)
+    val got = Graphs.pageRank(weighted, "src", "dst", 3, weightCol = Some("w"))
       .as[(Long, Long)].collect().toMap
     assert(got == run(multi, 3))
     // staged form identical too
-    val staged = Graphs.pageRankWeighted(weighted, "src", "dst", "w", 3,
-      stagePerIteration = true).as[(Long, Long)].collect().toMap
+    val staged = Graphs.pageRank(weighted, "src", "dst", 3,
+      weightCol = Some("w"), stagePerIteration = true).as[(Long, Long)].collect().toMap
     assert(staged == got)
     intercept[IllegalArgumentException](
-      Graphs.pageRankWeighted(weighted, "src", "dst", "w", 0))
+      Graphs.pageRank(weighted, "src", "dst", 0, weightCol = Some("w")))
   }
 
   /** Independent BigInt replay of the hits contract — h₀ = 10⁹, the two
@@ -451,8 +453,8 @@ class GraphsSpec extends SparkSpec {
       Graphs.pageRank(empty, "src", "dst", 2, stagePerIteration = true)
     }
     intercept[IllegalArgumentException] {
-      Graphs.pageRankWeighted(empty.withColumn("w", lit(1L)),
-        "src", "dst", "w", 2, stagePerIteration = true)
+      Graphs.pageRank(empty.withColumn("w", lit(1L)), "src", "dst", 2,
+        weightCol = Some("w"), stagePerIteration = true)
     }
     val leaked = spark.catalog.listTables().collect()
       .map(_.name).filter(_.startsWith("graft_pr_edges"))
@@ -519,7 +521,7 @@ class GraphsSpec extends SparkSpec {
   test("EdgeStage: append + warm rounds ≡ one-shot warm on the full graph, bit for bit") {
     // the per-crawl cadence (r16 verdict #2): resident graph buckets
     // once, the delta APPENDS, warm rounds run over the combined table —
-    // results must match pageRankWarm fed the full edge union, and the
+    // results must match warm pageRank fed the full edge union, and the
     // staged cold form must match plain pageRank
     val resident = Seq((1L, 2L), (2L, 1L), (2L, 3L), (3L, 4L))
     val delta = Seq((5L, 1L), (1L, 5L), (5L, 4L))
@@ -530,7 +532,7 @@ class GraphsSpec extends SparkSpec {
       // staged cold ≡ plain cold on the resident graph
       assert(prior.as[(Long, Long)].collect().toMap == run(resident, 3))
       st.append(delta.toDF("src", "dst"), "src", "dst")
-      val got = Graphs.pageRankWarmStaged(st, 2, prior)
+      val got = Graphs.pageRankStaged(st, 2, prior = Some(prior))
         .as[(Long, Long)].collect().toMap
       val want = runWarm(full, run(resident, 3), 2)
       assert(got == want)
@@ -550,16 +552,18 @@ class GraphsSpec extends SparkSpec {
       .toDF("src", "dst", "w")
     val prior = run(resident, 3)
     val want = runWarm(full, prior, 2)
-    val gotLazy = Graphs.pageRankWeightedWarm(w(full), "src", "dst", "w", 2,
-        prior.toSeq.toDF("node", "rank_q18"))
+    val gotLazy = Graphs.pageRank(w(full), "src", "dst", 2,
+        weightCol = Some("w"),
+        prior = Some(prior.toSeq.toDF("node", "rank_q18")))
       .as[(Long, Long)].collect().toMap
     assert(gotLazy == want)
-    val st = Graphs.stageEdgeTableWeighted(w(resident), "src", "dst", "w")
+    val st = Graphs.stageEdgeTable(w(resident), "src", "dst",
+      weightCol = Some("w"))
     try {
-      val r0 = Graphs.pageRankWeightedStaged(st, 3)
+      val r0 = Graphs.pageRankStaged(st, 3)
       assert(r0.as[(Long, Long)].collect().toMap == prior)
-      st.appendWeighted(w(delta), "src", "dst", "w")
-      val got = Graphs.pageRankWeightedWarmStaged(st, 2, r0)
+      st.append(w(delta), "src", "dst", weightCol = Some("w"))
+      val got = Graphs.pageRankStaged(st, 2, prior = Some(r0))
         .as[(Long, Long)].collect().toMap
       assert(got == want)
       // guard: weighted/unweighted append cross-calls refuse loudly
@@ -592,18 +596,18 @@ class GraphsSpec extends SparkSpec {
       // seeded rounds over the merged skeleton: a seed OUTSIDE the graph
       // must still absorb teleport mass (rows for node 99 exist)
       val seeds = Seq(2L, 99L).toDF("seed")
-      val tr = Graphs.trustRankStaged(st, seeds, "seed", 2)
+      val tr = Graphs.pageRankStaged(st, 2, seeds = Some(seeds))
         .as[(Long, Long)].collect().toMap
-      val trWant = Graphs.trustRank(full.toDF("src", "dst"), "src", "dst",
-        seeds, "seed", 2).as[(Long, Long)].collect().toMap
+      val trWant = Graphs.pageRank(full.toDF("src", "dst"), "src", "dst", 2,
+        seeds = Some(seeds)).as[(Long, Long)].collect().toMap
       assert(tr == trWant && tr.contains(99L))
     } finally st.drop()
   }
 
   test("EdgeStage skeleton: an EMPTY delta append is a no-op merge (skeleton stays exact)") {
-    // the fused merge skips entirely when the append wrote no files —
-    // the skeleton must remain the exact pre-append table and rankers
-    // must still agree with the lazy form
+    // an empty delta stages an empty frame, appends nothing and merges
+    // no rows — the skeleton must remain the exact pre-append table and
+    // rankers must still agree with the lazy form
     val resident = Seq((1L, 2L), (2L, 3L))
     val st = Graphs.stageEdgeTable(resident.toDF("src", "dst"), "src", "dst")
     try {
@@ -664,5 +668,62 @@ class GraphsSpec extends SparkSpec {
         assert(got == Map(2L -> 50L, 3L -> 150L, 1L -> 100L), got.toString)
       } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
     } finally st.drop()
+  }
+
+  /** Every message on an exception's cause chain, joined. */
+  private def messages(t: Throwable): String =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
+      .map(x => String.valueOf(x.getMessage)).mkString(" | ")
+
+  test("a null node id raises at the projection boundary (frame and append paths)") {
+    // the sum-with-null skeleton groups null ids into one node and gives
+    // it an out-degree; the projection must refuse a null id instead
+    val withNull = Seq((Option(1L), 2L), (None, 3L), (Option(3L), 1L))
+      .toDF("src", "dst")
+    val onFrame = intercept[Exception](
+      Graphs.pageRank(withNull, "src", "dst", 2).collect())
+    assert(messages(onFrame).contains("null node id"), messages(onFrame))
+    val resident = Seq((1L, 2L), (2L, 1L))
+    val st = Graphs.stageEdgeTable(resident.toDF("src", "dst"), "src", "dst")
+    try {
+      val onAppend = intercept[Exception](st.append(withNull, "src", "dst"))
+      assert(messages(onAppend).contains("null node id"), messages(onAppend))
+      // the refused delta left the stage as it was
+      assert(Graphs.pageRankStaged(st, 2).as[(Long, Long)].collect().toMap ==
+        run(resident, 2))
+    } finally st.drop()
+  }
+
+  test("EdgeStage: a delta that throws mid-write leaves no stale state; the next append still merges exactly") {
+    val resident = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L))
+    val st = Graphs.stageEdgeTable(resident.toDF("src", "dst"), "src", "dst")
+    try {
+      // the caller's delta lineage fails on one row while it is written
+      val bad = Seq((5L, 1L), (6L, 2L), (7L, 5L)).toDF("src", "dst")
+        .withColumn("src", when(col("src") === 6L,
+          raise_error(lit("delta lineage failed"))).otherwise(col("src")))
+      val ex = intercept[Exception](st.append(bad, "src", "dst"))
+      assert(messages(ex).contains("delta lineage failed"), messages(ex))
+      // the rankers still see exactly the resident graph, bit for bit
+      assert(Graphs.pageRankStaged(st, 2).as[(Long, Long)].collect().toMap ==
+        run(resident, 2))
+      // a good append after the failure: merged skeleton ≡ full rebuild,
+      // staged ranks ≡ cold ranks over resident + delta
+      val delta = Seq((5L, 1L), (1L, 5L), (4L, 2L))
+      st.append(delta.toDF("src", "dst"), "src", "dst")
+      val full = resident ++ delta
+      val wantOd = full.groupBy(_._1).view.mapValues(_.size.toLong).toMap
+      val want = (full.map(_._1) ++ full.map(_._2)).distinct
+        .map(n => n -> wantOd.get(n)).toMap
+      val got = st.skeletonOpt.get.collect()
+        .map(r => r.getLong(0) ->
+          (if (r.isNullAt(1)) None else Some(r.getLong(1)))).toMap
+      assert(got == want)
+      assert(Graphs.pageRankStaged(st, 2).as[(Long, Long)].collect().toMap ==
+        run(full, 2))
+    } finally st.drop()
+    val leaked = spark.catalog.listTables().collect()
+      .map(_.name).filter(_.startsWith("graft_pr_edges"))
+    assert(leaked.isEmpty, s"leaked staged edge tables: ${leaked.toSeq}")
   }
 }
