@@ -1229,7 +1229,9 @@ object Dedup {
     val newH = if (broadcastNew) broadcast(newH0) else newH0
     val corpM = corpSp.join(newH.select("h"), Seq("h"), "leftsemi")
     val corpN = corpM.groupBy("h").agg(count(lit(1)).as("_sx_corp_n"))
-    val okH0 = newH.join(corpN, Seq("h"), "left")
+    // the un-hinted side: a left outer join can only build its right side,
+    // so a broadcast hint on the left is ignored (and logged per query)
+    val okH0 = newH0.join(corpN, Seq("h"), "left")
       .select(col("h"), (col("_sx_new_n") +
         coalesce(col("_sx_corp_n"), lit(0L))).as("_sx_tot"))
       .filter(col("_sx_tot") >= 2 && col("_sx_tot") <= occCap)
@@ -1305,7 +1307,8 @@ object Dedup {
     val newH = if (broadcastNew) broadcast(newH0) else newH0
     val corpN = corpus.join(newH.select("h"), Seq("h"), "leftsemi")
       .groupBy("h").agg(count(lit(1)).as("_sp_corp_n"))
-    val occ0 = newH.join(corpN, Seq("h"), "left")
+    // un-hinted left side (see sharedSpansExactIncremental)
+    val occ0 = newH0.join(corpN, Seq("h"), "left")
       .select(col("h"),
         (col("_sp_new_n") + coalesce(col("_sp_corp_n"), lit(0L))).as("_sp_tot"))
     val occ = if (broadcastNew) broadcast(occ0) else occ0

@@ -3,6 +3,7 @@ package graft.pipelines
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.StringType
 import graft.ops.{Filters, Joins, Projections}
 import graft.render.{DbGapXmlRenderer, DocumentSink, SummaryReport}
 
@@ -11,8 +12,13 @@ import graft.render.{DbGapXmlRenderer, DocumentSink, SummaryReport}
   * partitioned by normalized program dir + summary report.
   *
   * One lazy Catalyst plan per output instead of the reference's
-  * CSV-file handoffs between processes (ingest.sh:45-64); the only
-  * materialization points are the sinks.
+  * CSV-file handoffs between processes (ingest.sh:45-64). Nothing is
+  * staged: the only materialization points are the sinks, one action
+  * each — the data-table and GapExchange documents go out in one write
+  * over their union, the overlap ids in one guarded collect, and the
+  * summary in one collect. The PicSure frame (one row per variable) is
+  * deliberately not staged: it is the one data-scale input, and holding
+  * it would cost heap in proportion to the variable count.
   */
 object BdcIngest {
 
@@ -68,17 +74,16 @@ object BdcIngest {
       when(col("is_categorical"), "encoded value").otherwise("string").as("var_type"),
       values.as("values"))
 
-    DocumentSink.writeDocuments(
-      DbGapXmlRenderer.renderDataTables(renderInput), outDir)
-
     // companion GapExchange study frame per study (xml_generator.py:63-109),
-    // in the same normalized program dir as the data tables
+    // in the same normalized program dir as the data tables; both document
+    // kinds go out in one write
     DocumentSink.writeDocuments(
-      DbGapXmlRenderer.renderGapExchange(studies.select(
-        col("Accession").as("study_id"),
-        col("Study Name").as("study_name"),
-        col("Description").as("study_description"),
-        concat(col("program_dir"), lit("/")).as("path_prefix"))), outDir)
+      DbGapXmlRenderer.renderDataTables(renderInput).union(
+        DbGapXmlRenderer.renderGapExchange(studies.select(
+          col("Accession").as("study_id"),
+          col("Study Name").as("study_name"),
+          col("Description").as("study_description"),
+          concat(col("program_dir"), lit("/")).as("path_prefix")))), outDir)
 
     // A4-style summary: processed studies vs rejects by reason
     val summary = studies.select(lit("generated").as("status"),
@@ -104,13 +109,22 @@ object BdcIngest {
     // Driver-side collect for the one-file report: ceiling-guarded like
     // every other metadata-scale sink (DocumentSink.writeSingleCsv,
     // KgxAssembler.toJsonDocument) so data-scale misuse raises, not OOMs.
-    val overlap = Joins.prefixScanMembership(picsure, picsure.columns.toSeq,
-      "phs", studies.select(col("study_id")).distinct(), "study_id")
-    val nOverlap = overlap.limit(DocumentSink.probeLimit(maxOverlapIds)).count()
-    require(nOverlap <= maxOverlapIds,
+    // One action: the guard is the collect's own limit (a result longer
+    // than the ceiling ⇔ the overlap exceeds it); a probe count first
+    // would scan PicSure a second time. Only string columns are
+    // scanned: a `phs` id is text, and the typed columns the source adds
+    // (`values_arr` casts to "[…]", `is_categorical` to true/false) can
+    // never start with it, so casting them per row would find nothing.
+    val textCols = picsure.schema.fields.collect {
+      case f if f.dataType == StringType => f.name
+    }.toSeq
+    val overlapIds = Joins.prefixScanMembership(picsure, textCols,
+        "phs", studies.select(col("study_id")).distinct(), "study_id")
+      .limit(DocumentSink.probeLimit(maxOverlapIds))
+      .collect().map(_.getString(0)).toSeq
+    require(overlapIds.length <= maxOverlapIds,
       s"overlap id list collects to the driver (> $maxOverlapIds rows); " +
         "the study-id universe should be metadata-scale")
-    val overlapIds = overlap.collect().map(_.getString(0)).toSeq
     val summaryText =
       SummaryReport.writeProcessingSummary(perStudy, overlapIds, outDir)
 

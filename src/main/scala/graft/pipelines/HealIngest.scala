@@ -9,6 +9,15 @@ import graft.sources.MdsJsonSource
 /** HEAL ingest lifecycle (SURVEY.md §3.2): MDS study JSONs → flattened
   * variable-index CSV + per-study dbGaP-style XML (in study-type subdirs
   * via the HDPID mapping join) + KGX graph.
+  *
+  * Each source is parsed once. Past schema inference there are two
+  * staging points (`localCheckpoint`): the per-dictionary frame, the only
+  * JSON parse, from which the variable index, the skip report and the KGX
+  * nodes and edges all derive; and the uniquified index, so its window
+  * runs once for the CSV sink, the XML path and [[Result.variableIndex]].
+  * Every other action is a sink, one each. At metadata scale the
+  * lifecycle's cost is fixed cost per job (parse, plan, JIT), not rows,
+  * so each re-parse the staging removes was a whole job's cost.
   */
 object HealIngest {
 
@@ -18,12 +27,14 @@ object HealIngest {
   def run(spark: SparkSession, mdsDir: String, mapping: DataFrame,
           outDir: String): Result = {
     val studies = MdsJsonSource.readStudies(spark, mdsDir)
+    val dds = MdsJsonSource.dataDictionaries(studies).localCheckpoint()
 
     // variable index with W1 name-uniquification in document order
-    val rawIndex = MdsJsonSource.variableIndex(studies)
+    val rawIndex = MdsJsonSource.variableIndexOf(dds)
     val uniquified = Windows.uniquify(rawIndex, Seq("study_id", "dd_id"),
         "name", "pos", "name_uniq")
       .withColumn("name", col("name_uniq")).drop("name_uniq")
+      .localCheckpoint()
     val indexCols = Seq("study_id", "dd_id", "name", "section", "title",
       "description", "type", "encodings", "logical_min", "logical_max")
     val variableIndex = uniquified.select(indexCols.map(col): _*)
@@ -55,7 +66,6 @@ object HealIngest {
 
     // F9 skip report: 404-stub dictionaries quarantined from the index,
     // surfaced with their error (the reference logs-and-continues per dd)
-    val dds = MdsJsonSource.dataDictionaries(studies)
     val skippedDds = dds.filter(col("dd_error").isNotNull)
       .select(col("study_id"), col("dd_id"), col("dd_error").as("reason"))
     val studyNodes = dds.select(col("study_id").as("id")).distinct()

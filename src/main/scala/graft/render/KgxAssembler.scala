@@ -44,17 +44,23 @@ object KgxAssembler {
   /** Render the single `{"nodes":[…],"edges":[…]}` document (metadata
     * scale; large graphs should use [[writeGraph]]). Node and edge order is
     * made deterministic by sorting on id/subject. Collects to the driver,
-    * so a row-count ceiling raises on data-scale misuse instead of OOMing. */
+    * so a row-count ceiling raises on data-scale misuse instead of OOMing.
+    * One action per frame: the sort and the ceiling probe are one top-k
+    * (`orderBy` + `limit` plans as TakeOrderedAndProject, with no
+    * range-sampling job), and a result longer than the ceiling ⇔ the frame
+    * exceeds it. */
   def toJsonDocument(nodes: DataFrame, edges: DataFrame,
                      maxRows: Long = 1000000L): String = {
-    Seq("nodes" -> nodes, "edges" -> edges).foreach { case (what, df) =>
-      val n = df.limit(DocumentSink.probeLimit(maxRows)).count()
-      require(n <= maxRows,
+    def sortedJson(what: String, df: DataFrame, keys: String*): String = {
+      val rows = df.orderBy(keys.map(col): _*)
+        .limit(DocumentSink.probeLimit(maxRows)).toJSON.collect()
+      require(rows.length <= maxRows,
         s"toJsonDocument collects $what to the driver (> $maxRows rows); " +
           "use writeGraph for large graphs")
+      rows.mkString(",")
     }
-    val nodeJson = nodes.orderBy("id").toJSON.collect().mkString(",")
-    val edgeJson = edges.orderBy("subject", "object").toJSON.collect().mkString(",")
+    val nodeJson = sortedJson("nodes", nodes, "id")
+    val edgeJson = sortedJson("edges", edges, "subject", "object")
     s"""{"nodes":[$nodeJson],"edges":[$edgeJson]}"""
   }
 

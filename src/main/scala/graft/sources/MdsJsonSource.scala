@@ -71,8 +71,13 @@ object MdsJsonSource {
 
   /** Flatten studies → one row per variable (the reference's variable
     * index, header at get_heal_platform_mds_data_dicts.py:502-511). */
-  def variableIndex(studies: DataFrame): DataFrame = {
-    val dds = dataDictionaries(studies)
+  def variableIndex(studies: DataFrame): DataFrame =
+    variableIndexOf(dataDictionaries(studies))
+
+  /** [[variableIndex]] over an already-built [[dataDictionaries]] frame,
+    * so a caller that stages the dictionaries parses the JSON once for the
+    * index and everything else it derives from them. */
+  def variableIndexOf(dds: DataFrame): DataFrame = {
     val ok = dds.filter(col("dd_error").isNull) // F9 quarantine split
     val vars = ok.select(col("study_id"), col("dd_id"),
       posexplode(col("fields")).as(Seq("pos", "f")))

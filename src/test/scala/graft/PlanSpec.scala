@@ -22,6 +22,16 @@ class PlanSpec extends SparkSpec {
 
   private def q(name: String): DataFrame = SparkEntry.queries(name)(spark, dir)
 
+  /** Managed tables live in the session warehouse (the working dir's
+    * `spark-warehouse/`): a test that writes one drops it, data included. */
+  private def dropTables(names: String*): Unit =
+    names.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+
+  private def assertNoBucketedTables(): Unit = {
+    val left = spark.catalog.listTables().collect().map(_.name).filter(_.contains("_bkt"))
+    assert(left.isEmpty, s"bucketed tables left in the warehouse: ${left.toSeq}")
+  }
+
   test("catalog sweep: no CartesianProduct; unpartitioned windows only on the allowlist") {
     // two catalog-wide bans in ONE construction pass (building every
     // query is the expensive part):
@@ -449,10 +459,12 @@ class PlanSpec extends SparkSpec {
   test("s6 bucketed join + same-key agg runs with zero shuffle exchanges") {
     // both sides bucketed on the join key; merge join AND the groupBy on
     // that key read the co-located buckets — no Exchange anywhere
-    val p = tree(q("s6_bucketed_join"))
+    val p = try tree(q("s6_bucketed_join"))
+    finally dropTables("graft_bkt_customer", "graft_bkt_orders")
     assert(p.contains("SortMergeJoin"), p)
     assert(!p.contains("ShuffleExchange") && !p.contains("Exchange hashpartitioning"),
       s"bucketed join+agg must not shuffle:\n$p")
+    assertNoBucketedTables()
   }
 
   test("IVF partitionBy(cid) layout prunes the scan to the probed cells") {
@@ -1193,16 +1205,19 @@ class PlanSpec extends SparkSpec {
     val upds = spark.range(1, 401).filter(col("id") % 10 === 0)
       .select(col("id").as("k"), lit("MOVED").as("seg"),
         to_date(lit("2026-06-01")).as("eff"))
-    graft.ops.Scale.writeBucketed(hist, "m_hist_bkt", "k", 8)
-    graft.ops.Scale.writeBucketed(upds, "m_upd_bkt", "k", 8)
-    val merged = graft.ops.Merge.scd2Merge(
-      spark.table("m_hist_bkt"), spark.table("m_upd_bkt"), "k", Seq("seg"))
-    val p = tree(merged)
-    assert(p.contains("SortMergeJoin") && p.contains("FullOuter"), p)
-    assert(!p.contains("ShuffleExchange") && !p.contains("Exchange hashpartitioning"),
-      s"bucketed merge must not shuffle either side:\n$p")
-    // and the merge still computes: changed keys close + re-open
-    assert(merged.count() == 400 + 40)
+    try {
+      graft.ops.Scale.writeBucketed(hist, "m_hist_bkt", "k", 8)
+      graft.ops.Scale.writeBucketed(upds, "m_upd_bkt", "k", 8)
+      val merged = graft.ops.Merge.scd2Merge(
+        spark.table("m_hist_bkt"), spark.table("m_upd_bkt"), "k", Seq("seg"))
+      val p = tree(merged)
+      assert(p.contains("SortMergeJoin") && p.contains("FullOuter"), p)
+      assert(!p.contains("ShuffleExchange") && !p.contains("Exchange hashpartitioning"),
+        s"bucketed merge must not shuffle either side:\n$p")
+      // and the merge still computes: changed keys close + re-open
+      assert(merged.count() == 400 + 40)
+    } finally dropTables("m_hist_bkt", "m_upd_bkt")
+    assertNoBucketedTables()
   }
 
   test("x27 line dedup: count-back join keyed by the md5 digest, never raw line text") {

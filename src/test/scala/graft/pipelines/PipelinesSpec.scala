@@ -10,6 +10,56 @@ class PipelinesSpec extends SparkSpec {
 
   private val fixtures = getClass.getResource("/fixtures").getPath
 
+  /** The actions `body` runs, in order, each with the number of Spark jobs
+    * it started: an action is one SQL execution, named by its call site
+    * without the line ("collect at BdcIngest.scala"); jobs outside any
+    * execution (schema inference) count as actions of their own. Under
+    * adaptive execution the jobs of one action run on other threads and
+    * carry no useful call site, but they all carry its execution id.
+    * Job counts are those of the spec session's 4 cores. */
+  private def actionsOf(body: => Unit): Seq[(String, Int)] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val sc = spark.sparkContext
+    val group = s"pipelines_${System.nanoTime()}"
+    val executions = new java.util.concurrent.ConcurrentHashMap[String, String]()
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String, String)]()
+    @volatile var barrierSeen = false
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart =>
+          executions.put(s.executionId.toString, s.description.replaceAll(":\\d+$", ""))
+        case _ =>
+      }
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        val g = j.properties.getProperty("spark.jobGroup.id")
+        if (g == group) jobs.add((j.jobId,
+          Option(j.properties.getProperty("spark.sql.execution.id")).getOrElse(""),
+          j.stageInfos.maxBy(_.stageId).name))
+        else if (g == s"$group-barrier") barrierSeen = true
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      // no group description: an execution is then named by its call site
+      sc.setJobGroup(group, null)
+      try body finally sc.clearJobGroup()
+      // the listener bus delivers events in order: once the barrier job is
+      // seen, every event of the body has been delivered
+      sc.setJobGroup(s"$group-barrier", null)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.currentTimeMillis() + 10000
+      while (!barrierSeen && System.currentTimeMillis() < deadline) Thread.sleep(20)
+    } finally sc.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    val ordered = jobs.asScala.toSeq.sortBy(_._1)
+    val keys = ordered.map { case (id, exec, site) =>
+      if (exec.isEmpty) s"job $id" -> site.replaceAll(":\\d+$", "")
+      else exec -> executions.getOrDefault(exec, "?")
+    }
+    keys.distinct.map { k => k._2 -> keys.count(_ == k) }
+  }
+
   test("BdcIngest: validation split, join, XML per data table in program dirs") {
     val out = Files.createTempDirectory("bdc").toString
     val gen3 = CsvSources.readGen3Studies(spark, s"$fixtures/gen3.csv")
@@ -65,6 +115,24 @@ class PipelinesSpec extends SparkSpec {
     // Gen3∩PicSure overlap via J8 prefix-scan over ALL picsure columns
     assert(txt.contains("Studies in both Gen3 and PicSure: 1"))
     assert(txt.contains("\nStudies found in both Gen3 and PicSure:\n  phs000007"))
+  }
+
+  test("BdcIngest: the overlap ids are one guarded collect; the documents one write") {
+    val out = Files.createTempDirectory("bdc_jobs").toString
+    val gen3 = CsvSources.readGen3Studies(spark, s"$fixtures/gen3.csv")
+    val pic = CsvSources.cleanPicsureVars(
+      CsvSources.readPicsureVars(spark, s"$fixtures/picsure.csv"))
+    val actions = actionsOf(BdcIngest.run(spark, gen3, pic, out))
+    // one action per sink: the data-table and GapExchange documents in one
+    // write, the overlap ids in one collect guarded by its own limit (no
+    // probe `count`), the summary in one collect
+    assert(actions.map(_._1) == Seq(
+      "foreachPartition at DocumentSink.scala",
+      "collect at BdcIngest.scala",
+      "takeOrdered at SummaryReport.scala"), actions)
+    assert(actions.map(_._2).sum == 9, actions)
+    assert(Files.readString(Paths.get(out, "processing_summary.txt"))
+      .contains("\nStudies found in both Gen3 and PicSure:\n  phs000007"))
   }
 
   test("BdcIngest: overlap-id driver collect raises past the row ceiling") {
@@ -155,6 +223,25 @@ class PipelinesSpec extends SparkSpec {
     assert(res.kgxJson.contains(""""id":"HDP00002""""))
     assert(res.kgxJson.contains(""""id":"HEALCDE:dd-1""""))
     assert(res.kgxJson.contains(""""predicate":"biolink:related_to""""))
+  }
+
+  test("HealIngest: each source parsed once; one action per driver-funnelled sink") {
+    val out = Files.createTempDirectory("heal_jobs").toString
+    val mapping = CsvSources.readHdpidMapping(spark, s"$fixtures/mapping.csv")
+    var res: HealIngest.Result = null
+    val actions = actionsOf { res = HealIngest.run(spark, s"$fixtures/mds", mapping, out) }
+    assert(actions.map(_._1) == Seq(
+      "json at MdsJsonSource.scala", // schema inference
+      "localCheckpoint at HealIngest.scala", // the dictionaries: the one parse
+      "localCheckpoint at HealIngest.scala", // the uniquified index
+      "count at DocumentSink.scala", // CSV ceiling probe
+      "csv at DocumentSink.scala",
+      "foreachPartition at DocumentSink.scala", // XML documents
+      "collect at KgxAssembler.scala", // nodes: one guarded top-k each
+      "collect at KgxAssembler.scala"), actions) // edges
+    assert(actions.map(_._2).sum == 13, actions)
+    // the results read the stages, not the JSON
+    assert(res.variableIndex.inputFiles.isEmpty && res.skippedDds.inputFiles.isEmpty)
   }
 
   test("DugIngest: sorted TSV with header, jq escaping, CDE exclusion (golden)") {

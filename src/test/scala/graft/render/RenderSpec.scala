@@ -141,12 +141,18 @@ class RenderSpec extends SparkSpec {
       KgxAssembler.toJsonDocument(big, edges, maxRows = 2)
     }
     assert(e1.getMessage.contains("collects nodes to the driver"))
+    // the edges carry their own ceiling: one node fits, five edges do not
+    val e2 = intercept[IllegalArgumentException] {
+      KgxAssembler.toJsonDocument(big.limit(1), big.select(col("id").as("subject"),
+        lit("biolink:related_to").as("predicate"), col("name").as("object")), maxRows = 2)
+    }
+    assert(e2.getMessage.contains("collects edges to the driver"), e2.getMessage)
     val out = Files.createTempDirectory("cap").toString
     val flat = big.select("id", "name")
-    val e2 = intercept[IllegalArgumentException] {
+    val e3 = intercept[IllegalArgumentException] {
       DocumentSink.writeSingleCsv(flat, s"$out/csv", maxRows = 2)
     }
-    assert(e2.getMessage.contains("metadata-scale sink"))
+    assert(e3.getMessage.contains("metadata-scale sink"))
     // under the ceiling both still work
     assert(KgxAssembler.toJsonDocument(big, edges, maxRows = 100).contains("\"id\":\"0\""))
     DocumentSink.writeSingleCsv(flat, s"$out/csv2", maxRows = 100)
@@ -157,6 +163,20 @@ class RenderSpec extends SparkSpec {
     DocumentSink.writeSingleCsv(flat, s"$out/csv3", maxRows = Long.MaxValue)
     assert(DocumentSink.probeLimit(Long.MaxValue) == Int.MaxValue)
     assert(DocumentSink.probeLimit(10L) == 11)
+  }
+
+  test("toJsonDocument: nodes given in reverse id order come out sorted") {
+    // given in reverse id order, in one partition
+    val nodes = Seq(("n3", "c"), ("n2", "b"), ("n1", "a")).toDF("id", "name").coalesce(1)
+    val edges = Seq(("n3", "n1"), ("n1", "n2"), ("n1", "n1")).toDF("subject", "object")
+      .select(col("subject"), lit("biolink:related_to").as("predicate"), col("object"))
+    // nodes come out sorted by id, edges by (subject, object)
+    val doc = KgxAssembler.toJsonDocument(nodes, edges, maxRows = 3)
+    assert(doc == """{"nodes":[{"id":"n1","name":"a"},{"id":"n2","name":"b"},""" +
+      """{"id":"n3","name":"c"}],"edges":[""" +
+      """{"subject":"n1","predicate":"biolink:related_to","object":"n1"},""" +
+      """{"subject":"n1","predicate":"biolink:related_to","object":"n2"},""" +
+      """{"subject":"n3","predicate":"biolink:related_to","object":"n1"}]}""", doc)
   }
 
   test("K4 partitioned layout: null partition values become __missing__") {
