@@ -2,7 +2,6 @@ package graft.pipelines
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.StringType
 import graft.ops.{Filters, Joins, Projections}
 import graft.render.{DbGapXmlRenderer, DocumentSink, SummaryReport}
@@ -18,7 +17,9 @@ import graft.render.{DbGapXmlRenderer, DocumentSink, SummaryReport}
   * over their union, the overlap ids in one guarded collect, and the
   * summary in one collect. The PicSure frame (one row per variable) is
   * deliberately not staged: it is the one data-scale input, and holding
-  * it would cost heap in proportion to the variable count.
+  * it would cost heap in proportion to the variable count. The data-table
+  * documents take one shuffle past the broadcast join: the renderer sorts
+  * each document's rows by `varId` inside it, so no window numbers them.
   */
 object BdcIngest {
 
@@ -48,10 +49,6 @@ object BdcIngest {
     val joined = Joins.broadcastEquiJoin(
       picsure, studies, picsure("studyId") === studies("study_id"))
 
-    // encounter order within a data table (deterministic: varId) — W1 note
-    val pos = row_number().over(
-      Window.partitionBy(col("dtId")).orderBy(col("varId")))
-
     // categorical values: position in the list IS the code
     // (xml_generator.py:151-156)
     val values = when(col("is_categorical"),
@@ -64,7 +61,8 @@ object BdcIngest {
       col("Study Name").as("study_name"),
       col("columnmeta_var_group_description").as("group_description"),
       concat(col("program_dir"), lit("/")).as("path_prefix"),
-      pos.as("pos"),
+      // encounter order within a data table: the renderer orders by varId
+      col("varId").as("pos"),
       col("varId").as("var_id"),
       col("derived_var_name").as("var_name"),
       col("columnmeta_name").as("var_title"),

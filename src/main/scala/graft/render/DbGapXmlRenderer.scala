@@ -7,77 +7,145 @@ import org.apache.spark.sql.functions._
   *
   * The reference builds one `data_table` XML document per (study,
   * data-table) group with ElementTree (xml_generator.py:111-186,
-  * get_heal_platform_mds_data_dicts.py:302-499). Spark-first shape:
-  * `groupBy(dt_id).agg(collect_list(struct(...)))` assembles each
-  * document's rows ON THE EXECUTORS, then a plain Scala formatter maps the
-  * aggregated struct to the XML string — one row per document, fully
-  * distributed, no driver collect. The sink ([[DocumentSink]]) writes each
-  * (path, content) row from `foreachPartition`.
+  * get_heal_platform_mds_data_dicts.py:302-499). Spark-first shape: one
+  * shuffle on `(dt_id, study_id)` with a sort inside each partition
+  * brings each document's rows together, in order, ON THE EXECUTORS; a
+  * `mapPartitions` pass then folds each run of equal keys into its XML
+  * string — one row per document, fully distributed, no driver collect,
+  * and one document in memory per task. The sink ([[DocumentSink]])
+  * writes each (path, content) row from `foreachPartition`.
   *
   * Exact-layout notes (SURVEY.md §7.4): element order and the stylesheet
   * header match the reference's writer; tests compare canonicalized XML.
   */
 object DbGapXmlRenderer {
 
-  def escape(s: String): String =
-    if (s == null) ""
-    else s.flatMap {
-      case '&' => "&amp;"
-      case '<' => "&lt;"
-      case '>' => "&gt;"
-      case '"' => "&quot;"
-      case c => c.toString
+  /** XML-escapes `& < > "`; null renders as "". A string with nothing to
+    * escape is returned as is. */
+  def escape(s: String): String = {
+    if (s == null) return ""
+    var i = 0
+    while (i < s.length && !needsEscape(s.charAt(i))) i += 1
+    if (i == s.length) return s
+    val sb = new java.lang.StringBuilder(s.length + 16).append(s, 0, i)
+    while (i < s.length) {
+      s.charAt(i) match {
+        case '&' => sb.append("&amp;")
+        case '<' => sb.append("&lt;")
+        case '>' => sb.append("&gt;")
+        case '"' => sb.append("&quot;")
+        case c => sb.append(c)
+      }
+      i += 1
     }
+    sb.toString
+  }
+
+  private def needsEscape(c: Char): Boolean =
+    c == '&' || c == '<' || c == '>' || c == '"'
+
+  /** Spark's string order: UTF-8 bytes compared unsigned, nulls first.
+    * On well-formed strings (every string decoded from a Spark row is
+    * one) that is code-point order, which this compares without encoding;
+    * `String.compareTo` is UTF-16 order and differs above U+FFFF. */
+  private[render] def compareUtf8(x: String, y: String): Int =
+    if (x eq null) { if (y eq null) 0 else -1 }
+    else if (y eq null) 1
+    else {
+      var i = 0
+      var j = 0
+      var c = 0
+      while (c == 0 && i < x.length && j < y.length) {
+        val a = x.codePointAt(i)
+        val b = y.codePointAt(j)
+        c = Integer.compare(a, b)
+        i += Character.charCount(a)
+        j += Character.charCount(b)
+      }
+      if (c != 0) c else Integer.compare(x.length - i, y.length - j)
+    }
+
+  /** The smaller of two strings in Spark's order, nulls skipped (`min`). */
+  private def minUtf8(cur: String, v: String): String =
+    if (v == null || (cur != null && compareUtf8(v, cur) >= 0)) cur else v
+
+  private val Columns = Seq("dt_id", "study_id", "study_name",
+    "group_description", "path_prefix", "pos", "var_id", "var_name",
+    "var_title", "var_description", "var_type", "values")
 
   /** Assemble per-data-table documents from a variable-level DataFrame.
     *
     * Expected columns: dt_id, study_id, study_name, group_description,
-    * path_prefix ("" or "subdir/" — K4 partitioned layout), pos (encounter
-    * order), var_id, var_name, var_title, var_description, var_type,
+    * path_prefix ("" or "subdir/" — K4 partitioned layout), pos (any
+    * orderable encounter-order key: HEAL's list position, BDC's varId),
+    * var_id, var_name, var_title, var_description, var_type,
     * values (array<struct<code,label>> nullable).
-    * Returns (path, content) rows: one XML document per dt_id.
+    * Returns (path, content) rows: one XML document per (dt_id, study_id).
+    * Variables come out in (pos, var_id, …, values) order; the header's
+    * study_name, group_description and path_prefix are each the group's
+    * `min`.
     */
   def renderDataTables(vars: DataFrame, participantSet: Int = 1): Dataset[(String, String)] = {
     val spark = vars.sparkSession
     import spark.implicits._
-    val grouped = vars.groupBy(col("dt_id"), col("study_id"))
-      .agg(
-        min(col("study_name")).as("study_name"),
-        min(col("group_description")).as("group_description"),
-        min(col("path_prefix")).as("path_prefix"),
-        array_sort(collect_list(struct(
-          col("pos"), col("var_id"), col("var_name"), col("var_title"),
-          col("var_description"), col("var_type"), col("values")))).as("vars"))
-    grouped.map { row =>
-      val dtId = row.getAs[String]("dt_id")
-      val studyId = row.getAs[String]("study_id")
-      val sb = new StringBuilder
-      sb ++= "<?xml version=\"1.0\" encoding=\"UTF-8\"?>\n"
-      sb ++= "<?xml-stylesheet type=\"text/xsl\" href=\"./datadict_v2.xsl\"?>\n"
-      sb ++= s"""<data_table id="${escape(dtId)}" study_id="${escape(studyId)}"""" +
-        s""" participant_set="$participantSet"""" +
-        s""" study_name="${escape(row.getAs[String]("study_name"))}">\n"""
-      val desc = row.getAs[String]("group_description")
-      if (desc != null) sb ++= s"  <description>${escape(desc)}</description>\n"
-      row.getAs[scala.collection.Seq[Row]]("vars").foreach { v =>
-        sb ++= s"""  <variable id="${escape(v.getAs[String]("var_id"))}">\n"""
-        def child(tag: String, value: String): Unit =
-          if (value != null) sb ++= s"    <$tag>${escape(value)}</$tag>\n"
-        child("name", v.getAs[String]("var_name"))
-        child("title", v.getAs[String]("var_title"))
-        child("description", v.getAs[String]("var_description"))
-        child("type", v.getAs[String]("var_type"))
-        val values = v.getAs[scala.collection.Seq[Row]]("values")
-        if (values != null) values.foreach { value =>
-          sb ++= s"""    <value code="${escape(value.getAs[String]("code"))}">""" +
-            s"${escape(value.getAs[String]("label"))}</value>\n"
+    // the document key, then the variable's fields from pos on: a tie in
+    // pos falls to the later fields, ascending, nulls first (struct order)
+    val sortKeys = Seq("dt_id", "study_id") ++ Columns.drop(Columns.indexOf("pos"))
+    vars.select(Columns.map(col): _*)
+      .repartition(col("dt_id"), col("study_id"))
+      .sortWithinPartitions(sortKeys.map(col): _*)
+      .mapPartitions { rows =>
+        val in = rows.buffered
+        new Iterator[(String, String)] {
+          def hasNext: Boolean = in.hasNext
+          def next(): (String, String) = {
+            val dtId = in.head.getString(0)
+            val studyId = in.head.getString(1)
+            var studyName: String = null
+            var desc: String = null
+            var prefix: String = null
+            val body = new java.lang.StringBuilder
+            while (in.hasNext && java.util.Objects.equals(in.head.getString(0), dtId) &&
+                java.util.Objects.equals(in.head.getString(1), studyId)) {
+              val r = in.next()
+              studyName = minUtf8(studyName, r.getString(2))
+              desc = minUtf8(desc, r.getString(3))
+              prefix = minUtf8(prefix, r.getString(4))
+              appendVariable(body, r)
+            }
+            val doc = new java.lang.StringBuilder(body.length + 512)
+            doc.append("<?xml version=\"1.0\" encoding=\"UTF-8\"?>\n")
+              .append("<?xml-stylesheet type=\"text/xsl\" href=\"./datadict_v2.xsl\"?>\n")
+              .append("<data_table id=\"").append(escape(dtId))
+              .append("\" study_id=\"").append(escape(studyId))
+              .append("\" participant_set=\"").append(participantSet)
+              .append("\" study_name=\"").append(escape(studyName)).append("\">\n")
+            if (desc != null)
+              doc.append("  <description>").append(escape(desc)).append("</description>\n")
+            doc.append(body).append("</data_table>\n")
+            (s"${Option(prefix).getOrElse("")}$studyId/$dtId.data_dict.xml", doc.toString)
+          }
         }
-        sb ++= "  </variable>\n"
       }
-      sb ++= "</data_table>\n"
-      val prefix = Option(row.getAs[String]("path_prefix")).getOrElse("")
-      (s"$prefix$studyId/$dtId.data_dict.xml", sb.toString)
+  }
+
+  /** One `<variable>` element of a [[renderDataTables]] input row. */
+  private def appendVariable(sb: java.lang.StringBuilder, r: Row): Unit = {
+    sb.append("  <variable id=\"").append(escape(r.getString(6))).append("\">\n")
+    def child(tag: String, value: String): Unit =
+      if (value != null)
+        sb.append("    <").append(tag).append('>').append(escape(value))
+          .append("</").append(tag).append(">\n")
+    child("name", r.getString(7))
+    child("title", r.getString(8))
+    child("description", r.getString(9))
+    child("type", r.getString(10))
+    val values = r.getSeq[Row](11)
+    if (values != null) values.foreach { value =>
+      sb.append("    <value code=\"").append(escape(value.getAs[String]("code")))
+        .append("\">").append(escape(value.getAs[String]("label"))).append("</value>\n")
     }
+    sb.append("  </variable>\n")
   }
 
   /** Companion GapExchange study-frame document (xml_generator.py:63-109).

@@ -37,9 +37,6 @@ object DocumentSink {
       }
     }
 
-  /** K1: single CSV file with header — the reference's one-file-with-header
-    * report shape. coalesce(1) funnels everything through one task, so a
-    * row-count ceiling rejects data-scale misuse up front. */
   /** Probe limit for a row ceiling: maxRows+1 clamped into Int range, so
     * an absurd ceiling degrades to "count everything" instead of
     * overflowing into a negative limit (which throws AnalysisException). */
@@ -47,6 +44,9 @@ object DocumentSink {
     if (maxRows >= Int.MaxValue) Int.MaxValue // +1 first would overflow
     else (math.max(maxRows, 0L) + 1L).toInt
 
+  /** K1: single CSV file with header — the reference's one-file-with-header
+    * report shape. coalesce(1) funnels everything through one task, so a
+    * row-count ceiling rejects data-scale misuse up front. */
   def writeSingleCsv(df: DataFrame, path: String,
                      maxRows: Long = MaxSingleFileRows): Unit = {
     val n = df.limit(probeLimit(maxRows)).count()

@@ -29,17 +29,11 @@ object SummaryReport {
     // ceiling+1 rows; a longer result than the ceiling ⇔ the frame
     // exceeds it. The ordering compares UTF-8 bytes, nulls first — the
     // engine's own string collation, so detail order is unchanged.
-    def cmp(x: String, y: String): Int =
-      if (x eq null) { if (y eq null) 0 else -1 }
-      else if (y eq null) 1
-      else java.util.Arrays.compareUnsigned(
-        x.getBytes(java.nio.charset.StandardCharsets.UTF_8),
-        y.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     val byStudyAcc = new Ordering[(String, String, String, String, String)] {
       def compare(a: (String, String, String, String, String),
                   b: (String, String, String, String, String)): Int = {
-        val c = cmp(a._1, b._1)
-        if (c != 0) c else cmp(a._2, b._2)
+        val c = DbGapXmlRenderer.compareUtf8(a._1, b._1)
+        if (c != 0) c else DbGapXmlRenderer.compareUtf8(a._2, b._2)
       }
     }
     val rdd = summary

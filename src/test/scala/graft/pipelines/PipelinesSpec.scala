@@ -130,9 +130,43 @@ class PipelinesSpec extends SparkSpec {
       "foreachPartition at DocumentSink.scala",
       "collect at BdcIngest.scala",
       "takeOrdered at SummaryReport.scala"), actions)
-    assert(actions.map(_._2).sum == 9, actions)
+    assert(actions.map(_._2).sum == 8, actions)
     assert(Files.readString(Paths.get(out, "processing_summary.txt"))
       .contains("\nStudies found in both Gen3 and PicSure:\n  phs000007"))
+  }
+
+  test("BdcIngest: the document write is one sorted shuffle, no window or aggregate") {
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.execution.window.WindowExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val out = Files.createTempDirectory("bdc_plan").toString
+    val gen3 = CsvSources.readGen3Studies(spark, s"$fixtures/gen3.csv")
+    val pic = CsvSources.cleanPicsureVars(
+      CsvSources.readPicsureVars(spark, s"$fixtures/picsure.csv"))
+    val writes = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (funcName == "foreachPartition") writes.add(qe)
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      BdcIngest.run(spark, gen3, pic, out)
+      val deadline = System.currentTimeMillis() + 10000
+      while (writes.isEmpty && System.currentTimeMillis() < deadline) Thread.sleep(20)
+    } finally spark.listenerManager.unregister(listener)
+    assert(writes.size == 1, writes)
+    // the final adaptive plan, query stages included
+    val plan = writes.peek().executedPlan
+    object Stages extends AdaptiveSparkPlanHelper
+    def all(pf: PartialFunction[SparkPlan, SparkPlan]) = Stages.collect(plan)(pf)
+    assert(all { case e: ShuffleExchangeLike => e }.size == 1, plan)
+    assert(all { case w: WindowExec => w }.isEmpty, plan)
+    assert(all { case a: BaseAggregateExec => a }.isEmpty, plan)
+    assert(Files.exists(Paths.get(out, "topmed/phs000007.v32/pht000030.data_dict.xml")))
   }
 
   test("BdcIngest: overlap-id driver collect raises past the row ceiling") {

@@ -67,8 +67,126 @@ class RenderSpec extends SparkSpec {
   }
 
   test("escape handles all five XML special forms") {
-    assert(DbGapXmlRenderer.escape("""a&b<c>d"e""") == "a&amp;b&lt;c&gt;d&quot;e")
-    assert(DbGapXmlRenderer.escape(null) == "")
+    import DbGapXmlRenderer.escape
+    assert(escape("""a&b<c>d"e""") == "a&amp;b&lt;c&gt;d&quot;e")
+    assert(escape(null) == "")
+    // nothing to escape: the input itself comes back, nothing is copied
+    for (clean <- Seq("", "plain text", "～😀 ünïcode", "a'b")) assert(escape(clean) eq clean)
+    assert(escape("&") == "&amp;" && escape("<") == "&lt;" &&
+      escape(">") == "&gt;" && escape("\"") == "&quot;")
+    assert(escape("&&<<") == "&amp;&amp;&lt;&lt;")
+    assert(escape("x > y & 😀\"") == "x &gt; y &amp; 😀&quot;")
+    assert(escape("""<a href="u?x=1&y=2">t</a>""") ==
+      "&lt;a href=&quot;u?x=1&amp;y=2&quot;&gt;t&lt;/a&gt;")
+  }
+
+  test("renderDataTables: the streamed documents equal the collect_list oracle") {
+    import org.apache.spark.sql.{DataFrame, Row}
+    import org.apache.spark.sql.types._
+    // the former formulation, kept as the oracle: one aggregate row per
+    // document, header fields by `min`, variables by `array_sort` on the
+    // struct of (pos, var_id, …, values)
+    def oracleEscape(s: String): String =
+      if (s == null) ""
+      else s.flatMap {
+        case '&' => "&amp;"
+        case '<' => "&lt;"
+        case '>' => "&gt;"
+        case '"' => "&quot;"
+        case c => c.toString
+      }
+    def oracle(vars: DataFrame, participantSet: Int = 1): Set[(String, String)] =
+      vars.groupBy(col("dt_id"), col("study_id"))
+        .agg(
+          min(col("study_name")).as("study_name"),
+          min(col("group_description")).as("group_description"),
+          min(col("path_prefix")).as("path_prefix"),
+          array_sort(collect_list(struct(
+            col("pos"), col("var_id"), col("var_name"), col("var_title"),
+            col("var_description"), col("var_type"), col("values")))).as("vars"))
+        .map { row =>
+          val dtId = row.getAs[String]("dt_id")
+          val studyId = row.getAs[String]("study_id")
+          val sb = new StringBuilder
+          sb ++= "<?xml version=\"1.0\" encoding=\"UTF-8\"?>\n"
+          sb ++= "<?xml-stylesheet type=\"text/xsl\" href=\"./datadict_v2.xsl\"?>\n"
+          sb ++= s"""<data_table id="${oracleEscape(dtId)}" study_id="${oracleEscape(studyId)}"""" +
+            s""" participant_set="$participantSet"""" +
+            s""" study_name="${oracleEscape(row.getAs[String]("study_name"))}">\n"""
+          val desc = row.getAs[String]("group_description")
+          if (desc != null) sb ++= s"  <description>${oracleEscape(desc)}</description>\n"
+          row.getAs[scala.collection.Seq[Row]]("vars").foreach { v =>
+            sb ++= s"""  <variable id="${oracleEscape(v.getAs[String]("var_id"))}">\n"""
+            def child(tag: String, value: String): Unit =
+              if (value != null) sb ++= s"    <$tag>${oracleEscape(value)}</$tag>\n"
+            child("name", v.getAs[String]("var_name"))
+            child("title", v.getAs[String]("var_title"))
+            child("description", v.getAs[String]("var_description"))
+            child("type", v.getAs[String]("var_type"))
+            val values = v.getAs[scala.collection.Seq[Row]]("values")
+            if (values != null) values.foreach { value =>
+              sb ++= s"""    <value code="${oracleEscape(value.getAs[String]("code"))}">""" +
+                s"${oracleEscape(value.getAs[String]("label"))}</value>\n"
+            }
+            sb ++= "  </variable>\n"
+          }
+          sb ++= "</data_table>\n"
+          val prefix = Option(row.getAs[String]("path_prefix")).getOrElse("")
+          (s"$prefix$studyId/$dtId.data_dict.xml", sb.toString)
+        }.collect().toSet
+
+    val str = Seq("dt_id", "study_id", "study_name", "group_description", "path_prefix")
+    val schema = StructType(str.map(StructField(_, StringType)) ++
+      Seq(StructField("pos", IntegerType)) ++
+      Seq("var_id", "var_name", "var_title", "var_description", "var_type")
+        .map(StructField(_, StringType)) :+
+      StructField("values", ArrayType(StructType(Seq(
+        StructField("code", StringType), StructField("label", StringType))))))
+    val (dtA, stA) = ("pht<1>", "phs&\"1\"")
+    def v(code: String, label: String) = Row(code, label)
+    // document A: header fields vary within the group, with nulls; "～"
+    // (U+FF5E) sorts before "😀" (U+1F600) in UTF-8 but after it in UTF-16
+    val docA = Seq(
+      Row(dtA, stA, "😀 \"q\"", "desc & <b>", "bdc/", 3, "v<3", "n3", "t3", "d3", "string", null),
+      Row(dtA, stA, null, null, null, 1, "v1&", "n&1", "t\"1", "d>1", "encoded value",
+        Seq(v("1", "yes & no"), v("2", "<none>"))),
+      Row(dtA, stA, "～ <b>", "desc & <a>", "bdc/", 1, "v0", "n0", null, null, null, null),
+      Row(dtA, stA, "😀", null, "bdc/", 2, "vX", "b>", "t", "d", "string", null),
+      Row(dtA, stA, null, "desc & <c>", "bdc/", 2, "vX", "a<", "t2", "d", "string", null),
+      Row(dtA, stA, "～ <c>", null, "bdc/", 2, "vX", "a<", "t1", "d", "string", null),
+      Row(dtA, stA, null, null, null, 2, "vX", "a<", "t1", "d", null, Seq(v("1", "z"))),
+      Row(dtA, stA, null, null, null, 2, "vX", "a<", "t1", "d", null,
+        Seq(v("2", "x&"), v("1", "y<"))),
+      Row(dtA, stA, null, null, null, 2, "vX", "a<", "t1", "d", null, null),
+      Row(dtA, stA, null, null, null, 2, "vX", "a<", "t1", "\"d\"", "string", null)) ++
+      (4 to 9).map(i => Row(dtA, stA, null, null, "bdc/", i, s"v$i", s"n$i<", s"t$i>",
+        s"d$i&", "string", if (i % 2 == 0) null else Seq(v(s"$i", s"\"l$i\""))))
+    val others = Seq(
+      // the same dt_id in another study is another document; no header values
+      Row(dtA, "phs2", null, null, null, 1, "w1", "m1", null, null, null, null),
+      Row(dtA, "phs2", null, null, null, 0, "w0", "m0", null, null, null, null),
+      Row(null, "phs3", "s3", null, "", 1, "u1", "k1", null, null, null, null),
+      Row("pht>4", stA, "s&4", "g\"4\"", "heal/", 1, "z>", "z&", "z<", "z\"", "string",
+        Seq(v("<c>", "&l\""))))
+    // interleave A's rows with the others' so the slices split document A
+    val rows = docA.zipWithIndex.flatMap { case (r, i) =>
+      if (i < others.length) Seq(r, others(i)) else Seq(r) }
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 4), schema)
+    val slicesWithA = df.rdd.mapPartitions(it =>
+      Iterator(it.count(r => r.getString(0) == "pht<1>" && r.getString(1) == "phs&\"1\"")))
+      .collect().count(_ > 0)
+    assert(slicesWithA >= 3, s"document A spans $slicesWithA input partitions")
+
+    val docs = DbGapXmlRenderer.renderDataTables(df).collect()
+    val expected = oracle(df)
+    assert(docs.length == 4 && expected.size == 4)
+    assert(docs.toSet == expected)
+    val a = docs.find(_._1 == "bdc/phs&\"1\"/pht<1>.data_dict.xml").get._2
+    // UTF-8 `min`, as the engine compares strings (UTF-16 order would pick 😀)
+    assert(a.contains("""study_name="～ &lt;b&gt;">"""), a)
+    assert(a.contains("  <description>desc &amp; &lt;a&gt;</description>\n"), a)
+    assert(docs.exists(_._1 == "phs2/pht<1>.data_dict.xml"))
+    assert(docs.exists(_._1 == "phs3/null.data_dict.xml"))
   }
 
   test("KGX assembly: consent collapse (A8), typed graph, single-doc render") {
