@@ -63,18 +63,41 @@ object Projections {
     * lowercase, default. Ref: run_dbgap_xml_gen_fallback.py:164-179. */
   def normalizeName(c: Column, dflt: String = "unknown_program"): Column =
     coalesce(
-      nullif(lower(regexp_replace(trim(substring_index(c, "|", 1)), "[ /]", "_")), lit("")),
+      nullif(lowercase(regexp_replace(trim(substring_index(c, "|", 1)), "[ /]", "_")), lit("")),
       lit(dflt))
+
+  /** `lower(c)`, value for value, without the one-off cost Spark 4.1's
+    * `lower` pays on its first call in a JVM: ICU title-cases every code
+    * point to build a table `lower` never reads. See
+    * [[graft.functions.IcuLower]]. The input is cast to string, as
+    * `lower`'s implicit cast does. */
+  def lowercase(c: Column): Column =
+    org.apache.spark.sql.graftbridge.Bridge.column(graft.functions.IcuLower(
+      org.apache.spark.sql.graftbridge.Bridge.expression(
+        c.cast(org.apache.spark.sql.types.StringType))))
 
   /** P10 — pipe-join of sorted distinct values (array form).
     * Ref: get_bdc_studies_from_gen3.py:229-236. */
   def pipeJoinSortedDistinct(arr: Column): Column =
     concat_ws("|", array_sort(array_distinct(arr)))
 
-  /** P11 — packed-map parse: `"k=v|k=v"` → map<string,string>.
-    * Ref: get_heal_platform_mds_data_dicts.py:449-453. */
+  /** P11 — packed-map parse: `"k=v|k=v"` → map<string,string>, values
+    * trimmed. Ref: get_heal_platform_mds_data_dicts.py:449-453. */
   def parsePackedMap(c: Column): Column =
-    transform_values(str_to_map(c, lit("\\|"), lit("=")), (_, v) => trim(v))
+    transform_values(packedMap(c), (_, v) => trim(v))
+
+  /** `str_to_map(c, '\\|', '=')`, value for value: the same regex splits
+    * (pairs with no limit, so empty pairs stay; each pair at its first
+    * `=`), a pair with no `=` maps to null, entries keep their order, and a
+    * repeated key follows `spark.sql.mapKeyDedupPolicy` (it raises by
+    * default). Built from `split` and `map_from_entries` because Spark
+    * 4.1's `str_to_map` splits through the collation layer, whose first
+    * call in a JVM builds an ICU title-case table over every code point. */
+  def packedMap(c: Column): Column =
+    map_from_entries(transform(split(c, "\\|", -1), kv => {
+      val parts = split(kv, "=", 2)
+      struct(get(parts, lit(0)).as("key"), get(parts, lit(1)).as("value"))
+    }))
 
   /** P12 — map → packed `"k=v|k=v"` string (inverse of P11).
     * Ref: get_heal_platform_mds_data_dicts.py:455-467. */

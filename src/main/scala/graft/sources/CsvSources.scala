@@ -57,7 +57,7 @@ object CsvSources {
     spark.read.option("header", "true").schema(picsureVarSchema).csv(path)
       .withColumn("values_arr", Projections.parsePyLiteralList(col("values")))
       .withColumn("is_categorical",
-        lower(coalesce(col("is_categorical"), lit("false"))) === "true")
+        Projections.lowercase(coalesce(col("is_categorical"), lit("false"))) === "true")
 
   /** PicSure clean rule (F1): required ids/description present AND
     * varId LIKE 'phv%' — get_bdc_studies_md_from_picsure.py:34-51. */

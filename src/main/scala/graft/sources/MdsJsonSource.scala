@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, MapType, StringType, StructType}
+import graft.ops.Projections
 
 /** HEAL MDS study-JSON scan (SURVEY.md S8) + alias normalization (P6) +
   * variable-index flattening — the schema-on-read layer of the HEAL
@@ -21,12 +22,29 @@ import org.apache.spark.sql.types.{DataType, MapType, StringType, StructType}
 object MdsJsonSource {
 
   /** Read a directory of per-study MDS JSON documents (one nested object
-    * per file). */
-  def readStudies(spark: SparkSession, dir: String): DataFrame =
-    spark.read.option("multiLine", "true")
+    * per file; a top-level array yields one row per element, a malformed
+    * file one `_corrupt_record` row).
+    *
+    * Each file is read whole by the text source and inferred and parsed as
+    * one JSON string (`spark.read.json(Dataset[String])`). That gives the
+    * rows and schema of the `multiLine` JSON reader at a tenth of its
+    * inference cost: over 120 files (694 KB) on a warm JVM, the multiLine
+    * read took 2.0–2.8 s per call and the whole-text read 0.16–0.30 s
+    * (PERF.md "Fixed costs the data never needed"). Files are read as
+    * UTF-8 (RFC 8259 §8.1); the byte-level multiLine reader's UTF-16/32
+    * auto-detection is gone. A leading byte-order mark is dropped, as that
+    * reader dropped it.
+    */
+  def readStudies(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    val docs = spark.read.option("wholetext", "true")
       .option("recursiveFileLookup", "true")
       .option("pathGlobFilter", "*.json")
-      .json(dir)
+      .text(dir)
+      .select(regexp_replace(col("value"), "^\uFEFF", "").as("value"))
+      .as[String]
+    spark.read.json(docs)
+  }
 
   /** `col(path)` if the nested field exists in this batch's schema, else a
     * null literal — schema-drift guard for evolving MDS documents. */
@@ -107,8 +125,7 @@ object MdsJsonSource {
         // must NOT re-parse `encodings` (labels containing '|' would
         // corrupt the split)
         val enumMap = from_json(to_json(f("enumLabels")), MapType(StringType, StringType))
-        coalesce(enumMap,
-          str_to_map(f("constraints.encodings").cast("string"), lit("\\|"), lit("=")))
+        coalesce(enumMap, Projections.packedMap(f("constraints.encodings").cast("string")))
           .as("enum_map")
       },
       f("constraints.minimum").cast("string").as("logical_min"),

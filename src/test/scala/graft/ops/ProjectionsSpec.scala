@@ -60,6 +60,42 @@ class ProjectionsSpec extends SparkSpec {
     assert(out.sameElements(Array("topmed", "a_b_prog", "unknown_program", "unknown_program")))
   }
 
+  test("lowercase equals lower() on ASCII and on ICU's special cases, interpreted and codegen'd") {
+    val df = Seq("plain ascii", "MiXeD CaSe 42", "\u0130stanbul", "STRA\u1E9EE",
+      "\u039F\u0394\u039F\u03A3 \u039F\u0394\u039F\u03A3",
+      "\u212A", "\u0131I", "\uD83D\uDE00 Emoji \uD83D\uDC4D", "", null).toDF("s")
+    // a local relation is folded by the optimizer (interpreted eval); the
+    // repartitioned copy runs through whole-stage codegen
+    for (in <- Seq(df, df.repartition(2))) {
+      val rows = in.select(col("s"), lower(col("s")), Projections.lowercase(col("s")))
+        .as[(String, String, String)].collect()
+      assert(rows.length == 10)
+      rows.foreach { case (s, builtin, ours) => assert(ours == builtin, s"input $s") }
+    }
+    // the special cases really are special: non-ASCII took the ICU path
+    val sigma = Seq("\u039F\u0394\u039F\u03A3").toDF("s")
+      .select(Projections.lowercase(col("s"))).as[String].head()
+    assert(sigma == "\u03BF\u03B4\u03BF\u03C2") // final sigma
+  }
+
+  test("packedMap equals str_to_map on edge cases; a duplicate key raises in both") {
+    val df = Seq("", "a", "a=", "=b", "a=b=c", "a=1|", "|a=1", "a=1||b=2", null)
+      .toDF("packed")
+    for (in <- Seq(df, df.repartition(2))) {
+      val rows = in.select(col("packed"),
+        map_entries(str_to_map(col("packed"), lit("\\|"), lit("="))),
+        map_entries(Projections.packedMap(col("packed")))).collect()
+      assert(rows.length == 9)
+      rows.foreach(r => assert(r.get(2) == r.get(1), s"input ${r.get(0)}"))
+    }
+    val dup = Seq("a=1|a=2").toDF("packed").repartition(1)
+    val builtin = intercept[Exception](
+      dup.select(str_to_map(col("packed"), lit("\\|"), lit("="))).collect())
+    val ours = intercept[Exception](dup.select(Projections.packedMap(col("packed"))).collect())
+    assert(builtin.getMessage.contains("DUPLICATED_MAP_KEY"), builtin.getMessage)
+    assert(ours.getMessage.contains("DUPLICATED_MAP_KEY"), ours.getMessage)
+  }
+
   test("P10 pipeJoinSortedDistinct") {
     val df = Seq(Seq("b", "a", "b")).toDF("arr")
     val out = df.select(Projections.pipeJoinSortedDistinct(col("arr"))).as[String].head()

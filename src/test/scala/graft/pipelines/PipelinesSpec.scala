@@ -2,6 +2,7 @@ package graft.pipelines
 
 import graft.SparkSpec
 import graft.sources.{CsvSources, MdsJsonSource, XmlDictSource}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 
@@ -10,25 +11,37 @@ class PipelinesSpec extends SparkSpec {
 
   private val fixtures = getClass.getResource("/fixtures").getPath
 
-  /** The actions `body` runs, in order, each with the number of Spark jobs
-    * it started: an action is one SQL execution, named by its call site
+  /** What `body` ran: its actions in order, each with the number of Spark
+    * jobs it started, and the analyzed plan of each action that is a SQL
+    * execution. An action is one SQL execution, named by its call site
     * without the line ("collect at BdcIngest.scala"); jobs outside any
     * execution (schema inference) count as actions of their own. Under
     * adaptive execution the jobs of one action run on other threads and
     * carry no useful call site, but they all carry its execution id.
     * Job counts are those of the spec session's 4 cores. */
-  private def actionsOf(body: => Unit): Seq[(String, Int)] = {
+  private case class Observed(actions: Seq[(String, Int)], plans: Seq[LogicalPlan])
+
+  private def actionsOf(body: => Unit): Seq[(String, Int)] = observe(body).actions
+
+  private def observe(body: => Unit): Observed = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
-    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd, SparkListenerSQLExecutionStart}
     val sc = spark.sparkContext
     val group = s"pipelines_${System.nanoTime()}"
     val executions = new java.util.concurrent.ConcurrentHashMap[String, String]()
+    val plans = new java.util.concurrent.ConcurrentHashMap[String, LogicalPlan]()
     val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String, String)]()
     @volatile var barrierSeen = false
     val listener = new SparkListener {
       override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
         case s: SparkListenerSQLExecutionStart =>
           executions.put(s.executionId.toString, s.description.replaceAll(":\\d+$", ""))
+        case s: SparkListenerSQLExecutionEnd =>
+          // every execution's end event carries its QueryExecution, named
+          // or not (`qe` is private[sql], hence the reflective read)
+          val qe = s.getClass.getMethod("qe").invoke(s).asInstanceOf[QueryExecution]
+          if (qe != null) plans.put(s.executionId.toString, qe.analyzed)
         case _ =>
       }
       override def onJobStart(j: SparkListenerJobStart): Unit = {
@@ -57,7 +70,27 @@ class PipelinesSpec extends SparkSpec {
       if (exec.isEmpty) s"job $id" -> site.replaceAll(":\\d+$", "")
       else exec -> executions.getOrDefault(exec, "?")
     }
-    keys.distinct.map { k => k._2 -> keys.count(_ == k) }
+    Observed(keys.distinct.map { k => k._2 -> keys.count(_ == k) },
+      keys.distinct.collect { case (id, _) if !id.startsWith("job ") => plans.get(id) })
+  }
+
+  /** The expressions whose UTF8_BINARY evaluation calls into Spark 4.1's
+    * `CollationAwareUTF8String`, whose static initializer title-cases all
+    * 1,114,112 code points through ICU. `javap -c` on
+    * `org.apache.spark.sql.catalyst.util.CollationSupport$*` (spark-unsafe)
+    * lists the binary-collation branches that reach it: `Lower`, `Upper` and
+    * `InitCap` under the default ICU case mappings, and `StringTrim`/
+    * `StringTrimRight` with a trim string under a space-trimming collation
+    * (kept here for every trim-string form); `StringToMap` calls its
+    * `splitSQL` directly. */
+  private def collationCaseMapCalls(plan: LogicalPlan): Seq[String] = {
+    import org.apache.spark.sql.catalyst.expressions._
+    plan.collectWithSubqueries { case node => node.expressions.flatMap(_.collect {
+      case e @ (_: Lower | _: Upper | _: InitCap | _: StringToMap) => e.toString
+      case e: StringTrim if e.trimStr.isDefined => e.toString
+      case e: StringTrimLeft if e.trimStr.isDefined => e.toString
+      case e: StringTrimRight if e.trimStr.isDefined => e.toString
+    })}.flatten
   }
 
   test("BdcIngest: validation split, join, XML per data table in program dirs") {
@@ -276,6 +309,24 @@ class PipelinesSpec extends SparkSpec {
     assert(actions.map(_._2).sum == 13, actions)
     // the results read the stages, not the JSON
     assert(res.variableIndex.inputFiles.isEmpty && res.skippedDds.inputFiles.isEmpty)
+  }
+
+  test("BDC and HEAL ingests never reach the collation layer's ICU case-map table") {
+    val gen3 = CsvSources.readGen3Studies(spark, s"$fixtures/gen3.csv")
+    val pic = CsvSources.cleanPicsureVars(
+      CsvSources.readPicsureVars(spark, s"$fixtures/picsure.csv"))
+    val mapping = CsvSources.readHdpidMapping(spark, s"$fixtures/mapping.csv")
+    val runs = Seq(
+      "bdc" -> observe(BdcIngest.run(spark, gen3, pic,
+        Files.createTempDirectory("bdc_icu").toString)),
+      "heal" -> observe(HealIngest.run(spark, s"$fixtures/mds", mapping,
+        Files.createTempDirectory("heal_icu").toString)))
+    for ((name, run) <- runs) {
+      // every SQL execution among the actions left its analyzed plan
+      assert(run.plans.nonEmpty && !run.plans.contains(null), s"$name: $run")
+      val calls = run.plans.flatMap(collationCaseMapCalls)
+      assert(calls.isEmpty, s"$name plans call into CollationAwareUTF8String: $calls")
+    }
   }
 
   test("DugIngest: sorted TSV with header, jq escaping, CDE exclusion (golden)") {
