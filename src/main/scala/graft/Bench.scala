@@ -1,4 +1,5 @@
 package graft
+import graft.catalog.Catalog
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -19,9 +20,7 @@ object Bench {
     // same dev-loop narrowing Verify has: SPARK_GRAFT_ONLY=s10b times just
     // that query — the one-command isolated-vs-in-catalog A/B the round-11
     // verdict had to approximate through Verify wall-clock deltas
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSeq)
-    val selected = SparkEntry.queries.filter { case (name, _) =>
-      only.forall(_.exists(name.startsWith)) }
+    val selected = Catalog.select(sys.env.get("SPARK_GRAFT_ONLY")).keys.toSeq
     // per-query environment instrumentation (the r12 verdict's open
     // question: some heavy families read 2-4x their isolated cost in the
     // driver's run with no plan change — adjudicate with DATA, not
@@ -65,13 +64,13 @@ object Bench {
           "running single-rep")
         1
       })
-    val results = selected.zipWithIndex.map { case ((name, fn), idx) =>
+    val results = selected.zipWithIndex.map { case (name, idx) =>
       val repRows = (1 to reps).map { _ =>
         val gc0 = gcMillis(); val io0 = ioWriteBytes(); resetHeapPeaks()
         val t0 = System.nanoTime()
         // a throwing query must SURFACE in the artifact, not record a
         // tiny duration that reads as success
-        val err = try { fn(spark, sfDir).count(); null } catch {
+        val err = try { Catalog.plan(spark, name, sfDir).count(); null } catch {
           case e: Throwable =>
             e.getClass.getSimpleName + ": " + String.valueOf(e.getMessage).take(160)
         }
@@ -80,18 +79,11 @@ object Bench {
         val peakMb = peakHeapMb()
         val ioMb = { val w = ioWriteBytes(); if (w < 0 || io0 < 0) -1L
           else (w - io0) / (1024 * 1024) }
-        // persistent RDDs outliving their query (operators with managed
-        // caches, e.g. dupClusters' final round) are invisible to
-        // clearCache — count them into the artifact, then drop them so no
+        // persistent RDDs outliving their query go into the artifact; the
+        // reset drops them (and the staged dirs: the r11 bench-tail
+        // amplification, s10b 28.6s in-catalog vs ~12s isolated) so no
         // query pays for a predecessor's leftovers
-        val nRdds = spark.sparkContext.getPersistentRDDs.size
-        spark.catalog.clearCache() // queries are independent; drop leftovers
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-        // staged temp-parquet dirs live until JVM exit otherwise; a
-        // 229-query session accumulates dozens (disk + page-cache pressure
-        // — the r11 bench-tail amplification: s10b 28.6s in-catalog vs
-        // ~12s isolated). Queries are independent — delete them NOW.
-        graft.ext.Dedup.drainStageDirs()
+        val nRdds = Catalog.reset(spark)
         // force a driver GC BETWEEN queries/reps (outside the timed
         // region): ContextCleaner only reclaims broadcasts/shuffle files
         // after a driver GC notices the references are dead — the 15s
@@ -111,12 +103,8 @@ object Bench {
       val err = repRows.flatMap(r => Option(r._2)).headOption.orNull
       (name, best._1, err, best._3, best._4, best._5, best._6, idx, repRows)
     }
-    def jstr(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-    } + "\""
     val errs = results.collect { case (k, _, e, _, _, _, _, _, _) if e != null =>
-      s"\"" + k + "\":" + jstr(e)
+      s"\"" + k + "\":" + Verify.jsonString(e)
     }.mkString("{", ",", "}")
     val rdds = results.map { case (k, _, _, n, _, _, _, _, _) => s"\"" + k + "\":" + n }
       .mkString("{", ",", "}")
@@ -149,7 +137,7 @@ object Bench {
     } catch {
       case e: Throwable =>
         // never silently lose the lossless artifact — flag it in-window
-        println(s"""{"metric":"bench_artifact_write_failed","error":${jstr(
+        println(s"""{"metric":"bench_artifact_write_failed","error":${Verify.jsonString(
           e.getClass.getSimpleName + ": " + String.valueOf(e.getMessage).take(120))}}""")
         false
     }
@@ -162,7 +150,7 @@ object Bench {
     // a broken build can't regrow the r7 overgrown-line failure; the full
     // detail is in bench_full.json
     val errsCapped = results.collect { case r if r._3 != null => (r._1, r._3) }
-      .take(3).map { case (k, e) => s"\"" + k + "\":" + jstr(e.take(80)) }
+      .take(3).map { case (k, e) => s"\"" + k + "\":" + Verify.jsonString(e.take(80)) }
       .mkString("{", ",", "}")
     println(f"""{"metric":"bench_summary","total_sec":$total%.2f,"n_queries":${results.size},"n_reps":$reps,"n_errors":$nErrors,"warmup_sec":$warmup%.2f,"slowest":$slowest,"errors":$errsCapped}""")
     val qs = results.map { r => f"""\"${r._1}\":${r._2}%.2f""" }

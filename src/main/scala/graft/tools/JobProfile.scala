@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.catalog.Catalog
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import scala.collection.concurrent.TrieMap
 
@@ -33,7 +34,7 @@ object JobProfile {
     (1 to reps).foreach { rep =>
       rows.clear()
       val t0 = System.nanoTime()
-      val n = graft.SparkEntry.queries(name)(spark, sfDir).count()
+      val n = Catalog.plan(spark, name, sfDir).count()
       val t1 = System.nanoTime()
       Thread.sleep(300) // listener drain
       import scala.jdk.CollectionConverters._
@@ -58,9 +59,7 @@ object JobProfile {
         val gapStr = if (gap >= 0.05) f"  gap=$gap%5.2f s" else ""
         println(f"  job $id%3d  ${(en - st) / 1e9}%6.2f s$gapStr  $site")
       }
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-      graft.ext.Dedup.drainStageDirs()
+      Catalog.reset(spark)
       System.gc()
     }
     spark.stop()

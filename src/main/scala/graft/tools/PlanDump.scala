@@ -1,5 +1,7 @@
 package graft.tools
 
+import graft.catalog.Catalog
+
 /** Dump `.explain("formatted")` for catalog queries to files — the
   * plan-evidence artifact of optimization rounds (plans/rNN/<q>_before.txt
   * / _after.txt). Not part of the engine surface.
@@ -23,14 +25,14 @@ object PlanDump {
     spark.sparkContext.setLogLevel("ERROR")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { name =>
-      val df = graft.SparkEntry.queries(name)(spark, sfDir)
+      val df = Catalog.plan(spark, name, sfDir)
       val plan = df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get(s"$outDir/${name}_$suffix.txt"), plan)
       println(s"[plandump] wrote $outDir/${name}_$suffix.txt " +
         s"(${plan.count(_ == '\n')} lines)")
-      graft.ext.Dedup.drainStageDirs()
+      Catalog.reset(spark)
     }
     spark.stop()
   }

@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.catalog.Catalog
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -50,10 +51,10 @@ object ScaleRehearsal {
   def main(args: Array[String]): Unit = {
     val base = args.headOption.getOrElse("/root/testdata/sf0.1")
     val work = if (args.length > 1) args(1) else "/tmp/graft_rehearsal"
-    // optional 3rd arg: comma list of family-name prefixes (resume a
+    // optional 3rd arg: comma list of query-name prefixes (resume a
     // partially-completed rehearsal without re-running finished rows)
     val only = if (args.length > 2 && args(2).nonEmpty && args(2) != "all")
-      Some(args(2).split(",").toSeq) else None
+      Some(args(2)) else None
     val factor = if (args.length > 3) args(3).toInt else 10
     require(factor >= 2 && factor <= 312,
       s"factor must be in [2, 312] (affine cipher count): $factor")
@@ -230,6 +231,7 @@ object ScaleRehearsal {
     prep(s"$work/x${factor}_shost/documents.parquet",
       (0 until factor).map(saltedHost(docsHost, _)).reduce(_ unionByName _))
 
+    val selected = Catalog.select(only)
     val families = Seq(
       ("x17_dup_clusters", "salt"),
       ("x86b_allpairs_incremental", "salt"),
@@ -309,7 +311,7 @@ object ScaleRehearsal {
       ("x17_dup_clusters@zipf", "zipf"),
       ("x26_incremental_dedup@zipf", "zipf"),
       ("x62_chunk_neardup@zipf", "zipf"))
-      .filter { case (n, _) => only.forall(_.exists(n.startsWith)) }
+      .filter { case (n, _) => selected.contains(n.takeWhile(_ != '@')) }
     // true high-water mark: sum of heap POOL PEAKS since the last
     // reset (an instantaneous totalMemory-freeMemory sample would miss
     // a mid-query peak that GC already collected)
@@ -331,13 +333,10 @@ object ScaleRehearsal {
       resetPeaks()
       val t0 = System.nanoTime()
       // labels may carry an "@corpus" suffix — the query name precedes it
-      val n = graft.SparkEntry.queries(name.takeWhile(_ != '@'))(spark, dir)
-        .count()
+      val n = Catalog.plan(spark, name.takeWhile(_ != '@'), dir).count()
       val dt = (System.nanoTime() - t0) / 1e9
       val hm = heapMb()
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-      graft.ext.Dedup.drainStageDirs()
+      Catalog.reset(spark)
       System.gc()
       println(f"[rehearsal] $name $dir rows=$n ${dt}%.2fs heap=${hm}MB")
       (dt, hm)
