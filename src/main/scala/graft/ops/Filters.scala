@@ -27,14 +27,23 @@ object Filters {
     * reference's per-field skip report.
     * Ref: get_bdc_studies_md_from_gen3.py:186-219. */
   def validationSplit(df: DataFrame, required: Seq[String]): (DataFrame, DataFrame) = {
-    def missing(c: String): Column = col(c).isNull || trim(col(c).cast("string")) === ""
     val anyMissing = required.map(missing).reduce(_ || _)
-    // first missing column wins, mirroring the reference's loop order
-    val firstReason = required.foldRight(lit(null).cast("string")) { (c, acc) =>
+    (df.filter(!anyMissing), df.filter(anyMissing).withColumn("reason", firstReason(required)))
+  }
+
+  /** F2 in one pass: every row of `df` with a `reason` column that holds
+    * [[validationSplit]]'s reject reason, null on a valid row. */
+  def validationTag(df: DataFrame, required: Seq[String]): DataFrame =
+    df.withColumn("reason", firstReason(required))
+
+  private def missing(c: String): Column = col(c).isNull || trim(col(c).cast("string")) === ""
+
+  /** "missing <field>" for the first missing field, else null: the first
+    * missing column wins, mirroring the reference's loop order. */
+  private def firstReason(required: Seq[String]): Column =
+    required.foldRight(lit(null).cast("string")) { (c, acc) =>
       when(missing(c), lit(s"missing $c")).otherwise(acc)
     }
-    (df.filter(!anyMissing), df.filter(anyMissing).withColumn("reason", firstReason))
-  }
 
   /** F4 — skip-set exclusion (NOT IN over a small driver-known set).
     * Ref: get_dbgap_data_dicts.py:144,168,223-228. */

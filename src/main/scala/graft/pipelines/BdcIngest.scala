@@ -1,8 +1,8 @@
 package graft.pipelines
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StringType
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import graft.ops.{Filters, Joins, Projections}
 import graft.render.{DbGapXmlRenderer, DocumentSink, SummaryReport}
 
@@ -10,44 +10,92 @@ import graft.render.{DbGapXmlRenderer, DocumentSink, SummaryReport}
   * → validation split → equi-join → per-data-table XML documents
   * partitioned by normalized program dir + summary report.
   *
-  * One lazy Catalyst plan per output instead of the reference's
-  * CSV-file handoffs between processes (ingest.sh:45-64). Nothing is
-  * staged: the only materialization points are the sinks, one action
-  * each — the data-table and GapExchange documents go out in one write
-  * over their union, the overlap ids in one guarded collect, and the
-  * summary in one collect. The PicSure frame (one row per variable) is
-  * deliberately not staged: it is the one data-scale input, and holding
-  * it would cost heap in proportion to the variable count. The data-table
-  * documents take one shuffle past the broadcast join: the renderer sorts
-  * each document's rows by `varId` inside it, so no window numbers them.
+  * Two actions plus the summary's `takeOrdered`, instead of the
+  * reference's CSV-file handoffs between processes (ingest.sh:45-64):
+  *  - Gen3 is metadata scale (one row per study), so it is scanned once,
+  *    each row tagged with its first missing field, and collected in one
+  *    ceiling-guarded action. The valid studies, the rejects, the status
+  *    summary and the per-study report frame are local relations built
+  *    from those rows: no later action re-reads Gen3.
+  *  - PicSure (one row per variable) is the one data-scale input and is
+  *    never staged: holding it would cost heap in proportion to the
+  *    variable count. Its single scan is the document write's. That write
+  *    sends the data-table and GapExchange documents out over their union,
+  *    with one shuffle past the broadcast join (the renderer sorts each
+  *    document's rows by `varId` inside it, so no window numbers them).
+  *    The same scan observes the Gen3∩PicSure overlap and the PicSure row
+  *    count through `Dataset.observe`, so the overlap costs no second scan.
   */
 object BdcIngest {
 
+  /** What the run read, from the Gen3 collect and the PicSure scan's
+    * observation (no job of their own). `picsureRows` counts the rows of
+    * the `picsure` frame as passed in; it is 0 when no study is valid,
+    * since the document write then has no variable to join and skips the
+    * PicSure scan. */
+  case class Counts(gen3Rows: Long, validRows: Long,
+                    rejectsByReason: Map[String, Long], picsureRows: Long)
+
   case class Result(valid: DataFrame, rejects: DataFrame, summary: DataFrame,
-                    processingSummary: String)
+                    processingSummary: String, counts: Counts)
 
   val requiredStudyFields: Seq[String] =
     Seq("Accession", "Consent", "Study Name", "Program", "Description")
 
+  private val summarySchema = StructType(Seq(
+    StructField("status", StringType, nullable = false),
+    StructField("n", LongType, nullable = false),
+    StructField("ids", StringType, nullable = false)))
+
   /** Full pipeline. `gen3` / `picsure` as read by CsvSources (picsure
     * already cleaned). Writes XML docs under `outDir/<program>/<study>/`
-    * and returns the report DataFrames (lazily evaluated).
-    * `maxOverlapIds` ceilings the driver-side overlap-id collect (the
-    * study-id universe is metadata-scale by contract). */
+    * and returns the report DataFrames (local relations over the collected
+    * Gen3 rows). The driver-side Gen3 collect is ceilinged at
+    * `DocumentSink.MaxSingleFileRows` rows and the overlap-id list at
+    * `maxOverlapIds` (both are metadata-scale by contract). */
   def run(spark: SparkSession, gen3: DataFrame, picsure: DataFrame,
           outDir: String,
           maxOverlapIds: Long = DocumentSink.MaxSingleFileRows): Result = {
-    // F2 validation split with tracked reasons
-    val (valid, rejects) = Filters.validationSplit(gen3, requiredStudyFields)
-
-    // P1/P9: join key + program directory name
-    val studies = valid
+    // F2 validation tag (null reason = valid) + P1/P9 join key and program
+    // directory name, in one Gen3 scan and one guarded collect
+    val tagged = Filters.validationTag(gen3, requiredStudyFields)
       .withColumn("study_id", Projections.splitPart(col("Accession"), ".", 1))
       .withColumn("program_dir", Projections.normalizeName(col("Program")))
+    val maxStudies = DocumentSink.MaxSingleFileRows
+    val rows = tagged.limit(DocumentSink.probeLimit(maxStudies)).collect()
+    require(rows.length <= maxStudies,
+      s"Gen3 study list collects to the driver (> $maxStudies rows); " +
+        "the study list should be metadata-scale")
+    def field(name: String)(r: Row): String = r.getAs[String](name)
+    val (validRows, rejectRows) = rows.partition(field("reason")(_) == null)
+    val local = spark.createDataFrame(java.util.Arrays.asList(rows: _*), tagged.schema)
+    val studies = local.filter(col("reason").isNull).drop("reason")
+    val rejects = local.filter(col("reason").isNotNull).drop("study_id", "program_dir")
+
+    // the overlap (J8, write_summary's Gen3∩PicSure: run_dbgap_xml_gen_
+    // fallback.py:97-104): phs values harvested from ANY picsure column,
+    // first dot-part, that name a valid study, so the set is bounded by
+    // the valid-study count. Only string columns are scanned: a `phs` id
+    // is text, and the typed columns the source adds (`values_arr`,
+    // `is_categorical`) can never hold one. The write's PicSure scan
+    // observes it, with the row count. With no valid study the join below
+    // is empty and Spark never reads PicSure: the observation is skipped.
+    val validIds = validRows.map(field("study_id")).distinct.toSeq
+    val textCols = picsure.schema.fields.collect {
+      case f if f.dataType == StringType => f.name
+    }.toSeq
+    val metrics = count(lit(1)).as("rows") +: textCols.zipWithIndex.map { case (c, i) =>
+      val id = substring_index(col(c), ".", 1)
+      collect_set(when(col(c).startsWith("phs") && id.isin(validIds: _*), id)).as(s"ids_$i")
+    }
+    val observation = Observation("bdc_picsure")
+    val vars =
+      if (validIds.isEmpty) picsure
+      else picsure.observe(observation, metrics.head, metrics.tail: _*)
 
     // J1: per-study variable rows; Gen3 is the small metadata side
     val joined = Joins.broadcastEquiJoin(
-      picsure, studies, picsure("studyId") === studies("study_id"))
+      vars, studies, vars("studyId") === studies("study_id"))
 
     // categorical values: position in the list IS the code
     // (xml_generator.py:151-156)
@@ -68,7 +116,7 @@ object BdcIngest {
       col("columnmeta_name").as("var_title"),
       // picsure-side ref: "description" also matches Gen3's "Description"
       // under case-insensitive resolution
-      picsure("description").as("var_description"),
+      vars("description").as("var_description"),
       when(col("is_categorical"), "encoded value").otherwise("string").as("var_type"),
       values.as("values"))
 
@@ -83,18 +131,36 @@ object BdcIngest {
           col("Description").as("study_description"),
           concat(col("program_dir"), lit("/")).as("path_prefix")))), outDir)
 
-    // A4-style summary: processed studies vs rejects by reason
-    val summary = studies.select(lit("generated").as("status"),
-        col("study_id").as("id"))
-      .unionByName(rejects.select(lit("skipped").as("status"),
-        coalesce(col("Accession"), lit("(no accession)")).as("id")))
-      .groupBy(col("status")).agg(count(lit(1)).as("n"),
-        concat_ws("|", array_sort(collect_list(col("id")))).as("ids"))
+    val (picsureRows, overlapIds) =
+      if (validIds.isEmpty) (0L, Seq.empty[String])
+      else {
+        // Spark reports no metrics for an observed scan that is not in the
+        // write's final plan: adaptive execution drops the join's stage
+        // once it has run empty (no PicSure row names a valid study). Only
+        // then is the overlap an aggregate of its own.
+        val m = Some(observation.get).filter(_.nonEmpty).getOrElse {
+          val r = picsure.agg(metrics.head, metrics.tail: _*).head()
+          r.getValuesMap[Any](r.schema.fieldNames.toSeq)
+        }
+        (m("rows").asInstanceOf[Long], textCols.indices.flatMap(i =>
+          m(s"ids_$i").asInstanceOf[scala.collection.Seq[String]]).distinct)
+      }
+    require(overlapIds.length <= maxOverlapIds,
+      s"overlap id list collects to the driver (> $maxOverlapIds rows); " +
+        "the study-id universe should be metadata-scale")
+
+    // A4-style summary: processed studies vs rejects by reason, ids in
+    // Spark's string order (`array_sort`'s)
+    val summary = spark.createDataFrame(java.util.Arrays.asList(Seq(
+        "generated" -> validRows.map(field("study_id")),
+        "skipped" -> rejectRows.map(r =>
+          Option(field("Accession")(r)).getOrElse("(no accession)")))
+      .collect { case (status, ids) if ids.nonEmpty => Row(status, ids.length.toLong,
+        ids.sortWith(DbGapXmlRenderer.compareUtf8(_, _) < 0).mkString("|"))
+      }: _*), summarySchema)
 
     // A9/K6: processing_summary.txt (write_summary, run_dbgap_xml_gen_
-    // fallback.py:80-161) — per-study status frame + the Gen3∩PicSure
-    // overlap, which is exactly the J8 prefix-scan membership (phs values
-    // harvested from ANY picsure column, first dot-part, ∩ gen3 ids)
+    // fallback.py:80-161) — per-study status frame + the overlap
     val perStudy = studies.select(col("study_id"),
         col("Accession").as("accession_id"),
         lit("SUCCESS").as("status"), lit("XML_generator").as("method"),
@@ -104,28 +170,12 @@ object BdcIngest {
         coalesce(col("Accession"), lit("(no accession)")).as("accession_id"),
         lit("FAILED").as("status"), lit("none").as("method"),
         col("reason").as("details")))
-    // Driver-side collect for the one-file report: ceiling-guarded like
-    // every other metadata-scale sink (DocumentSink.writeSingleCsv,
-    // KgxAssembler.toJsonDocument) so data-scale misuse raises, not OOMs.
-    // One action: the guard is the collect's own limit (a result longer
-    // than the ceiling ⇔ the overlap exceeds it); a probe count first
-    // would scan PicSure a second time. Only string columns are
-    // scanned: a `phs` id is text, and the typed columns the source adds
-    // (`values_arr` casts to "[…]", `is_categorical` to true/false) can
-    // never start with it, so casting them per row would find nothing.
-    val textCols = picsure.schema.fields.collect {
-      case f if f.dataType == StringType => f.name
-    }.toSeq
-    val overlapIds = Joins.prefixScanMembership(picsure, textCols,
-        "phs", studies.select(col("study_id")).distinct(), "study_id")
-      .limit(DocumentSink.probeLimit(maxOverlapIds))
-      .collect().map(_.getString(0)).toSeq
-    require(overlapIds.length <= maxOverlapIds,
-      s"overlap id list collects to the driver (> $maxOverlapIds rows); " +
-        "the study-id universe should be metadata-scale")
     val summaryText =
       SummaryReport.writeProcessingSummary(perStudy, overlapIds, outDir)
 
-    Result(studies, rejects, summary, summaryText)
+    val counts = Counts(rows.length.toLong, validRows.length.toLong,
+      rejectRows.groupBy(field("reason")).map { case (r, rs) => r -> rs.length.toLong },
+      picsureRows)
+    Result(studies, rejects, summary, summaryText, counts)
   }
 }

@@ -48,7 +48,7 @@ object DbGapXmlRenderer {
     * On well-formed strings (every string decoded from a Spark row is
     * one) that is code-point order, which this compares without encoding;
     * `String.compareTo` is UTF-16 order and differs above U+FFFF. */
-  private[render] def compareUtf8(x: String, y: String): Int =
+  private[graft] def compareUtf8(x: String, y: String): Int =
     if (x eq null) { if (y eq null) 0 else -1 }
     else if (y eq null) 1
     else {

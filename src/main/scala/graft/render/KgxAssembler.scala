@@ -50,7 +50,7 @@ object KgxAssembler {
     * range-sampling job), and a result longer than the ceiling ⇔ the frame
     * exceeds it. */
   def toJsonDocument(nodes: DataFrame, edges: DataFrame,
-                     maxRows: Long = 1000000L): String = {
+                     maxRows: Long = DocumentSink.MaxSingleFileRows): String = {
     def sortedJson(what: String, df: DataFrame, keys: String*): String = {
       val rows = df.orderBy(keys.map(col): _*)
         .limit(DocumentSink.probeLimit(maxRows)).toJSON.collect()

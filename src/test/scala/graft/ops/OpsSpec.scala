@@ -18,6 +18,11 @@ class OpsSpec extends SparkSpec {
     assert(valid.count() == 1)
     val r = rejects.select("reason").as[String].collect().sorted
     assert(r.sameElements(Array("missing Accession", "missing Consent")))
+    // the one-pass tag: the same reason on each row, null on a valid one
+    val tagged = Filters.validationTag(df, Seq("Accession", "Consent", "Name"))
+      .select("Name", "reason").as[(String, String)].collect().toSet
+    assert(tagged == Set(("Study A", null), ("Study B", "missing Accession"),
+      (null, "missing Consent")))
   }
 
   test("F4 skipSet excludes listed keys, no-ops on empty") {

@@ -145,25 +145,45 @@ class PipelinesSpec extends SparkSpec {
       "  1. phs000007 (phs000007.v32) - Reason: Generated from PicSure metadata"))
     assert(txt.contains("\nFailed studies:\n"))
     assert(txt.contains("(phs000285.v3) - Reason: missing Description"))
-    // Gen3∩PicSure overlap via J8 prefix-scan over ALL picsure columns
+    // Gen3∩PicSure overlap: phs ids harvested from ALL picsure text columns
     assert(txt.contains("Studies in both Gen3 and PicSure: 1"))
     assert(txt.contains("\nStudies found in both Gen3 and PicSure:\n  phs000007"))
+
+    // observed counts: 3 Gen3 rows, 4 PicSure rows past the clean rule
+    // (the varId-less row is dropped; the orphan is read)
+    assert(res.counts == BdcIngest.Counts(gen3Rows = 3L, validRows = 1L,
+      rejectsByReason = Map("missing Consent" -> 1L, "missing Description" -> 1L),
+      picsureRows = 4L))
   }
 
-  test("BdcIngest: the overlap ids are one guarded collect; the documents one write") {
+  test("BdcIngest: one Gen3 collect and one document write") {
     val out = Files.createTempDirectory("bdc_jobs").toString
     val gen3 = CsvSources.readGen3Studies(spark, s"$fixtures/gen3.csv")
     val pic = CsvSources.cleanPicsureVars(
       CsvSources.readPicsureVars(spark, s"$fixtures/picsure.csv"))
-    val actions = actionsOf(BdcIngest.run(spark, gen3, pic, out))
-    // one action per sink: the data-table and GapExchange documents in one
-    // write, the overlap ids in one collect guarded by its own limit (no
-    // probe `count`), the summary in one collect
+    var res: BdcIngest.Result = null
+    val observed = observe { res = BdcIngest.run(spark, gen3, pic, out) }
+    val actions = observed.actions
+    // Gen3 in one collect guarded by its own limit (no probe `count`); the
+    // data-table and GapExchange documents in one write whose PicSure scan
+    // also observes the overlap ids; the summary in one collect
     assert(actions.map(_._1) == Seq(
-      "foreachPartition at DocumentSink.scala",
       "collect at BdcIngest.scala",
+      "foreachPartition at DocumentSink.scala",
       "takeOrdered at SummaryReport.scala"), actions)
-    assert(actions.map(_._2).sum == 8, actions)
+    assert(actions.map(_._2).sum == 5, actions)
+    // Gen3 is read by the collect alone and PicSure by the write alone:
+    // the results and the write's broadcast side are local relations
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    val read = observed.plans.map(_.collectLeaves().flatMap {
+      case l: LogicalRelation => l.relation match {
+        case r: HadoopFsRelation => r.location.rootPaths.map(_.getName)
+        case _ => Nil
+      }
+      case _ => Nil
+    })
+    assert(read == Seq(Seq("gen3.csv"), Seq("picsure.csv")), observed.plans)
+    assert(Seq(res.valid, res.rejects, res.summary).forall(_.inputFiles.isEmpty))
     assert(Files.readString(Paths.get(out, "processing_summary.txt"))
       .contains("\nStudies found in both Gen3 and PicSure:\n  phs000007"))
   }
@@ -212,6 +232,77 @@ class PipelinesSpec extends SparkSpec {
       BdcIngest.run(spark, gen3, pic, out, maxOverlapIds = 0L)
     }
     assert(e.getMessage.contains("overlap id list"))
+  }
+
+  private val picsureHeader = "studyId,dtId,varId,derived_var_name,derived_group_name," +
+    "description,columnmeta_name,columnmeta_description,columnmeta_var_group_description," +
+    "is_categorical,values\n"
+
+  /** Runs the BDC lifecycle on `gen3Csv` (the fixture's by default) and a
+    * PicSure file holding `picsureCsv`, under a time limit that interrupts
+    * it: the overlap is an observation of the write's scan, and waiting on
+    * one that never reports would block for ever. */
+  private def bdcRun(name: String, picsureCsv: String, gen3Csv: Option[String] = None)
+      : (BdcIngest.Result, java.nio.file.Path) = {
+    import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
+    import org.scalatest.time.SpanSugar._
+    implicit val signaler: Signaler = ThreadSignaler
+    val dir = Files.createTempDirectory(name)
+    val pic = Files.writeString(dir.resolve("picsure.csv"), picsureCsv).toString
+    val gen3 = gen3Csv.fold(s"$fixtures/gen3.csv")(
+      Files.writeString(dir.resolve("gen3.csv"), _).toString)
+    val out = dir.resolve("out")
+    val res = TimeLimits.failAfter(120.seconds) {
+      BdcIngest.run(spark, CsvSources.readGen3Studies(spark, gen3),
+        CsvSources.cleanPicsureVars(CsvSources.readPicsureVars(spark, pic)), out.toString)
+    }
+    (res, out)
+  }
+
+  private def dataTables(out: java.nio.file.Path): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    Files.walk(out).iterator().asScala.map(_.getFileName.toString)
+      .filter(_.endsWith(".data_dict.xml")).toSeq
+  }
+
+  test("BdcIngest: no valid study: no data tables, no overlap, no wait") {
+    import scala.jdk.CollectionConverters._
+    // the fixture's header and its two rejected studies
+    val gen3 = Files.readAllLines(Paths.get(s"$fixtures/gen3.csv")).asScala
+    val (res, out) = bdcRun("bdc_none", Files.readString(Paths.get(s"$fixtures/picsure.csv")),
+      Some((gen3.head +: gen3.drop(2)).map(_ + "\n").mkString))
+    assert(res.counts == BdcIngest.Counts(2L, 0L,
+      Map("missing Consent" -> 1L, "missing Description" -> 1L), 0L))
+    assert(res.valid.count() == 0L && res.rejects.count() == 2L)
+    assert(res.summary.as[(String, Long, String)].collect().toSeq ==
+      Seq(("skipped", 2L, "phs000285.v3|phs002206.v2")))
+    assert(dataTables(out).isEmpty)
+    assert(res.processingSummary.contains("Successfully processed: 0"))
+    assert(res.processingSummary.contains("Studies in both Gen3 and PicSure: 0"))
+  }
+
+  test("BdcIngest: the overlap counts any row's valid phs ids, never a reject's") {
+    // no row joins a valid study: the overlap comes from an orphan row's
+    // group column (phs000007 is valid) and never from the description
+    // naming phs002206, which the validation rejected
+    val (res, out) = bdcRun("bdc_orphans", picsureHeader +
+      "phs999999,pht999000,phv99900001,ORPHAN,phs000007.v32,o,ORPHAN,o,G,False,\n" +
+      "phs999999,pht999000,phv99900002,REJ,g,phs002206.v2 follow-up,REJ,r,G,False,\n")
+    assert(res.counts.picsureRows == 2L)
+    assert(dataTables(out).isEmpty)
+    assert(Files.exists(out.resolve("topmed/phs000007.v32/GapExchange_phs000007.v32.xml")))
+    assert(res.processingSummary.contains("Studies in both Gen3 and PicSure: 1"))
+    assert(res.processingSummary.contains(
+      "\nStudies found in both Gen3 and PicSure:\n  phs000007\n"))
+  }
+
+  test("BdcIngest: a header-only PicSure file scans no row and finds no overlap") {
+    val (res, out) = bdcRun("bdc_empty", picsureHeader)
+    assert(res.counts == BdcIngest.Counts(3L, 1L,
+      Map("missing Consent" -> 1L, "missing Description" -> 1L), 0L))
+    assert(dataTables(out).isEmpty)
+    assert(Files.exists(out.resolve("topmed/phs000007.v32/GapExchange_phs000007.v32.xml")))
+    assert(res.processingSummary.contains("Studies in both Gen3 and PicSure: 0"))
   }
 
   test("PretrainCuration: gate → line dedup → fuzzy dedup → decontaminate → carve") {
