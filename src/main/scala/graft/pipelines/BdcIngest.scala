@@ -21,20 +21,24 @@ import graft.render.{DbGapXmlRenderer, DocumentSink, SummaryReport}
   *    never staged: holding it would cost heap in proportion to the
   *    variable count. Its single scan is the document write's. That write
   *    sends the data-table and GapExchange documents out over their union,
-  *    with one shuffle past the broadcast join (the renderer sorts each
-  *    document's rows by `varId` inside it, so no window numbers them).
+  *    with one shuffle past the broadcast join, which the renderer's
+  *    clustering on the document key asks for (it sorts each document's
+  *    rows by `varId` inside it, so no window numbers them).
   *    The same scan observes the Gen3∩PicSure overlap and the PicSure row
   *    count through `Dataset.observe`, so the overlap costs no second scan.
   */
 object BdcIngest {
 
-  /** What the run read, from the Gen3 collect and the PicSure scan's
-    * observation (no job of their own). `picsureRows` counts the rows of
-    * the `picsure` frame as passed in; it is 0 when no study is valid,
-    * since the document write then has no variable to join and skips the
-    * PicSure scan. */
+  /** What the run read and wrote, from the Gen3 collect, the PicSure
+    * scan's observation and the document write's accumulator (no job of
+    * their own). `picsureRows` counts the rows of the `picsure` frame as
+    * passed in; it is 0 when no study is valid, since the document write
+    * then has no variable to join and skips the PicSure scan.
+    * `documentsByDir` counts the data-table and GapExchange documents
+    * written per program dir. */
   case class Counts(gen3Rows: Long, validRows: Long,
-                    rejectsByReason: Map[String, Long], picsureRows: Long)
+                    rejectsByReason: Map[String, Long], picsureRows: Long,
+                    documentsByDir: Map[String, Long])
 
   case class Result(valid: DataFrame, rejects: DataFrame, summary: DataFrame,
                     processingSummary: String, counts: Counts)
@@ -123,7 +127,7 @@ object BdcIngest {
     // companion GapExchange study frame per study (xml_generator.py:63-109),
     // in the same normalized program dir as the data tables; both document
     // kinds go out in one write
-    DocumentSink.writeDocuments(
+    val documents = DocumentSink.writeDocuments(
       DbGapXmlRenderer.renderDataTables(renderInput).union(
         DbGapXmlRenderer.renderGapExchange(studies.select(
           col("Accession").as("study_id"),
@@ -175,7 +179,7 @@ object BdcIngest {
 
     val counts = Counts(rows.length.toLong, validRows.length.toLong,
       rejectRows.groupBy(field("reason")).map { case (r, rs) => r -> rs.length.toLong },
-      picsureRows)
+      picsureRows, documents)
     Result(studies, rejects, summary, summaryText, counts)
   }
 }

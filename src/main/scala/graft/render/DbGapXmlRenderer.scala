@@ -1,19 +1,22 @@
 package graft.render
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row}
 import org.apache.spark.sql.functions._
 
 /** dbGaP XML document rendering (SURVEY.md K3).
   *
   * The reference builds one `data_table` XML document per (study,
   * data-table) group with ElementTree (xml_generator.py:111-186,
-  * get_heal_platform_mds_data_dicts.py:302-499). Spark-first shape: one
-  * shuffle on `(dt_id, study_id)` with a sort inside each partition
-  * brings each document's rows together, in order, ON THE EXECUTORS; a
-  * `mapPartitions` pass then folds each run of equal keys into its XML
-  * string — one row per document, fully distributed, no driver collect,
-  * and one document in memory per task. The sink ([[DocumentSink]])
-  * writes each (path, content) row from `foreachPartition`.
+  * get_heal_platform_mds_data_dicts.py:302-499). Spark-first shape: the
+  * renderer groups on `(dt_id, study_id)` with each group's rows sorted
+  * (`flatMapSortedGroups`), so it requires its input clustered on the
+  * document key and Spark plans a shuffle only when the input is not
+  * already: one exchange for BDC's joined PicSure rows, none for HEAL's
+  * index, staged hash-partitioned on the same key. Each group folds into
+  * its XML string ON THE EXECUTORS — one row per document, fully
+  * distributed, no driver collect, and one document in memory per task.
+  * The sink ([[DocumentSink]]) writes each (path, content) row from
+  * `foreachPartition`.
   *
   * Exact-layout notes (SURVEY.md §7.4): element order and the stylesheet
   * header match the reference's writer; tests compare canonicalized XML.
@@ -83,50 +86,43 @@ object DbGapXmlRenderer {
     * Returns (path, content) rows: one XML document per (dt_id, study_id).
     * Variables come out in (pos, var_id, …, values) order; the header's
     * study_name, group_description and path_prefix are each the group's
-    * `min`.
+    * `min`. Input already clustered on the document key (hash-partitioned
+    * on `(dt_id, study_id)` or on a subset of it) is rendered without an
+    * exchange.
     */
   def renderDataTables(vars: DataFrame, participantSet: Int = 1): Dataset[(String, String)] = {
-    val spark = vars.sparkSession
-    import spark.implicits._
-    // the document key, then the variable's fields from pos on: a tie in
-    // pos falls to the later fields, ascending, nulls first (struct order)
-    val sortKeys = Seq("dt_id", "study_id") ++ Columns.drop(Columns.indexOf("pos"))
-    vars.select(Columns.map(col): _*)
-      .repartition(col("dt_id"), col("study_id"))
-      .sortWithinPartitions(sortKeys.map(col): _*)
-      .mapPartitions { rows =>
-        val in = rows.buffered
-        new Iterator[(String, String)] {
-          def hasNext: Boolean = in.hasNext
-          def next(): (String, String) = {
-            val dtId = in.head.getString(0)
-            val studyId = in.head.getString(1)
-            var studyName: String = null
-            var desc: String = null
-            var prefix: String = null
-            val body = new java.lang.StringBuilder
-            while (in.hasNext && java.util.Objects.equals(in.head.getString(0), dtId) &&
-                java.util.Objects.equals(in.head.getString(1), studyId)) {
-              val r = in.next()
-              studyName = minUtf8(studyName, r.getString(2))
-              desc = minUtf8(desc, r.getString(3))
-              prefix = minUtf8(prefix, r.getString(4))
-              appendVariable(body, r)
-            }
-            val doc = new java.lang.StringBuilder(body.length + 512)
-            doc.append("<?xml version=\"1.0\" encoding=\"UTF-8\"?>\n")
-              .append("<?xml-stylesheet type=\"text/xsl\" href=\"./datadict_v2.xsl\"?>\n")
-              .append("<data_table id=\"").append(escape(dtId))
-              .append("\" study_id=\"").append(escape(studyId))
-              .append("\" participant_set=\"").append(participantSet)
-              .append("\" study_name=\"").append(escape(studyName)).append("\">\n")
-            if (desc != null)
-              doc.append("  <description>").append(escape(desc)).append("</description>\n")
-            doc.append(body).append("</data_table>\n")
-            (s"${Option(prefix).getOrElse("")}$studyId/$dtId.data_dict.xml", doc.toString)
+    val input = vars.select(Columns.map(col): _*)
+    // within a document: the variable's fields from pos on, ascending,
+    // nulls first, so a tie in pos falls to the later fields (struct order)
+    input.groupBy(col("dt_id"), col("study_id"))
+      .as[(String, String), Row](Encoders.tuple(Encoders.STRING, Encoders.STRING),
+        Encoders.row(input.schema))
+      .flatMapSortedGroups(Columns.drop(Columns.indexOf("pos")).map(col): _*) {
+        (key: (String, String), rows: Iterator[Row]) =>
+          val (dtId, studyId) = key
+          var studyName: String = null
+          var desc: String = null
+          var prefix: String = null
+          val body = new java.lang.StringBuilder
+          rows.foreach { r =>
+            studyName = minUtf8(studyName, r.getString(2))
+            desc = minUtf8(desc, r.getString(3))
+            prefix = minUtf8(prefix, r.getString(4))
+            appendVariable(body, r)
           }
-        }
-      }
+          val doc = new java.lang.StringBuilder(body.length + 512)
+          doc.append("<?xml version=\"1.0\" encoding=\"UTF-8\"?>\n")
+            .append("<?xml-stylesheet type=\"text/xsl\" href=\"./datadict_v2.xsl\"?>\n")
+            .append("<data_table id=\"").append(escape(dtId))
+            .append("\" study_id=\"").append(escape(studyId))
+            .append("\" participant_set=\"").append(participantSet)
+            .append("\" study_name=\"").append(escape(studyName)).append("\">\n")
+          if (desc != null)
+            doc.append("  <description>").append(escape(desc)).append("</description>\n")
+          doc.append(body).append("</data_table>\n")
+          Iterator.single(
+            (s"${Option(prefix).getOrElse("")}$studyId/$dtId.data_dict.xml", doc.toString))
+      }(Encoders.tuple(Encoders.STRING, Encoders.STRING))
   }
 
   /** One `<variable>` element of a [[renderDataTables]] input row. */

@@ -1,7 +1,13 @@
 package graft.render
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.json.{JSONOptions, JacksonGenerator}
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
+import graft.model.{KgxEdge, KgxNode}
 
 /** KGX property-graph assembly (SURVEY.md K2, A8).
   *
@@ -11,7 +17,9 @@ import org.apache.spark.sql.functions._
   * node per row, and `related_to` edges consent→study. Spark-first: nodes
   * and edges are two DataFrames (exactly the GraphFrames model);
   * [[toJsonDocument]] renders the reference's single-doc layout for
-  * metadata-scale parity.
+  * metadata-scale parity. A caller that already holds its graph on the
+  * driver (HEAL: the staged dictionary rows) renders the same bytes with
+  * [[jsonDocument]], which runs no Spark job.
   */
 object KgxAssembler {
 
@@ -62,6 +70,48 @@ object KgxAssembler {
     val nodeJson = sortedJson("nodes", nodes, "id")
     val edgeJson = sortedJson("edges", edges, "subject", "object")
     s"""{"nodes":[$nodeJson],"edges":[$edgeJson]}"""
+  }
+
+  /** [[toJsonDocument]] over a graph held on the driver: the same bytes,
+    * with no Spark job. Nodes are sorted by id and edges by (subject,
+    * object), in Spark's string order ([[DbGapXmlRenderer.compareUtf8]]:
+    * code points, nulls first; ties keep their given order), and each row
+    * is written by the JSON generator `Dataset.toJSON` uses, over the
+    * model's columns: a null or `None` field is omitted. */
+  def jsonDocument(nodes: Seq[KgxNode], edges: Seq[KgxEdge]): String = {
+    def utf8(s: String): UTF8String = if (s == null) null else UTF8String.fromString(s)
+    val nodeRows = nodes.sortWith((a, b) => DbGapXmlRenderer.compareUtf8(a.id, b.id) < 0)
+      .map(n => InternalRow(utf8(n.id), utf8(n.name),
+        if (n.categories == null) null
+        else new GenericArrayData(n.categories.map(utf8).toArray[Any]),
+        n.description.map(utf8).orNull, n.iri.map(utf8).orNull, n.program.map(utf8).orNull))
+    val edgeRows = edges.sortWith { (a, b) =>
+        val c = DbGapXmlRenderer.compareUtf8(a.subject, b.subject)
+        (if (c != 0) c else DbGapXmlRenderer.compareUtf8(a.`object`, b.`object`)) < 0
+      }.map(e => InternalRow(utf8(e.subject), utf8(e.predicate), utf8(e.`object`)))
+    s"""{"nodes":[${jsonRows(NodeSchema, nodeRows)}],"edges":[${jsonRows(EdgeSchema, edgeRows)}]}"""
+  }
+
+  private def str(name: String): StructField = StructField(name, StringType)
+  private val NodeSchema = StructType(Seq(str("id"), str("name"),
+    StructField("categories", ArrayType(StringType)), str("description"), str("iri"),
+    str("program")))
+  private val EdgeSchema = StructType(Seq(str("subject"), str("predicate"), str("object")))
+
+  /** Rows as `Dataset.toJSON` writes them, comma-joined: one generator
+    * over a buffer that is flushed and reset after each row. */
+  private def jsonRows(schema: DataType, rows: Seq[InternalRow]): String = {
+    val out = new java.io.CharArrayWriter
+    val gen = new JacksonGenerator(schema, out, new JSONOptions(Map.empty[String, String], "UTC"))
+    val json = rows.map { r =>
+      gen.write(r)
+      gen.flush()
+      val one = out.toString
+      out.reset()
+      one
+    }
+    gen.close()
+    json.mkString(",")
   }
 
   /** Distributed sink: nodes/edges as JSON-lines datasets. */

@@ -13,7 +13,8 @@ import graft.ops.Projections
   *  - field aliases: `name`←`property`, `section`←`module`←`node` via
   *    `coalesce` over the parsed struct;
   *  - 404-stub dicts (`{"@id":…, "error":…, "fields":[]}`) stay as
-  *    quarantine rows (error IS NOT NULL) — F9 semantics;
+  *    quarantine rows (error IS NOT NULL) — F9 semantics — and so do
+  *    dicts without a study id or an `@id` ([[skipReason]]);
   *  - `enumLabels` (newer map form) preferred over packed
   *    `constraints.encodings` — both emitted packed `k=v|k=v` (P12);
   *  - absent fields become typed nulls (schema evolves across harvests,
@@ -92,11 +93,21 @@ object MdsJsonSource {
   def variableIndex(studies: DataFrame): DataFrame =
     variableIndexOf(dataDictionaries(studies))
 
+  /** Why a [[dataDictionaries]] row stays out of the variable index, or
+    * null when it goes in. The first that holds: no study id (no
+    * `_hdp_uid`), no dictionary id (no `@id`) — either would name a
+    * `null` document path shared by every such dictionary — or the
+    * harvest's error (F9: a 404 stub). */
+  val skipReason: Column =
+    when(col("study_id").isNull, lit("missing study id (_hdp_uid)"))
+      .when(col("dd_id").isNull, lit("missing dictionary id (@id)"))
+      .otherwise(col("dd_error"))
+
   /** [[variableIndex]] over an already-built [[dataDictionaries]] frame,
     * so a caller that stages the dictionaries parses the JSON once for the
     * index and everything else it derives from them. */
   def variableIndexOf(dds: DataFrame): DataFrame = {
-    val ok = dds.filter(col("dd_error").isNull) // F9 quarantine split
+    val ok = dds.filter(skipReason.isNull) // F9 quarantine split
     val vars = ok.select(col("study_id"), col("dd_id"),
       posexplode(col("fields")).as(Seq("pos", "f")))
     def f(path: String): Column = fieldOrNull(vars, s"f.$path")

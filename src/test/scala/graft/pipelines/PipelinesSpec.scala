@@ -3,6 +3,7 @@ package graft.pipelines
 import graft.SparkSpec
 import graft.sources.{CsvSources, MdsJsonSource, XmlDictSource}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 
@@ -18,8 +19,11 @@ class PipelinesSpec extends SparkSpec {
     * execution (schema inference) count as actions of their own. Under
     * adaptive execution the jobs of one action run on other threads and
     * carry no useful call site, but they all carry its execution id.
-    * Job counts are those of the spec session's 4 cores. */
-  private case class Observed(actions: Seq[(String, Int)], plans: Seq[LogicalPlan])
+    * `executed` holds each such action's final physical plan (adaptive
+    * query stages included). Job counts are those of the spec session's 4
+    * cores. */
+  private case class Observed(actions: Seq[(String, Int)], plans: Seq[LogicalPlan],
+                              executed: Seq[SparkPlan])
 
   private def actionsOf(body: => Unit): Seq[(String, Int)] = observe(body).actions
 
@@ -31,6 +35,7 @@ class PipelinesSpec extends SparkSpec {
     val group = s"pipelines_${System.nanoTime()}"
     val executions = new java.util.concurrent.ConcurrentHashMap[String, String]()
     val plans = new java.util.concurrent.ConcurrentHashMap[String, LogicalPlan]()
+    val executed = new java.util.concurrent.ConcurrentHashMap[String, SparkPlan]()
     val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String, String)]()
     @volatile var barrierSeen = false
     val listener = new SparkListener {
@@ -41,7 +46,10 @@ class PipelinesSpec extends SparkSpec {
           // every execution's end event carries its QueryExecution, named
           // or not (`qe` is private[sql], hence the reflective read)
           val qe = s.getClass.getMethod("qe").invoke(s).asInstanceOf[QueryExecution]
-          if (qe != null) plans.put(s.executionId.toString, qe.analyzed)
+          if (qe != null) {
+            plans.put(s.executionId.toString, qe.analyzed)
+            executed.put(s.executionId.toString, qe.executedPlan)
+          }
         case _ =>
       }
       override def onJobStart(j: SparkListenerJobStart): Unit = {
@@ -70,8 +78,9 @@ class PipelinesSpec extends SparkSpec {
       if (exec.isEmpty) s"job $id" -> site.replaceAll(":\\d+$", "")
       else exec -> executions.getOrDefault(exec, "?")
     }
+    val sqlIds = keys.distinct.collect { case (id, _) if !id.startsWith("job ") => id }
     Observed(keys.distinct.map { k => k._2 -> keys.count(_ == k) },
-      keys.distinct.collect { case (id, _) if !id.startsWith("job ") => plans.get(id) })
+      sqlIds.map(plans.get), sqlIds.map(executed.get))
   }
 
   /** The expressions whose UTF8_BINARY evaluation calls into Spark 4.1's
@@ -151,9 +160,11 @@ class PipelinesSpec extends SparkSpec {
 
     // observed counts: 3 Gen3 rows, 4 PicSure rows past the clean rule
     // (the varId-less row is dropped; the orphan is read)
+    // and 3 documents written, all in the one program dir: 2 data tables
+    // and the GapExchange frame
     assert(res.counts == BdcIngest.Counts(gen3Rows = 3L, validRows = 1L,
       rejectsByReason = Map("missing Consent" -> 1L, "missing Description" -> 1L),
-      picsureRows = 4L))
+      picsureRows = 4L, documentsByDir = Map("topmed" -> 3L)))
   }
 
   test("BdcIngest: one Gen3 collect and one document write") {
@@ -272,7 +283,7 @@ class PipelinesSpec extends SparkSpec {
     val (res, out) = bdcRun("bdc_none", Files.readString(Paths.get(s"$fixtures/picsure.csv")),
       Some((gen3.head +: gen3.drop(2)).map(_ + "\n").mkString))
     assert(res.counts == BdcIngest.Counts(2L, 0L,
-      Map("missing Consent" -> 1L, "missing Description" -> 1L), 0L))
+      Map("missing Consent" -> 1L, "missing Description" -> 1L), 0L, Map.empty))
     assert(res.valid.count() == 0L && res.rejects.count() == 2L)
     assert(res.summary.as[(String, Long, String)].collect().toSeq ==
       Seq(("skipped", 2L, "phs000285.v3|phs002206.v2")))
@@ -289,6 +300,7 @@ class PipelinesSpec extends SparkSpec {
       "phs999999,pht999000,phv99900001,ORPHAN,phs000007.v32,o,ORPHAN,o,G,False,\n" +
       "phs999999,pht999000,phv99900002,REJ,g,phs002206.v2 follow-up,REJ,r,G,False,\n")
     assert(res.counts.picsureRows == 2L)
+    assert(res.counts.documentsByDir == Map("topmed" -> 1L)) // the GapExchange frame
     assert(dataTables(out).isEmpty)
     assert(Files.exists(out.resolve("topmed/phs000007.v32/GapExchange_phs000007.v32.xml")))
     assert(res.processingSummary.contains("Studies in both Gen3 and PicSure: 1"))
@@ -299,7 +311,7 @@ class PipelinesSpec extends SparkSpec {
   test("BdcIngest: a header-only PicSure file scans no row and finds no overlap") {
     val (res, out) = bdcRun("bdc_empty", picsureHeader)
     assert(res.counts == BdcIngest.Counts(3L, 1L,
-      Map("missing Consent" -> 1L, "missing Description" -> 1L), 0L))
+      Map("missing Consent" -> 1L, "missing Description" -> 1L), 0L, Map("topmed" -> 1L)))
     assert(dataTables(out).isEmpty)
     assert(Files.exists(out.resolve("topmed/phs000007.v32/GapExchange_phs000007.v32.xml")))
     assert(res.processingSummary.contains("Studies in both Gen3 and PicSure: 0"))
@@ -381,6 +393,12 @@ class PipelinesSpec extends SparkSpec {
     assert(res.kgxJson.contains(""""id":"HDP00002""""))
     assert(res.kgxJson.contains(""""id":"HEALCDE:dd-1""""))
     assert(res.kgxJson.contains(""""predicate":"biolink:related_to""""))
+
+    // observed counts: 3 dictionaries (one a 404 stub), 4 variables, one
+    // document per study-type dir
+    assert(res.counts == HealIngest.Counts(dictionaries = 3L,
+      skippedByReason = Map("404 not found" -> 1L), variables = 4L,
+      documentsByDir = Map("heal_research_network" -> 1L, "heal_studies" -> 1L)))
   }
 
   test("HealIngest: each source parsed once; one action per driver-funnelled sink") {
@@ -391,15 +409,72 @@ class PipelinesSpec extends SparkSpec {
     assert(actions.map(_._1) == Seq(
       "json at MdsJsonSource.scala", // schema inference
       "localCheckpoint at HealIngest.scala", // the dictionaries: the one parse
+      "collect at HealIngest.scala", // dictionary rows: KGX, skip report, CSV ceiling
       "localCheckpoint at HealIngest.scala", // the uniquified index
-      "count at DocumentSink.scala", // CSV ceiling probe
       "csv at DocumentSink.scala",
-      "foreachPartition at DocumentSink.scala", // XML documents
-      "collect at KgxAssembler.scala", // nodes: one guarded top-k each
-      "collect at KgxAssembler.scala"), actions) // edges
-    assert(actions.map(_._2).sum == 13, actions)
+      "foreachPartition at DocumentSink.scala"), actions) // XML documents
+    assert(actions.map(_._2).sum == 7, actions)
     // the results read the stages, not the JSON
     assert(res.variableIndex.inputFiles.isEmpty && res.skippedDds.inputFiles.isEmpty)
+  }
+
+  test("HealIngest: the variables are shuffled once, for the window and the documents") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.execution.window.WindowExec
+    val out = Files.createTempDirectory("heal_plan").toString
+    val mapping = CsvSources.readHdpidMapping(spark, s"$fixtures/mapping.csv")
+    val run = observe(HealIngest.run(spark, s"$fixtures/mds", mapping, out))
+    assert(run.executed.nonEmpty && !run.executed.contains(null), run)
+    object Stages extends AdaptiveSparkPlanHelper
+    val shuffles = run.executed.map(p => Stages.collect(p) { case e: ShuffleExchangeLike => e })
+    assert(shuffles.flatten.size == 1, run.executed)
+    // the one exchange is the index staging's, which also holds the window
+    val staging = run.executed(shuffles.indexWhere(_.nonEmpty))
+    assert(Stages.collect(staging) { case w: WindowExec => w }.size == 1, staging)
+    assert(Files.exists(Paths.get(out,
+      "xml/heal_research_network/HDP00002/HEALCDE:dd-1.data_dict.xml")))
+  }
+
+  test("HealIngest: a dictionary without a study id or an @id is quarantined") {
+    val out = Paths.get(Files.createTempDirectory("heal_ids").toString)
+    val mapping = CsvSources.readHdpidMapping(spark, s"$fixtures/mapping.csv")
+    val res = HealIngest.run(spark, s"$fixtures/mds_ids", mapping, out.toString)
+    // only the dictionary with both ids is indexed and written
+    assert(res.variableIndex.select("name").as[String].collect().toSeq == Seq("sleep_hours"))
+    import scala.jdk.CollectionConverters._
+    val written = Files.walk(out.resolve("xml")).iterator().asScala
+      .filter(Files.isRegularFile(_)).map(out.resolve("xml").relativize(_).toString).toSeq
+    assert(written == Seq("heal_studies/HDP00003/HEALCDE:dd-3.data_dict.xml"), written)
+    assert(res.skippedDds.as[(String, String, String)].collect().toSet == Set(
+      ("HDP00003", null, "missing dictionary id (@id)"),
+      (null, "HEALCDE:dd-9", "missing study id (_hdp_uid)")))
+    // every KGX node has an id, and no edge leaves an id-less dictionary
+    assert(res.kgxJson == """{"nodes":[{"id":"HDP00003","name":"HDP00003",""" +
+      """"categories":["biolink:Study"]},{"id":"HEALCDE:dd-3","name":"Sleep CRF",""" +
+      """"categories":["biolink:InformationResource"]}],"edges":[{"subject":"HEALCDE:dd-3",""" +
+      """"predicate":"biolink:related_to","object":"HDP00003"}]}""", res.kgxJson)
+    assert(res.counts == HealIngest.Counts(3L, Map("missing dictionary id (@id)" -> 1L,
+      "missing study id (_hdp_uid)" -> 1L), 1L, Map("heal_studies" -> 1L)))
+  }
+
+  test("HealIngest: studies without dictionaries write an empty index and graph") {
+    import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
+    import org.scalatest.time.SpanSugar._
+    implicit val signaler: Signaler = ThreadSignaler
+    val dir = Files.createTempDirectory("heal_none")
+    Files.createDirectories(dir.resolve("mds"))
+    Files.writeString(dir.resolve("mds/HDP00009.json"),
+      """{"gen3_discovery": {"_hdp_uid": "HDP00009", "project_title": "No dicts"}}""")
+    val mapping = CsvSources.readHdpidMapping(spark, s"$fixtures/mapping.csv")
+    // the dictionary count is an observation: a wait on one that never
+    // reports would block for ever
+    val res = TimeLimits.failAfter(120.seconds) {
+      HealIngest.run(spark, dir.resolve("mds").toString, mapping, dir.resolve("out").toString)
+    }
+    assert(res.counts == HealIngest.Counts(0L, Map.empty, 0L, Map.empty))
+    assert(res.variableIndex.count() == 0L && res.skippedDds.count() == 0L)
+    assert(res.kgxJson == """{"nodes":[],"edges":[]}""")
   }
 
   test("BDC and HEAL ingests never reach the collation layer's ICU case-map table") {

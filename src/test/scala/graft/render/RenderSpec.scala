@@ -207,6 +207,41 @@ class RenderSpec extends SparkSpec {
     assert(doc.contains(""""subject":"phs1.c1","predicate":"biolink:related_to","object":"phs1""""))
   }
 
+  test("renderDataTables: input clustered on the document key plans no exchange") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.{ENSURE_REQUIREMENTS, REPARTITION_BY_COL,
+      REPARTITION_BY_NUM, ShuffleExchangeLike}
+    object Stages extends AdaptiveSparkPlanHelper
+    val vars = Seq(
+      ("pht1", "phs1", "s1", "g", "", 2, "v2", "n2"),
+      ("pht1", "phs1", "s1", "g", "", 1, "v1", "n1"),
+      ("pht2", "phs1", "s1", null, "", 1, "w1", "m1"),
+      ("pht1", "phs2", "s2", null, "", 1, "u1", "k1"))
+      .toDF("dt_id", "study_id", "study_name", "group_description", "path_prefix", "pos",
+        "var_id", "var_name")
+      .select(col("*"), lit(null).cast("string").as("var_title"),
+        lit(null).cast("string").as("var_description"), lit("string").as("var_type"),
+        lit(null).cast("array<struct<code:string,label:string>>").as("values"))
+      .repartition(3) // round-robin: clustered on nothing
+    def shuffles(df: org.apache.spark.sql.Dataset[_]): Seq[ShuffleExchangeLike] = {
+      df.collect()
+      Stages.collect(df.queryExecution.executedPlan) { case e: ShuffleExchangeLike => e }
+    }
+    val expected = DbGapXmlRenderer.renderDataTables(vars).collect().toSet
+    assert(expected.size == 3)
+    // clustered on the key, or on a part of it: the input's own exchange
+    // (which replaces the round-robin one) is the only one
+    for (keys <- Seq(Seq("dt_id", "study_id"), Seq("study_id", "dt_id"), Seq("study_id"))) {
+      val docs = DbGapXmlRenderer.renderDataTables(vars.repartition(keys.map(col): _*))
+      assert(shuffles(docs).map(_.shuffleOrigin) == Seq(REPARTITION_BY_COL),
+        s"$keys: ${docs.queryExecution.executedPlan}")
+      assert(docs.collect().toSet == expected)
+    }
+    // unclustered input: exactly the one exchange the grouping asks for
+    assert(shuffles(DbGapXmlRenderer.renderDataTables(vars)).map(_.shuffleOrigin).toSet ==
+      Set(ENSURE_REQUIREMENTS, REPARTITION_BY_NUM))
+  }
+
   test("P18 composition: XML read -> field rewrite -> re-render") {
     // the reference mutates StudyNameEntrez in a parsed tree
     // (get_dbgap_data_dicts.py:24-42); our equivalent is scan -> join new
@@ -295,6 +330,43 @@ class RenderSpec extends SparkSpec {
       """{"subject":"n1","predicate":"biolink:related_to","object":"n1"},""" +
       """{"subject":"n1","predicate":"biolink:related_to","object":"n2"},""" +
       """{"subject":"n3","predicate":"biolink:related_to","object":"n1"}]}""", doc)
+  }
+
+  test("jsonDocument: the driver-rendered document equals the toJSON path byte for byte") {
+    import graft.model.{KgxEdge, KgxNode}
+    def node(id: String, name: String, cats: Seq[String] = Seq("biolink:Study"),
+             iri: Option[String] = None) = KgxNode(id, name, cats, None, iri, None)
+    val nodes = Seq(
+      node("b", null), // a null name is omitted
+      node("q\"uote", "back\\slash \"both\""),
+      node("ctl\u0001\t\n\r\b\f\u001f", "\u0000 nul and \u007f del"),
+      node("\uffff", "U+FFFF sorts before every non-BMP id"),
+      node("\ud83d\ude00", "😀 non-BMP", Seq("biolink:A", "biolink:B")),
+      node("～", "fullwidth tilde"),
+      node("a", "é ünïcode </script> & <b>", Seq.empty, iri = Some("https://x/a?b=1&c=2")),
+      node(null, "a null id sorts first"),
+      node("c", "no categories", cats = null))
+    val edges = Seq(
+      KgxEdge("b", "biolink:related_to", "a"),
+      KgxEdge("\ud83d\ude00", "biolink:related_to", "\uffff"),
+      KgxEdge("a", "biolink:related_to", "\\"),
+      KgxEdge("a", "biolink:related_to", "\""),
+      KgxEdge(null, "biolink:related_to", "b"),
+      KgxEdge("\uffff", null, null))
+    val oracle = KgxAssembler.toJsonDocument(nodes.toDS().toDF(), edges.toDS().toDF())
+    val doc = KgxAssembler.jsonDocument(nodes, edges)
+    assert(doc == oracle)
+    // the oracle's order and omissions, spelled out
+    assert(doc.startsWith("""{"nodes":[{"name":"a null id sorts first","categories":["""))
+    assert(doc.contains("""{"id":"b","categories":["biolink:Study"]}"""))
+    assert(doc.indexOf("\uffff") < doc.indexOf("\ud83d\ude00"))
+    assert(doc.contains("""{"id":"c","name":"no categories"}"""))
+    assert(doc.contains("\"id\":\"ctl\\u0001\\t\\n\\r\\b\\f\\u001F\""), doc)
+    // nothing to sort or write: two empty lists, as the toJSON path renders them
+    val none = KgxAssembler.toJsonDocument(Seq.empty[KgxNode].toDS().toDF(),
+      Seq.empty[KgxEdge].toDS().toDF())
+    assert(KgxAssembler.jsonDocument(Nil, Nil) == none)
+    assert(none == """{"nodes":[],"edges":[]}""")
   }
 
   test("K4 partitioned layout: null partition values become __missing__") {
