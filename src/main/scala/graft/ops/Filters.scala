@@ -22,28 +22,23 @@ object Filters {
     df.filter(mask)
   }
 
-  /** F2 — required-fields validation split. Returns (valid, rejects-with-reason).
-    * A row is rejected with the FIRST missing field as reason, mirroring the
-    * reference's per-field skip report.
+  /** F2 — required-fields validation split. Returns (valid, rejects-with-reason):
+    * the two sides of [[validationTag]].
     * Ref: get_bdc_studies_md_from_gen3.py:186-219. */
   def validationSplit(df: DataFrame, required: Seq[String]): (DataFrame, DataFrame) = {
-    val anyMissing = required.map(missing).reduce(_ || _)
-    (df.filter(!anyMissing), df.filter(anyMissing).withColumn("reason", firstReason(required)))
+    val tagged = validationTag(df, required)
+    (tagged.filter(col("reason").isNull).drop("reason"), tagged.filter(col("reason").isNotNull))
   }
 
-  /** F2 in one pass: every row of `df` with a `reason` column that holds
-    * [[validationSplit]]'s reject reason, null on a valid row. */
+  /** F2 in one pass: every row of `df` with a `reason` column, null on a
+    * valid row. A row is invalid when a required field is null or blank,
+    * and its reason is "missing <field>" for the FIRST such field, mirroring
+    * the reference's per-field skip report in its loop order. */
   def validationTag(df: DataFrame, required: Seq[String]): DataFrame =
-    df.withColumn("reason", firstReason(required))
-
-  private def missing(c: String): Column = col(c).isNull || trim(col(c).cast("string")) === ""
-
-  /** "missing <field>" for the first missing field, else null: the first
-    * missing column wins, mirroring the reference's loop order. */
-  private def firstReason(required: Seq[String]): Column =
-    required.foldRight(lit(null).cast("string")) { (c, acc) =>
-      when(missing(c), lit(s"missing $c")).otherwise(acc)
-    }
+    df.withColumn("reason", required.foldRight(lit(null).cast("string")) { (c, acc) =>
+      when(col(c).isNull || trim(col(c).cast("string")) === "", lit(s"missing $c"))
+        .otherwise(acc)
+    })
 
   /** F4 — skip-set exclusion (NOT IN over a small driver-known set).
     * Ref: get_dbgap_data_dicts.py:144,168,223-228. */

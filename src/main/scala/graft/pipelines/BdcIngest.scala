@@ -10,13 +10,14 @@ import graft.render.{DbGapXmlRenderer, DocumentSink, SummaryReport}
   * → validation split → equi-join → per-data-table XML documents
   * partitioned by normalized program dir + summary report.
   *
-  * Two actions plus the summary's `takeOrdered`, instead of the
-  * reference's CSV-file handoffs between processes (ingest.sh:45-64):
+  * Two actions, instead of the reference's CSV-file handoffs between
+  * processes (ingest.sh:45-64):
   *  - Gen3 is metadata scale (one row per study), so it is scanned once,
   *    each row tagged with its first missing field, and collected in one
-  *    ceiling-guarded action. The valid studies, the rejects, the status
-  *    summary and the per-study report frame are local relations built
-  *    from those rows: no later action re-reads Gen3.
+  *    ceiling-guarded action. The valid studies, the rejects and the
+  *    status summary are local relations built from those rows, and
+  *    `processing_summary.txt` renders from the rows themselves: no later
+  *    action re-reads Gen3 and no report starts a job.
   *  - PicSure (one row per variable) is the one data-scale input and is
   *    never staged: holding it would cost heap in proportion to the
   *    variable count. Its single scan is the document write's. That write
@@ -55,11 +56,10 @@ object BdcIngest {
     * already cleaned). Writes XML docs under `outDir/<program>/<study>/`
     * and returns the report DataFrames (local relations over the collected
     * Gen3 rows). The driver-side Gen3 collect is ceilinged at
-    * `DocumentSink.MaxSingleFileRows` rows and the overlap-id list at
-    * `maxOverlapIds` (both are metadata-scale by contract). */
-  def run(spark: SparkSession, gen3: DataFrame, picsure: DataFrame,
-          outDir: String,
-          maxOverlapIds: Long = DocumentSink.MaxSingleFileRows): Result = {
+    * `DocumentSink.MaxSingleFileRows` rows (metadata-scale by contract);
+    * the overlap ids are valid study ids, so that ceiling bounds them
+    * too. */
+  def run(spark: SparkSession, gen3: DataFrame, picsure: DataFrame, outDir: String): Result = {
     // F2 validation tag (null reason = valid) + P1/P9 join key and program
     // directory name, in one Gen3 scan and one guarded collect
     val tagged = Filters.validationTag(gen3, requiredStudyFields)
@@ -71,6 +71,7 @@ object BdcIngest {
       s"Gen3 study list collects to the driver (> $maxStudies rows); " +
         "the study list should be metadata-scale")
     def field(name: String)(r: Row): String = r.getAs[String](name)
+    def accession(r: Row): String = Option(field("Accession")(r)).getOrElse("(no accession)")
     val (validRows, rejectRows) = rows.partition(field("reason")(_) == null)
     val local = spark.createDataFrame(java.util.Arrays.asList(rows: _*), tagged.schema)
     val studies = local.filter(col("reason").isNull).drop("reason")
@@ -149,33 +150,25 @@ object BdcIngest {
         (m("rows").asInstanceOf[Long], textCols.indices.flatMap(i =>
           m(s"ids_$i").asInstanceOf[scala.collection.Seq[String]]).distinct)
       }
-    require(overlapIds.length <= maxOverlapIds,
-      s"overlap id list collects to the driver (> $maxOverlapIds rows); " +
-        "the study-id universe should be metadata-scale")
 
     // A4-style summary: processed studies vs rejects by reason, ids in
     // Spark's string order (`array_sort`'s)
     val summary = spark.createDataFrame(java.util.Arrays.asList(Seq(
         "generated" -> validRows.map(field("study_id")),
-        "skipped" -> rejectRows.map(r =>
-          Option(field("Accession")(r)).getOrElse("(no accession)")))
+        "skipped" -> rejectRows.map(accession))
       .collect { case (status, ids) if ids.nonEmpty => Row(status, ids.length.toLong,
         ids.sortWith(DbGapXmlRenderer.compareUtf8(_, _) < 0).mkString("|"))
       }: _*), summarySchema)
 
     // A9/K6: processing_summary.txt (write_summary, run_dbgap_xml_gen_
-    // fallback.py:80-161) — per-study status frame + the overlap
-    val perStudy = studies.select(col("study_id"),
-        col("Accession").as("accession_id"),
-        lit("SUCCESS").as("status"), lit("XML_generator").as("method"),
-        lit("Generated from PicSure metadata").as("details"))
-      .unionByName(rejects.select(
-        Projections.splitPart(col("Accession"), ".", 1).as("study_id"),
-        coalesce(col("Accession"), lit("(no accession)")).as("accession_id"),
-        lit("FAILED").as("status"), lit("none").as("method"),
-        col("reason").as("details")))
-    val summaryText =
-      SummaryReport.writeProcessingSummary(perStudy, overlapIds, outDir)
+    // fallback.py:80-161) — per-study statuses of the collected rows (a
+    // reject's study_id is its Accession's first dot-part, "" without
+    // one) + the overlap
+    val statuses = validRows.map(r => (field("study_id")(r), field("Accession")(r),
+        "SUCCESS", "XML_generator", "Generated from PicSure metadata")) ++
+      rejectRows.map(r => (field("study_id")(r), accession(r), "FAILED", "none",
+        field("reason")(r)))
+    val summaryText = SummaryReport.writeProcessingSummary(statuses.toSeq, overlapIds, outDir)
 
     val counts = Counts(rows.length.toLong, validRows.length.toLong,
       rejectRows.groupBy(field("reason")).map { case (r, rs) => r -> rs.length.toLong },

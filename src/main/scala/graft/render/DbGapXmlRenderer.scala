@@ -90,7 +90,7 @@ object DbGapXmlRenderer {
     * on `(dt_id, study_id)` or on a subset of it) is rendered without an
     * exchange.
     */
-  def renderDataTables(vars: DataFrame, participantSet: Int = 1): Dataset[(String, String)] = {
+  def renderDataTables(vars: DataFrame): Dataset[(String, String)] = {
     val input = vars.select(Columns.map(col): _*)
     // within a document: the variable's fields from pos on, ascending,
     // nulls first, so a tie in pos falls to the later fields (struct order)
@@ -115,8 +115,8 @@ object DbGapXmlRenderer {
             .append("<?xml-stylesheet type=\"text/xsl\" href=\"./datadict_v2.xsl\"?>\n")
             .append("<data_table id=\"").append(escape(dtId))
             .append("\" study_id=\"").append(escape(studyId))
-            .append("\" participant_set=\"").append(participantSet)
-            .append("\" study_name=\"").append(escape(studyName)).append("\">\n")
+            .append("\" participant_set=\"1\" study_name=\"").append(escape(studyName))
+            .append("\">\n")
           if (desc != null)
             doc.append("  <description>").append(escape(desc)).append("</description>\n")
           doc.append(body).append("</data_table>\n")

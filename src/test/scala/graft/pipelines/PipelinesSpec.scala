@@ -177,12 +177,12 @@ class PipelinesSpec extends SparkSpec {
     val actions = observed.actions
     // Gen3 in one collect guarded by its own limit (no probe `count`); the
     // data-table and GapExchange documents in one write whose PicSure scan
-    // also observes the overlap ids; the summary in one collect
+    // also observes the overlap ids; the summary renders from the collected
+    // rows, with no job
     assert(actions.map(_._1) == Seq(
       "collect at BdcIngest.scala",
-      "foreachPartition at DocumentSink.scala",
-      "takeOrdered at SummaryReport.scala"), actions)
-    assert(actions.map(_._2).sum == 5, actions)
+      "foreachPartition at DocumentSink.scala"), actions)
+    assert(actions.map(_._2).sum == 4, actions)
     // Gen3 is read by the collect alone and PicSure by the write alone:
     // the results and the write's broadcast side are local relations
     import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
@@ -231,18 +231,6 @@ class PipelinesSpec extends SparkSpec {
     assert(all { case w: WindowExec => w }.isEmpty, plan)
     assert(all { case a: BaseAggregateExec => a }.isEmpty, plan)
     assert(Files.exists(Paths.get(out, "topmed/phs000007.v32/pht000030.data_dict.xml")))
-  }
-
-  test("BdcIngest: overlap-id driver collect raises past the row ceiling") {
-    val out = Files.createTempDirectory("bdc_guard").toString
-    val gen3 = CsvSources.readGen3Studies(spark, s"$fixtures/gen3.csv")
-    val pic = CsvSources.cleanPicsureVars(
-      CsvSources.readPicsureVars(spark, s"$fixtures/picsure.csv"))
-    // fixture yields exactly 1 overlap id; a ceiling of 0 must raise
-    val e = intercept[IllegalArgumentException] {
-      BdcIngest.run(spark, gen3, pic, out, maxOverlapIds = 0L)
-    }
-    assert(e.getMessage.contains("overlap id list"))
   }
 
   private val picsureHeader = "studyId,dtId,varId,derived_var_name,derived_group_name," +

@@ -66,6 +66,39 @@ class RenderSpec extends SparkSpec {
     assert(unbounded == txt)
   }
 
+  test("processingSummary: driver rows and the status frame render the same text") {
+    // in Spark's order "\uFFFF" sorts before "\uD83D\uDE00" (U+1F600), in
+    // String.compareTo after it; a null-accession reject has study_id ""
+    val gen = "Generated from PicSure metadata"
+    val statuses = Seq(
+      ("\uD83D\uDE00", "\uD83D\uDE00.v1", "SUCCESS", "XML_generator", gen),
+      ("phs2", "phs2.v1", "SUCCESS", "dbGaP_download", "ok"),
+      ("", "(no accession)", "FAILED", "none", "missing Accession"),
+      ("\uFFFF", "\uFFFF.v1", "FAILED", "none", "missing Consent"),
+      ("phs1", "phs1.v3", "SUCCESS", "XML_generator", gen),
+      ("\uFFFF", "\uFFFF.v2", "SUCCESS", "XML_generator", gen),
+      ("phs3", "phs3.v2", "FAILED", "none", "missing Description"))
+    val overlap = Seq("phs2", "phs1")
+    val frame = SummaryReport.processingSummary(
+      statuses.toDF("study_id", "accession_id", "status", "method", "details"), overlap)
+    assert(frame.contains("\nFailed studies:\n" +
+      "  1.  ((no accession)) - Reason: missing Accession\n" +
+      "  2. phs3 (phs3.v2) - Reason: missing Description\n" +
+      "  3. \uFFFF (\uFFFF.v1) - Reason: missing Consent\n"), frame)
+    assert(frame.contains(s"  2. \uFFFF (\uFFFF.v2) - Reason: $gen\n" +
+      s"  3. \uD83D\uDE00 (\uD83D\uDE00.v1) - Reason: $gen\n"), frame)
+    val rnd = new scala.util.Random(7)
+    for (i <- 1 to 5) {
+      val out = Files.createTempDirectory(s"summary_rows_$i").toString
+      val shuffled = rnd.shuffle(statuses)
+      assert(SummaryReport.writeProcessingSummary(shuffled, overlap, out) == frame, shuffled)
+      assert(Files.readString(Paths.get(out, "processing_summary.txt")) == frame)
+      assert(SummaryReport.processingSummary(
+        shuffled.toDF("study_id", "accession_id", "status", "method", "details")
+          .repartition(3), overlap) == frame)
+    }
+  }
+
   test("escape handles all five XML special forms") {
     import DbGapXmlRenderer.escape
     assert(escape("""a&b<c>d"e""") == "a&amp;b&lt;c&gt;d&quot;e")
@@ -95,7 +128,7 @@ class RenderSpec extends SparkSpec {
         case '"' => "&quot;"
         case c => c.toString
       }
-    def oracle(vars: DataFrame, participantSet: Int = 1): Set[(String, String)] =
+    def oracle(vars: DataFrame): Set[(String, String)] =
       vars.groupBy(col("dt_id"), col("study_id"))
         .agg(
           min(col("study_name")).as("study_name"),
@@ -111,7 +144,7 @@ class RenderSpec extends SparkSpec {
           sb ++= "<?xml version=\"1.0\" encoding=\"UTF-8\"?>\n"
           sb ++= "<?xml-stylesheet type=\"text/xsl\" href=\"./datadict_v2.xsl\"?>\n"
           sb ++= s"""<data_table id="${oracleEscape(dtId)}" study_id="${oracleEscape(studyId)}"""" +
-            s""" participant_set="$participantSet"""" +
+            """ participant_set="1"""" +
             s""" study_name="${oracleEscape(row.getAs[String]("study_name"))}">\n"""
           val desc = row.getAs[String]("group_description")
           if (desc != null) sb ++= s"  <description>${oracleEscape(desc)}</description>\n"
