@@ -62,7 +62,7 @@ object Catalog {
     val leftover = sc.getPersistentRDDs.size
     spark.catalog.clearCache()
     sc.getPersistentRDDs.values.foreach(_.unpersist(false))
-    graft.ext.Dedup.drainStageDirs()
+    graft.ops.Stage.drain()
     sc.setJobDescription(null)
     leftover
   }

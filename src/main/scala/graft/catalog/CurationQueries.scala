@@ -4,6 +4,7 @@ package catalog
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ext.{Curation, Dedup, TextStats}
+import graft.ops.Stage
 import Common._
 
 /** Curation: filtering, sampling and mixing, packing, shard and release
@@ -136,10 +137,10 @@ object CurationQueries {
       // corpus-scale curation regexes ran 3× per run. Each stages ONCE
       // to a temp parquet (same rows, same columns — the oracle hash
       // pins identity) and every head reads the flat stage.
-      val curated = Dedup.stageAndRead(d.join(ok, "doc_id"))
-      val clusters = Dedup.dupClusters(Dedup.lshCandidateStarPairsStaged(
-        Dedup.minhashSignature(curated, "text", 4), "doc_id", 4, 2))
-      val train = Dedup.stageAndRead(
+      val curated = Stage(d.join(ok, "doc_id"))
+      val clusters = Dedup.dupClusters(Dedup.lshCandidateStarPairs(
+        Stage(Dedup.minhashSignature(curated, "text", 4)), "doc_id", 4, 2))
+      val train = Stage(
         Dedup.applyDedup(curated, clusters, "doc_id")
           .filter(col("doc_id") >= 10)) // ids < 10 are the benchmark split
       val contaminated = Dedup.contaminatedDocs(train,
@@ -447,7 +448,7 @@ object CurationQueries {
         TextStats.tokenCount(col("text")).cast("long").as("n_tok"))
       val assigned = graft.ext.Curation.assignShards(
         weighted, "doc_id", "n_tok", 8, 64L)
-      val ldir = graft.ops.Scale.tempLayoutDir("graft_shards_")
+      val ldir = Stage.dir("graft_shards_")
       assigned.write.partitionBy("shard").mode("overwrite").parquet(ldir)
       // explicit schema: a zero-survivor layout has no data files to
       // infer from, and must read back as empty, not throw
@@ -595,7 +596,7 @@ object CurationQueries {
           TextStats.tokenCount(col("text")).cast("long").as("n_tok"))
       val assigned = graft.ext.Curation.assignShards(
         survivors, "doc_id", "n_tok", 8, 64L)
-      val ldir = graft.ops.Scale.tempLayoutDir("graft_release_")
+      val ldir = Stage.dir("graft_release_")
       assigned.write.partitionBy("shard").mode("overwrite").parquet(ldir)
       s.read.schema(assigned.schema).parquet(ldir)
         .groupBy(col("shard").cast("long").as("shard"), col("lang"))
@@ -704,7 +705,7 @@ object CurationQueries {
       // Cross-batch duplicate texts still mark exactly (they collide on
       // the content digest whichever batch they arrived in).
       val d = t(s, dir, "documents")
-      val ldir = graft.ops.Scale.tempLayoutDir("graft_card_inc_")
+      val ldir = Stage.dir("graft_card_inc_")
       Seq(0, 1).foreach { par =>
         graft.ext.Curation.appendCardBatch(
           d.filter(pmod(col("doc_id"), lit(2)) === par), "text",
@@ -1029,10 +1030,10 @@ object CurationQueries {
       // oracle VERBATIM without rescanning the base (x98b convention).
       val d = t(s, dir, "documents")
         .withColumn("len_bucket", expr("n_chars div 256"))
-      val staged = s.read.parquet(graft.ext.Dedup.stageSignatures(
+      val staged = Stage(
         graft.ext.Curation.qiGroupCounts(
           d.filter(pmod(col("doc_id"), lit(4L)) =!= 0),
-          Seq("lang"), Seq("source", "len_bucket"))))
+          Seq("lang"), Seq("source", "len_bucket")))
       val batch = graft.ext.Curation.qiGroupCounts(
         d.filter(pmod(col("doc_id"), lit(4L)) === 0),
         Seq("lang"), Seq("source", "len_bucket"))
@@ -1136,9 +1137,9 @@ object CurationQueries {
       // and this answers x100b's oracle VERBATIM (x100d convention).
       val d = x100bFrame(s, dir)
       val keys = Seq("lang"); val qis = Seq("source", "len_bucket")
-      val staged = s.read.parquet(graft.ext.Dedup.stageSignatures(
+      val staged = Stage(
         graft.ext.Curation.lDiversityCells(
-          d.filter(pmod(col("doc_id"), lit(4L)) =!= 0), keys, qis, "sv")))
+          d.filter(pmod(col("doc_id"), lit(4L)) =!= 0), keys, qis, "sv"))
       val batch = graft.ext.Curation.lDiversityCells(
         d.filter(pmod(col("doc_id"), lit(4L)) === 0), keys, qis, "sv")
       graft.ext.Curation.lDiversityFromCells(
@@ -1153,9 +1154,9 @@ object CurationQueries {
       // rescanning the base split.
       val d = x100bFrame(s, dir)
       val keys = Seq("lang"); val qis = Seq("source", "len_bucket")
-      val staged = s.read.parquet(graft.ext.Dedup.stageSignatures(
+      val staged = Stage(
         graft.ext.Curation.tClosenessCells(
-          d.filter(pmod(col("doc_id"), lit(4L)) =!= 0), keys, qis, "sv")))
+          d.filter(pmod(col("doc_id"), lit(4L)) =!= 0), keys, qis, "sv"))
       val batch = graft.ext.Curation.tClosenessCells(
         d.filter(pmod(col("doc_id"), lit(4L)) === 0), keys, qis, "sv")
       graft.ext.Curation.tClosenessFromCells(

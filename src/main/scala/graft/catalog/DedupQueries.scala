@@ -3,6 +3,7 @@ package catalog
 
 import org.apache.spark.sql.functions._
 import graft.ext.{Dedup, TextStats}
+import graft.ops.Stage
 import Common._
 
 /** Deduplication: exact, MinHash/LSH, SimHash, n-gram and containment
@@ -186,8 +187,8 @@ object DedupQueries {
       // exactly once (spec asserts no signature recompute in the plan).
       // NOTE the stage write is a CONSTRUCTION-TIME side effect, into a
       // unique per-invocation temp dir (no cross-session overwrite races).
-      Dedup.lshCandidatePairsStaged(
-        Dedup.minhashSignature(t(s, dir, "documents"), "text", 4),
+      Dedup.lshCandidatePairs(
+        Stage(Dedup.minhashSignature(t(s, dir, "documents"), "text", 4)),
         "doc_id", 4, 2)
         .select(col("a_id").cast("long").as("a_id"),
           col("b_id").cast("long").as("b_id"))
@@ -211,8 +212,8 @@ object DedupQueries {
       val d = t(s, dir, "documents")
       // CC feed rides star candidates (connectivity-identical, hot-
       // bucket-linear — see x17)
-      val clusters = Dedup.dupClusters(Dedup.lshCandidateStarPairsStaged(
-        Dedup.minhashSignature(d, "text", 4), "doc_id", 4, 2))
+      val clusters = Dedup.dupClusters(Dedup.lshCandidateStarPairs(
+        Stage(Dedup.minhashSignature(d, "text", 4)), "doc_id", 4, 2))
       Dedup.applyDedup(d, clusters, "doc_id")
         .select(col("doc_id"), md5(col("text")).as("text_md5"))
     },
@@ -282,7 +283,7 @@ object DedupQueries {
       // its own signatures and band-joins against the stage — corpus text
       // never rescanned, new-side bands broadcast (PlanSpec pins it).
       val d = t(s, dir, "documents")
-      val stage = Dedup.stageSignatures(
+      val stage = Stage.path(
         Dedup.minhashSignature(d.filter(col("doc_id") % 5 =!= 0), "text", 4))
       Dedup.lshCandidatePairsIncremental(
         Dedup.minhashSignature(d.filter(col("doc_id") % 5 === 0), "text", 4),
@@ -754,7 +755,7 @@ object DedupQueries {
       // The oracle is the PARITY CONTRACT itself: one-shot stats over all
       // docs restricted to the batch ids must be bit-identical.
       val d = t(s, dir, "documents")
-      val stage = Dedup.stageSignatures(
+      val stage = Stage.path(
         Dedup.spanHashes(d.filter(col("doc_id") % 5 =!= 0), "text", "doc_id", 5))
       Dedup.repeatedSpanStatsIncremental(
         d.filter(col("doc_id") % 5 === 0), stage, "text", "doc_id", 5)
@@ -831,7 +832,7 @@ object DedupQueries {
       val d = t(s, dir, "documents")
       val batch = d.filter(pmod(col("doc_id"), lit(5)) === 0)
       val corpus = d.filter(pmod(col("doc_id"), lit(5)) =!= 0)
-      val stage = graft.ext.Dedup.stageSignatures(
+      val stage = Stage.path(
         graft.ext.Dedup.spanHashes(corpus, "text", "doc_id", 5))
       graft.ext.Dedup.sharedSpansExactIncremental(batch, corpus, stage,
         "text", "doc_id", 5)
@@ -1097,7 +1098,7 @@ object DedupQueries {
       // hot-band cap censuses the combined corpus. Oracle = the one-shot
       // x62 replay restricted to pairs touching the batch.
       val d = t(s, dir, "documents")
-      val stage = Dedup.stageSignatures(Dedup.chunkSignatures(
+      val stage = Stage.path(Dedup.chunkSignatures(
         d.filter(col("doc_id") % 5 =!= 0), "text", "doc_id", 120, 4))
       Dedup.chunkNearDupPairsIncremental(d.filter(col("doc_id") % 5 === 0),
           stage, "text", "doc_id", 120, 4, 2, maxBandChunks = 50)

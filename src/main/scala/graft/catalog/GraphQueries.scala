@@ -3,6 +3,7 @@ package catalog
 
 import org.apache.spark.sql.functions._
 import graft.ext.Dedup
+import graft.ops.Stage
 import Common._
 
 /** Graph analytics: PageRank and TrustRank (one-shot and crawl cadences),
@@ -626,7 +627,7 @@ object GraphQueries {
       // stage the ONE-directional host pairs, then symmetrize off the
       // staged parquet — a union over the raw frame would re-execute the
       // whole chunk-LSH lineage once per direction
-      val sp = Dedup.stageAndRead(e0.select(col("a_h"), col("b_h")))
+      val sp = Stage(e0.select(col("a_h"), col("b_h")))
       val edges = sp.select(col("a_h").as("src"), col("b_h").as("dst"))
         .union(sp.select(col("b_h").as("src"), col("a_h").as("dst")))
       // lazy rounds here: with the copy graph staged flat, the 2^3 rank

@@ -2,6 +2,7 @@ package graft
 package catalog
 
 import org.apache.spark.sql.functions._
+import graft.ops.Stage
 import Common._
 
 /** Learned quality models and their evaluation: centroid classifiers,
@@ -419,10 +420,10 @@ object LearnQueries {
           when(col("n_chars") >= 256, "long").otherwise("short").as("rb"),
           when(expr("length(text) - length(replace(text, ' ', ''))") >= 39,
             "long").otherwise("short").as("rc"))
-      val staged = s.read.parquet(graft.ext.Dedup.stageSignatures(
+      val staged = Stage(
         graft.ext.Learn.fleissCells(
           lab.filter(pmod(col("doc_id"), lit(4L)) =!= 0),
-          Seq("lang"), Seq("ra", "rb", "rc"))))
+          Seq("lang"), Seq("ra", "rb", "rc")))
       val batch = graft.ext.Learn.fleissCells(
         lab.filter(pmod(col("doc_id"), lit(4L)) === 0),
         Seq("lang"), Seq("ra", "rb", "rc"))
@@ -613,10 +614,10 @@ object LearnQueries {
         .select(col("doc_id"), col("lang"), col("source"),
           when(size(split(graft.ext.TextStats.wsTrim(col("text")),
             "\\s+")) >= 40, "long").otherwise("short").as("lenlab"))
-      val staged = s.read.parquet(graft.ext.Dedup.stageSignatures(
+      val staged = Stage(
         graft.ext.Learn.chiSquareCells(
           lab.filter(pmod(col("doc_id"), lit(4L)) =!= 0),
-          Seq("lang"), "source", "lenlab")))
+          Seq("lang"), "source", "lenlab"))
       val batch = graft.ext.Learn.chiSquareCells(
         lab.filter(pmod(col("doc_id"), lit(4L)) === 0),
         Seq("lang"), "source", "lenlab")
@@ -638,10 +639,10 @@ object LearnQueries {
           when(size(split(graft.ext.TextStats.wsTrim(col("text")),
             "\\s+")) >= 40, "long").otherwise("short").as("ra"),
           when(col("n_chars") >= 256, "long").otherwise("short").as("rb"))
-      val staged = s.read.parquet(graft.ext.Dedup.stageSignatures(
+      val staged = Stage(
         graft.ext.Learn.confusionCells(
           lab.filter(pmod(col("doc_id"), lit(4L)) =!= 0),
-          Seq("lang"), "ra", "rb")))
+          Seq("lang"), "ra", "rb"))
       val batch = graft.ext.Learn.confusionCells(
         lab.filter(pmod(col("doc_id"), lit(4L)) === 0),
         Seq("lang"), "ra", "rb")
@@ -717,10 +718,10 @@ object LearnQueries {
           col("n_chars"))
         .select(col("doc_id"), col("lang"), expr("_tc div 8").as("xb"),
           expr("n_chars div 64").as("yb"))
-      val staged = s.read.parquet(graft.ext.Dedup.stageSignatures(
+      val staged = Stage(
         graft.ext.Learn.kendallCells(
           d.filter(pmod(col("doc_id"), lit(4L)) =!= 0),
-          Seq("lang"), "xb", "yb")))
+          Seq("lang"), "xb", "yb"))
       val batch = graft.ext.Learn.kendallCells(
         d.filter(pmod(col("doc_id"), lit(4L)) === 0),
         Seq("lang"), "xb", "yb")

@@ -2,7 +2,7 @@ package graft
 package catalog
 
 import org.apache.spark.sql.functions._
-import graft.ops.{Aggs, Filters, Joins, Merge, Projections, Windows}
+import graft.ops.{Aggs, Filters, Joins, Merge, Projections, Stage, Windows}
 import Common._
 
 /** The relational operators of SURVEY.md §2.3-2.9 (projections, filters,
@@ -283,7 +283,7 @@ object RelationalQueries {
         (datediff(col("o_orderdate").cast("date"),
           to_date(lit("1992-01-01"))) % 64).as("dk"),
         col("o_totalprice"))
-      val zdir = graft.ops.Scale.tempLayoutDir("graft_zq_")
+      val zdir = Stage.dir("graft_zq_")
       graft.ops.Scale.writeZOrdered(o, zdir, "ck", "dk", 16)
       graft.ops.Scale.prunedRead2(s, zdir, "ck", 8, 23, "dk", 8, 23)
         .groupBy(col("ck"))

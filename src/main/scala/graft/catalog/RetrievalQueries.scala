@@ -3,6 +3,7 @@ package catalog
 
 import org.apache.spark.sql.functions._
 import graft.ext.Similarity
+import graft.ops.Stage
 import Common._
 
 /** Retrieval: BM25 (one-shot, indexed, incremental, compacted), hybrid
@@ -229,7 +230,7 @@ object RetrievalQueries {
       // the per-batch stats rows — and must be bit-identical to the
       // one-shot x43 over the full corpus: the oracle is x43's, verbatim.
       val d = t(s, dir, "documents")
-      val ldir = graft.ops.Scale.tempLayoutDir("graft_bm25_inc_")
+      val ldir = Stage.dir("graft_bm25_inc_")
       Seq(0, 1).foreach { par =>
         graft.ext.Retrieval.appendIndexBatch(
           d.filter(pmod(col("doc_id"), lit(2)) === par), "text", "doc_id", ldir)
@@ -248,7 +249,7 @@ object RetrievalQueries {
       // x43's oracle VERBATIM — compaction must be invisible to results,
       // and the ScaleSpec pins the file counts.
       val d = t(s, dir, "documents")
-      val ldir = graft.ops.Scale.tempLayoutDir("graft_bm25_cmp_")
+      val ldir = Stage.dir("graft_bm25_cmp_")
       Seq(0, 1, 2).foreach { par =>
         graft.ext.Retrieval.appendIndexBatch(
           d.filter(pmod(col("doc_id"), lit(3)) === par), "text", "doc_id", ldir)
@@ -268,7 +269,7 @@ object RetrievalQueries {
       // corpus-side join at all. Pruning must be invisible to the
       // RESULT: the oracle is x43's, verbatim.
       val d = t(s, dir, "documents")
-      val ldir = graft.ops.Scale.tempLayoutDir("graft_bm25_index_")
+      val ldir = Stage.dir("graft_bm25_index_")
       graft.ext.Retrieval.writeIndex(d, "text", "doc_id", ldir)
       graft.ext.Retrieval.bm25TopKIndexed(ldir,
         hybridQueries, 5)

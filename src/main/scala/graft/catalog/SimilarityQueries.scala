@@ -4,6 +4,7 @@ package catalog
 import org.apache.spark.sql.functions._
 import graft.ops.Windows
 import graft.ext.{Dedup, Similarity}
+import graft.ops.Stage
 import Common._
 
 /** Vector similarity: exact and IVF/PQ/int8 ANN, cosine LSH, RHP,
@@ -180,7 +181,7 @@ object SimilarityQueries {
       val a = e.filter(col("vec_id") % 2 === 0)
       val base = e.filter(pmod(col("vec_id"), lit(4L)) === 1)
       val batch = e.filter(pmod(col("vec_id"), lit(4L)) === 3)
-      val staged = Dedup.stageAndRead(
+      val staged = Stage(
         Similarity.centroidSums(base, Seq("label"), "embedding"))
       Similarity.centroidDriftFromSums(
         Similarity.centroidSums(a, Seq("label"), "embedding"),
@@ -492,7 +493,7 @@ object SimilarityQueries {
       val cb = Similarity.ivfPqCodebook(res, "vec_id", 4, 16, 64)
       val enc = Similarity.pqEncodeResiduals(res, "resid", cb)
         .select(col("vec_id").as("n_id"), col("cid"), col("codes"))
-      val ldir = graft.ops.Scale.tempLayoutDir("graft_ivfpq_")
+      val ldir = Stage.dir("graft_ivfpq_")
       Similarity.writeIvfPqPartitioned(enc, ldir)
       Similarity.ivfPqTopKPartitioned(ldir, cents,
           emb.filter(col("vec_id") < 4), "vec_id", "embedding", cb, 5, 2)
@@ -522,7 +523,7 @@ object SimilarityQueries {
             Similarity.ivfResiduals(batch, cents, "vec_id", "embedding"),
             "resid", cb)
           .select(col("vec_id").as("n_id"), col("cid"), col("codes"))
-      val ldir = graft.ops.Scale.tempLayoutDir("graft_ivfpq_append_")
+      val ldir = Stage.dir("graft_ivfpq_append_")
       Similarity.writeIvfPqPartitioned(enc(base), ldir)
       Similarity.appendIvfPqPartitioned(
         enc(emb.filter(col("vec_id") >= 16 && col("vec_id") % 5 === 0)), ldir)
@@ -902,7 +903,7 @@ object SimilarityQueries {
       val assigned = Similarity.ivfAssignJoin(
         emb.select(col("vec_id"), col("embedding")), centroids,
         "vec_id", "embedding")
-      val ldir = graft.ops.Scale.tempLayoutDir("graft_ivf_layout_")
+      val ldir = Stage.dir("graft_ivf_layout_")
       Similarity.writeIvfPartitioned(assigned, ldir)
       Similarity.ivfTopKPartitioned(ldir, centroids,
           emb.filter(col("vec_id") < 8), "vec_id", "embedding", 5, 2)
@@ -1052,7 +1053,7 @@ object SimilarityQueries {
       def assign(batch: org.apache.spark.sql.DataFrame) =
         Similarity.ivfAssignJoin(batch.select(col("vec_id"), col("embedding")),
           centroids, "vec_id", "embedding")
-      val ldir = graft.ops.Scale.tempLayoutDir("graft_ivf_append_")
+      val ldir = Stage.dir("graft_ivf_append_")
       Similarity.writeIvfPartitioned(
         assign(emb.filter(col("vec_id") % 5 =!= 0)), ldir)
       Similarity.appendIvfPartitioned(
@@ -1079,7 +1080,7 @@ object SimilarityQueries {
       def assign(batch: org.apache.spark.sql.DataFrame) =
         Similarity.ivfAssignJoin(batch.select(col("vec_id"), col("embedding")),
           centroids, "vec_id", "embedding")
-      val ldir = graft.ops.Scale.tempLayoutDir("graft_ivf_compact_")
+      val ldir = Stage.dir("graft_ivf_compact_")
       Similarity.writeIvfPartitioned(
         assign(emb.filter(col("vec_id") % 5 > 1)), ldir)
       Similarity.appendIvfPartitioned(

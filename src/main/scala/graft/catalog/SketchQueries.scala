@@ -3,6 +3,7 @@ package catalog
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.ops.Stage
 import Common._
 
 /** Streaming sketches: count-min, HyperLogLog, KMV, quantile sketches and
@@ -176,7 +177,7 @@ object SketchQueries {
       val baseT = sketchTokens(d.filter(pmod(col("doc_id"), lit(3)) =!= 2))
       val batchT = sketchTokens(d.filter(pmod(col("doc_id"), lit(3)) === 2))
       val sk = graft.ext.Sketch.cmsMerge(Seq(
-        graft.ext.Sketch.cmsSketchStaged(baseT, "tok", 2048, 4),
+        Stage(graft.ext.Sketch.cmsSketch(baseT, "tok", 2048, 4)),
         graft.ext.Sketch.cmsSketch(batchT, "tok", 2048, 4)))
       cmsHeavyTail(sketchTokens(d), sk)
     },
@@ -206,9 +207,9 @@ object SketchQueries {
       // VERBATIM.
       val d = t(s, dir, "documents")
       val regs = graft.ext.Sketch.hllMerge(Seq(
-        graft.ext.Sketch.hllRegistersStaged(
+        Stage(graft.ext.Sketch.hllRegisters(
           langTokens(d.filter(pmod(col("doc_id"), lit(3)) =!= 2)),
-          Seq("lang"), "tok", 8),
+          Seq("lang"), "tok", 8)),
         graft.ext.Sketch.hllRegisters(
           langTokens(d.filter(pmod(col("doc_id"), lit(3)) === 2)),
           Seq("lang"), "tok", 8)), Seq("lang"))
@@ -294,8 +295,8 @@ object SketchQueries {
       // ever rescanning the base.
       val gr = overlapShingles(t(s, dir, "documents"))
       val sa = graft.ext.Sketch.kmvMerge(Seq(
-        graft.ext.Sketch.kmvStateStaged(
-          gr.filter(pmod(col("doc_id"), lit(4)) === 0), "g", 256),
+        Stage(graft.ext.Sketch.kmvState(
+          gr.filter(pmod(col("doc_id"), lit(4)) === 0), "g", 256)),
         graft.ext.Sketch.kmvState(
           gr.filter(pmod(col("doc_id"), lit(4)) === 2), "g", 256)), 256)
       kmvOverlapTail(gr, sa,
@@ -338,9 +339,9 @@ object SketchQueries {
       // answers x92's oracle VERBATIM without rescanning the base.
       val d = t(s, dir, "documents")
       val st = graft.ext.Sketch.qsMerge(Seq(
-        graft.ext.Sketch.qsStateStaged(
+        Stage(graft.ext.Sketch.qsState(
           d.filter(pmod(col("doc_id"), lit(3)) =!= 2),
-          Seq("lang"), "doc_id", "n_chars", 128),
+          Seq("lang"), "doc_id", "n_chars", 128)),
         graft.ext.Sketch.qsState(
           d.filter(pmod(col("doc_id"), lit(3)) === 2),
           Seq("lang"), "doc_id", "n_chars", 128)), Seq("lang"), 128)
@@ -455,8 +456,8 @@ object SketchQueries {
            else pmod(col("event_id"), lit(3)) =!= 2))
         .select(col("user_id").as("k"))
       def merged(typ: String) = graft.ext.Sketch.cmsMerge(Seq(
-        graft.ext.Sketch.cmsSketchStaged(keys(typ, batchArm = false),
-          "k", 1024, 4),
+        Stage(graft.ext.Sketch.cmsSketch(keys(typ, batchArm = false),
+          "k", 1024, 4)),
         graft.ext.Sketch.cmsSketch(keys(typ, batchArm = true),
           "k", 1024, 4)))
       val est = graft.ext.Sketch.cmsJoinSizeEstimate(

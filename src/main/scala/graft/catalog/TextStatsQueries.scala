@@ -4,6 +4,7 @@ package catalog
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.ext.TextStats
+import graft.ops.Stage
 import Common._
 
 /** Per-document text statistics and their release-level comparisons:
@@ -822,8 +823,7 @@ object TextStatsQueries {
         .groupBy(col("lang"), col("tok")).agg(count(lit(1)).as("c"))
       val odd = col("doc_id") % 2 === 1
       val bMerged = graft.ext.TextStats.mergeTokenCounts(Seq(
-        graft.ext.TextStats.tokenCountsStaged(
-          counts(odd && pmod(col("doc_id"), lit(4L)) === 1L)),
+        Stage(counts(odd && pmod(col("doc_id"), lit(4L)) === 1L)),
         counts(odd && pmod(col("doc_id"), lit(4L)) === 3L)),
         Seq("lang"), "tok", "c")
       graft.ext.TextStats.distributionDriftQ8(

@@ -3,6 +3,7 @@ package catalog
 
 import org.apache.spark.sql.functions._
 import graft.ext.{TextStats, Unigram}
+import graft.ops.Stage
 import Common._
 
 /** Tokenizer training and encoding: BPE (word and char level), unigram-LM
@@ -616,7 +617,7 @@ object TokenizerQueries {
       // narrow parquet and pays only its own merge chain. Same move as
       // the r16 WordPiece/Unigram staged-word-table fix; merges are
       // bit-identical (the staged frame IS the round-0 corpus).
-      val charified = graft.ext.Dedup.stageAndRead(
+      val charified = Stage(
         t(s, dir, "documents").select(
           graft.ext.TextStats.charify(col("text")).as("ctext")))
       val merges = graft.ext.TextStats.bpeTrain(charified, "ctext", 3)

@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.ops.Stage
 
 /** Staged all-pairs prefix index ([[Dedup.allPairsIndex]]): the base
   * corpus's prefixes (a_id, tok, _ap_n), element sets (_ap_id, toks),
@@ -82,13 +83,18 @@ object Dedup {
   }
 
   /** LSH banding: docs sharing any full band become candidate pairs.
-    * Shuffle carries only narrow keys. */
+    * Shuffle carries only narrow keys.
+    *
+    * The aliased self-join recomputes `sig`'s plan on each side; caching
+    * the (id, band) table here measured SLOWER at bench scale (cache
+    * write > recompute), so recompute is kept. At 100 TB the signature
+    * pass reads the full text corpus, so pass a staged table instead,
+    * `lshCandidatePairs(Stage(sig), …)`: one narrow parquet write of
+    * (id, k hashes), exactly ONE signature computation, and every later
+    * pass (banding, joins, incremental dedup) reads the stage instead of
+    * the text. The pairs are the same either way (x3c). */
   def lshCandidatePairs(sig: DataFrame, idCol: String, k: Int,
                         rowsPerBand: Int): DataFrame = {
-    // NOTE: the aliased self-join recomputes the signature pass per side;
-    // persisting the (id, band) table here was measured SLOWER at bench
-    // scale (cache write cost > recompute), so recompute is kept. At true
-    // 100 TB scale, materialize the signature table to parquet first.
     val exploded = lshBands(sig, idCol, k, rowsPerBand)
     val a = exploded.as("a")
     val b = exploded.as("b")
@@ -126,49 +132,6 @@ object Dedup {
       .filter(col(idCol) =!= col("_lsh_min"))
       .select(col("_lsh_min").as("a_id"), col(idCol).as("b_id"))
       .distinct()
-  }
-
-  /** [[lshCandidateStarPairs]] from a staged signature table (the
-    * lshCandidatePairsStaged move for CC feeds): one signature pass,
-    * star edges per band bucket. */
-  def lshCandidateStarPairsStaged(sig: DataFrame, idCol: String, k: Int,
-                                  rowsPerBand: Int): DataFrame = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sig_stage_")
-    registerStageDirForCleanup(dir.toString)
-    sig.write.mode("overwrite").parquet(dir.toString)
-    lshCandidateStarPairs(sig.sparkSession.read.parquet(dir.toString),
-      idCol, k, rowsPerBand)
-  }
-
-  /** At-scale LSH candidate generation: materialize the signature table to
-    * parquet FIRST, then band/self-join from the staged table — exactly ONE
-    * signature computation over the corpus. [[lshCandidatePairs]]'s aliased
-    * self-join recomputes the signature on each side, which measured FASTER
-    * at bench scale (cache write > recompute) but is the wrong trade at
-    * 100 TB where the signature pass reads the full text corpus: staging
-    * costs one narrow parquet write of (id, k×8-byte hashes) and every
-    * later pass — banding, joins, incremental dedup — reads that instead of
-    * the text. Returns the same pairs as the unstaged form. */
-  def lshCandidatePairsStaged(sig: DataFrame, idCol: String, k: Int,
-                              rowsPerBand: Int, sigPath: String): DataFrame = {
-    // NOTE: the stage write runs HERE, at DataFrame-construction time (not
-    // when the returned frame is acted on) — callers sharing a fixed
-    // sigPath across concurrent sessions would race the overwrite; use the
-    // no-path overload for a collision-free per-invocation directory.
-    sig.write.mode("overwrite").parquet(sigPath)
-    val staged = sig.sparkSession.read.parquet(sigPath)
-    lshCandidatePairs(staged, idCol, k, rowsPerBand)
-  }
-
-  /** [[lshCandidatePairsStaged]] with a unique per-invocation staging
-    * directory (no cross-session overwrite races on a shared path). The
-    * dir is registered for recursive deletion at JVM exit, so repeated
-    * bench/verify runs don't accumulate parquet stages in /tmp. */
-  def lshCandidatePairsStaged(sig: DataFrame, idCol: String, k: Int,
-                              rowsPerBand: Int): DataFrame = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sig_stage_")
-    registerStageDirForCleanup(dir.toString)
-    lshCandidatePairsStaged(sig, idCol, k, rowsPerBand, dir.toString)
   }
 
   /** Chunk-level (partial-overlap) near-dup detection — what whole-doc
@@ -221,8 +184,8 @@ object Dedup {
     * [[chunkNearDupPairsIncremental]] band from: one row per
     * `chunkChars`-character window, keyed by a `_ck = (id, cidx)` struct.
     * This is the table a production flow STAGES (parquet, appended batch
-    * by batch — the [[stageSignatures]] contract) so corpus text is never
-    * rescanned. */
+    * by batch — the [[graft.ops.Stage.path]] contract) so corpus text is
+    * never rescanned. */
   def chunkSignatures(df: DataFrame, textCol: String, idCol: String,
                       chunkChars: Int, k: Int,
                       shingleLen: Int = 5): DataFrame = {
@@ -304,39 +267,10 @@ object Dedup {
     chunkHitCount(hits, minChunkHits)
   }
 
-  /** Write a signature table to a unique temp parquet stage (registered
-    * for JVM-exit deletion) and return its path — the setup step for
-    * [[lshCandidatePairsIncremental]] and tests of the staged flow. In
-    * production the stage is a durable table the pipeline owns, appended
-    * batch by batch — and for streaming ingest, appended per-batch-subdir
-    * with overwrite so a crash-replayed micro-batch can't double its
-    * signatures (the `Curation.appendCardBatch(…, overwrite = true)`
-    * discipline, EventStreamsSpec). */
-  def stageSignatures(sig: DataFrame): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sig_stage_")
-    registerStageDirForCleanup(dir.toString)
-    sig.write.mode("overwrite").parquet(dir.toString)
-    dir.toString
-  }
-
-  /** [[stageSignatures]] + read-back in one step, supplying the KNOWN
-    * schema to the reader: `spark.read.parquet(stage)` re-infers the
-    * schema it wrote a millisecond earlier — a footer-read job per stage
-    * call, pure overhead the engine pays dozens of times per catalog run
-    * (every staged round/census/skeleton). The schema is exact by
-    * construction (we wrote this exact frame), so the read is
-    * bit-identical; only the inference job disappears. */
-  def stageAndRead(df: DataFrame): DataFrame =
-    // asNullable: parquet round-trips every field as nullable, so the
-    // supplied schema must match what inference would have produced
-    df.sparkSession.read
-      .schema(org.apache.spark.sql.graftbridge.Bridge.asNullable(df.schema))
-      .parquet(stageSignatures(df))
-
   /** Incremental batch dedup — the production flow for a GROWING corpus:
     * signatures of everything already ingested live in a parquet stage
     * (one narrow (id, k hashes) table, written once per batch, e.g. via
-    * [[stageSignatures]]/append); a new batch computes only ITS OWN
+    * [[graft.ops.Stage.path]]/append); a new batch computes only ITS OWN
     * signatures and band-joins against the stage. Returns candidate pairs
     * with at least one side in the new batch, `a_id < b_id`.
     *
@@ -363,54 +297,6 @@ object Dedup {
       .select(least(col(s"a.$idCol"), col(s"b.$idCol")).as("a_id"),
         greatest(col(s"a.$idCol"), col(s"b.$idCol")).as("b_id"))
       .distinct()
-  }
-
-  /** Staging dirs pending JVM-exit deletion (exposed for specs). */
-  def registeredStageDirs: Set[String] = {
-    import scala.jdk.CollectionConverters._
-    stageDirs.asScala.toSet
-  }
-
-  private val stageDirs = java.util.Collections.newSetFromMap(
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]())
-
-  // one hook for all registered dirs, installed on first use
-  private lazy val installStageCleanupHook: Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      stageDirs.forEach { d =>
-        val p = java.nio.file.Paths.get(d)
-        if (java.nio.file.Files.exists(p)) {
-          java.nio.file.Files.walk(p)
-            .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-            .forEach(f => java.nio.file.Files.deleteIfExists(f))
-        }
-      }
-    }))
-
-  private[graft] def registerStageDirForCleanup(dir: String): Unit = {
-    installStageCleanupHook
-    stageDirs.add(dir)
-  }
-
-  /** Delete every registered staging dir NOW and clear the registry —
-    * the inter-query hygiene hook for long catalog sessions (Bench,
-    * Verify). The JVM-exit hook alone let a 229-query session accumulate
-    * dozens of temp parquet stages (disk + page-cache pressure measured
-    * as up-to-17× bench-tail inflation in round 11). Safe between
-    * independent queries: a stage is only read by the query that created
-    * it, and that query has completed its action before the drain. */
-  def drainStageDirs(): Unit = {
-    val it = stageDirs.iterator()
-    while (it.hasNext) {
-      val d = it.next()
-      it.remove()
-      val p = java.nio.file.Paths.get(d)
-      if (java.nio.file.Files.exists(p)) {
-        java.nio.file.Files.walk(p)
-          .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-          .forEach(f => java.nio.file.Files.deleteIfExists(f))
-      }
-    }
   }
 
   /** MinHash signature via the native single-pass codegen expression
@@ -1285,7 +1171,7 @@ object Dedup {
 
   /** Incremental [[repeatedSpanStats]] for a GROWING corpus (the x26
     * contract): span digests of everything already ingested live in a
-    * parquet stage — (id, pos, h) rows written via [[stageSignatures]]/
+    * parquet stage — (id, pos, h) rows written via [[graft.ops.Stage.path]]/
     * append — and a NEW batch's per-doc stats count occurrences across
     * corpus ∪ batch while only the batch pays a text pass.
     *
@@ -1466,7 +1352,7 @@ object Dedup {
     val pref0 = apPrefix(tk, cnt, tNum, tDen)
     val prefS =
       if (maxTokenOcc >= Long.MaxValue / 2) pref0
-      else stageAndRead(pref0)
+      else Stage(pref0)
     val pref = apOccGate(prefS, maxTokenOcc)
     val cand = pref
       .join(pref.select(col("a_id").as("b_id"), col("tok"),
@@ -1634,7 +1520,7 @@ object Dedup {
     * the base's prefixes, element sets, and — the piece that makes the
     * index reusable — its element-frequency table, FROZEN as the global
     * prefix order. Each table stages to parquet (unique temp dirs,
-    * JVM-exit cleanup, the stageSignatures contract), so later batches
+    * JVM-exit cleanup, the [[graft.ops.Stage]] contract), so later batches
     * never rescan the base corpus. */
   def allPairsIndex(base: DataFrame, idCol: String, setCol: String,
                     tNum: Int, tDen: Int,
@@ -1646,9 +1532,9 @@ object Dedup {
     // derive from it, and without the stage each would re-run the
     // caller's set projection (often a shingle explode) over the whole
     // base corpus — one text pass instead of three
-    val tk = stageAndRead(apTokens(base, idCol, setCol))
+    val tk = Stage(apTokens(base, idCol, setCol))
     val cnt = tk.groupBy(col("tok")).agg(count(lit(1)).as("_ap_c"))
-    val cntS = stageAndRead(cnt)
+    val cntS = Stage(cnt)
     // prefix and sets both derive from the ALREADY-STAGED tk + counts —
     // stage them CONCURRENTLY (two driver threads, two Spark jobs)
     // instead of two sequential write+read commit round-trips; both
@@ -1659,7 +1545,7 @@ object Dedup {
     // narrow census: one agg over the ALREADY-STAGED prefixes + a
     // token-sized stage write, paid once at indexing time
     val occ = if (censusInIndex)
-      Some(stageAndRead(
+      Some(Stage(
         prefix.groupBy(col("tok")).agg(count(lit(1)).as("_ap_occ"))))
     else None
     AllPairsIndex(prefix, sets, cntS, occ)
@@ -1672,9 +1558,9 @@ object Dedup {
     import scala.concurrent.{Await, Future, ExecutionContext}
     import scala.concurrent.duration.Duration
     implicit val ec: ExecutionContext = ExecutionContext.global
-    // stageAndRead inside the future: the read-back frame carries the
+    // Stage inside the future: the read-back frame carries the
     // writer's known schema, so no footer-inference job ever runs
-    val fs = Seq(Future(stageAndRead(a)), Future(stageAndRead(b)))
+    val fs = Seq(Future(Stage(a)), Future(Stage(b)))
     val settled = fs.map(f => scala.util.Try(Await.result(f, Duration.Inf)))
     settled.collectFirst { case scala.util.Failure(e) => throw e }
     (settled(0).get, settled(1).get)
@@ -1710,7 +1596,7 @@ object Dedup {
     // census (token-sized stage write — delta-vocabulary cost, not
     // corpus cost)
     val occ = index.occ.map { o =>
-      stageAndRead(
+      Stage(
         o.select(col("tok"), col("_ap_occ"))
           .unionByName(bPrefix.groupBy(col("tok"))
             .agg(count(lit(1)).as("_ap_occ")))
@@ -1766,7 +1652,7 @@ object Dedup {
     val bpref0 = apPrefix(tk, index.counts, tNum, tDen)
     val bprefS =
       if (maxTokenOcc >= Long.MaxValue / 2) bpref0
-      else stageAndRead(bpref0)
+      else Stage(bpref0)
     val bpref = index.occ match {
       case Some(o) => apOccGateCounted(bprefS, maxTokenOcc, o)
       case None => apOccGate(bprefS, maxTokenOcc, occExtra = Some(index.prefix))

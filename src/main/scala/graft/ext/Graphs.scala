@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.ops.Stage
 
 /** Link-graph centrality for web-scale corpus curation.
   *
@@ -37,7 +38,7 @@ object Graphs {
     * runs — the drop handle runs in `finally`, but kill -9 between
     * writeBucketed and the drop leaves the managed table + warehouse
     * directory behind, and UUID-unique names mean no later run ever
-    * reclaims them by name collision. Mirrors drainStageDirs' hygiene
+    * reclaims them by name collision. Mirrors Stage.drain's hygiene
     * contract for stage dirs: delete only what is provably garbage — a
     * dir whose embedded owner pid no longer exists (/proc/<pid> gone).
     * A LIVE concurrent driver's tables keep their pid alive and are
@@ -198,7 +199,7 @@ object Graphs {
     // one full-corpus nodes-distinct + degree agg per crawl).
     private var skel: Option[DataFrame] = None
     private[ext] def initSkeleton(): Unit =
-      skel = Some(Dedup.stageAndRead(skeletonOf(edges, weighted)))
+      skel = Some(Stage(skeletonOf(edges, weighted)))
     /** The staged skeleton frame (node, _pr_od) when maintained; rankers
       * fall back to deriving it from the edge table when absent. */
     private[ext] def skeletonOpt: Option[DataFrame] = skel
@@ -222,7 +223,7 @@ object Graphs {
       // append and the skeleton merge read this delta-sized flat
       // parquet. A throw here has written nothing — the table and the
       // skeleton both still describe the resident edges.
-      val d = Dedup.stageAndRead(projectEdges(delta, srcCol, dstCol, weightCol))
+      val d = Stage(projectEdges(delta, srcCol, dstCol, weightCol))
       // from the write on the table may hold rows the skeleton lacks: a
       // throw before the merge lands leaves NO skeleton (rankers derive
       // it from the edge table), never a stale one
@@ -238,7 +239,7 @@ object Graphs {
       // aggregation: the old skeleton's rows are pre-summed
       // [[skeletonRows]] contributions, so old rows ∪ delta endpoint
       // rows → one `sum` groupBy IS the merged skeleton.
-      skel = prev.map(s => Dedup.stageAndRead(
+      skel = prev.map(s => Stage(
         s.unionByName(skeletonRows(d, weighted))
           .groupBy(col("node")).agg(sum(col("_pr_od")).as("_pr_od"))))
     }
@@ -337,7 +338,7 @@ object Graphs {
     * per round (dangling branch + contribution branch), so for deep runs
     * pass `stagePerIteration = true`: each round's rank table stages to a
     * unique temp parquet (JVM-exit cleanup, same contract as
-    * [[graft.ext.Dedup.stageSignatures]]) — constant plan size, each
+    * [[graft.ops.Stage]]) — constant plan size, each
     * round materialized exactly once — and the EDGE table stages too,
     * bucketed ([[stageEdgesBucketed]]), because every round re-reads it
     * (contribution join, skeleton rejoin) and a lazy edge lineage would
@@ -479,7 +480,7 @@ object Graphs {
             Seq("node"), "left")
           .select(col("node"), col("_pr_od"),
             coalesce(col("_pr_seed"), lit(false)).as("_pr_seed")))
-        if (staged) Dedup.stageAndRead(b) else b
+        if (staged) Stage(b) else b
     }
     val n = seedNodes match {
       case None =>
@@ -510,7 +511,7 @@ object Graphs {
         .select(carry :+ coalesce(col("_pr_warm"), cold).as("rank_q"): _*)
     }
     if (staged && prior.isDefined)
-      ranks = Dedup.stageAndRead(ranks)
+      ranks = Stage(ranks)
     for (_ <- 1 to iters) {
       val dang = ranks.filter(col("_pr_od").isNull)
         .agg(coalesce(sum(col("rank_q")), lit(0L)).as("_pr_dm"))
@@ -524,7 +525,7 @@ object Graphs {
                 * (coalesce(_pr_s, 0L) + $dangShare)) div 1000
               as bigint)""").as("rank_q"): _*)
       if (staged)
-        ranks = Dedup.stageAndRead(ranks)
+        ranks = Stage(ranks)
     }
     ranks.select(col("node"), col("rank_q").as("rank_q18"))
   }
@@ -600,7 +601,7 @@ object Graphs {
         .union(eBySrc.select(col("_ht_dst").as("node"))).distinct()
       val nodes =
         if (stagePerIteration)
-          Dedup.stageAndRead(nodes0)
+          Stage(nodes0)
         else nodes0
       require(eBySrc.limit(1).count() > 0, "hits needs a non-empty edge list")
 
@@ -634,8 +635,8 @@ object Graphs {
           // stage BOTH frames: the final select consumes auth too, and
           // a lazy auth would re-run its half-step (incl. the edge
           // join) after the tables drop in finally
-          auth = Dedup.stageAndRead(auth)
-          hub = Dedup.stageAndRead(hub)
+          auth = Stage(auth)
+          hub = Stage(hub)
         }
       }
       // hub and auth both descend from `nodes` — rename one join key so
@@ -662,7 +663,7 @@ object Graphs {
     * edge, both ways — built once, staged) is filtered to
     * alive destinations by one node-keyed semi-join, then one
     * map-side-combining degree count; the survivor set stages per
-    * round ([[Dedup.stageSignatures]] — constant plan size), and the
+    * round ([[graft.ops.Stage]] — constant plan size), and the
     * ONLY driver scalar is the per-round survivor count backing the
     * convergence test (the pageRank |V| discipline). Ids only on every
     * exchange.
@@ -689,7 +690,7 @@ object Graphs {
     // write plus 32-task bucket scans per round are pure overhead
     // (guide §1.1: the "ideal" plan lost to the measurement; §2.4's
     // shuffle removal has nothing to remove here). FLAT stage it is.
-    val ee = Dedup.stageAndRead(und
+    val ee = Stage(und
       .select(col("_kc_u").as("_kc_a"), col("_kc_v").as("_kc_b"))
       .unionAll(und.select(col("_kc_v").as("_kc_a"),
         col("_kc_u").as("_kc_b"))))
@@ -711,7 +712,7 @@ object Graphs {
         .groupBy(col("_kc_a").as("node"))
         .agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k)
-      val next = Dedup.stageAndRead(deg)
+      val next = Stage(deg)
       val m = next.count()
       if (m == n) result = next.select(col("node"), col("deg"))
       else { n = m; alive = next.select(col("node")) }

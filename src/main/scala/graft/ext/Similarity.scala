@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.ops.Stage
 
 /** Embedding similarity search over an `array<float>` column.
   *
@@ -533,7 +534,7 @@ object Similarity {
     * iteration (`iters` is small in the SemDeDup/IVF regime); pass
     * `stagePerIteration = true` to write each round's centroids to a
     * unique temp parquet stage (JVM-exit cleanup, same contract as
-    * [[graft.ext.Dedup.stageSignatures]]) so every iteration starts
+    * [[graft.ops.Stage]]) so every iteration starts
     * from a flat scan — constant plan size for deep runs, and each
     * iteration's corpus pass executes exactly once. */
   /** k-means‖ seeding (Bahmani et al. 2012) in DETERMINISTIC,
@@ -699,12 +700,11 @@ object Similarity {
     val base = corpus.select(col(idCol).cast("long").as("id"),
       col(vecCol).as("v"))
     // seed chain starts at the min-id vector (the literal path's c0)
-    var stagePath = Dedup.stageSignatures(
+    var cands = Stage(
       base.orderBy(col("id")).limit(1)
         .select(col("id").as("cand_id"), col("v").as("cvec")))
     var nCands = 1L
     for (r <- 1 to rounds) {
-      val cands = spark.read.parquet(stagePath)
       val scored = base.join(kppMinDist(base, cands), Seq("id"))
       val tot = scored.agg(sum(col("_kp_d2").cast("decimal(38,0)")).as("t"))
         .collect().head.getDecimal(0)
@@ -718,8 +718,8 @@ object Similarity {
               * col("_kp_d2").cast("decimal(38,0)"))
           .select(col("id").as("cand_id"), col("v").as("cvec"))
           .join(cands.select(col("cand_id")), Seq("cand_id"), "left_anti")
-        stagePath = Dedup.stageSignatures(cands.unionByName(fresh))
-        nCands = spark.read.parquet(stagePath).count()
+        cands = Stage(cands.unionByName(fresh))
+        nCands = cands.count()
         require(nCands <= maxCandidates,
           s"k-means|| oversample reached $nCands candidates " +
             s"(> maxCandidates = $maxCandidates): lower l/rounds or raise " +
@@ -729,7 +729,6 @@ object Similarity {
     require(nCands >= k,
       s"k-means|| sampled only $nCands candidates for k = $k — " +
         s"raise l or rounds (corpus may also be smaller than k)")
-    val cands = spark.read.parquet(stagePath)
     // nearest candidate per corpus row, ties -> lowest cand_id: pass 1 =
     // primitive min(d²); pass 2 = fan out the (id, v, d²) rows again and
     // keep min(cand_id) among the exact-d² matches — two primitive
@@ -780,7 +779,7 @@ object Similarity {
         .agg(transform(array_sort(collect_list(struct(col("_p"), col("_c")))),
           x => x.getField("_c")).as("cvec"))
       if (stagePerIteration)
-        cents = Dedup.stageAndRead(cents)
+        cents = Stage(cents)
     }
     cents
   }
@@ -1641,18 +1640,16 @@ object Similarity {
   def kCenterJoin(df: DataFrame, idCol: String, vecCol: String,
                   k: Int): DataFrame = {
     require(k >= 2 && k <= (1 << 16), s"k must be in [2, 65536]: $k")
-    val spark = df.sparkSession
     val base = df.select(col(idCol).cast("long").as("id"),
       col(vecCol).as("v"))
     require(!base.isEmpty, "kCenterJoin needs a non-empty frame")
     val seed = base.orderBy(col("id")).limit(1)
       .select(lit(1L).as("pick_rank"), col("id").as("cand_id"),
         col("v").as("cvec"), lit(null).cast("long").as("mindist_q30"))
-    var stagePath = Dedup.stageSignatures(seed)
+    var cents = Stage(seed)
     var rank = 1L
     var exhausted = false
     while (rank < k && !exhausted) {
-      val cents = spark.read.parquet(stagePath)
       val cands = cents.select(col("cand_id"), col("cvec"))
       val remaining = base.join(
         cands.select(col("cand_id").as("id")), Seq("id"), "left_anti")
@@ -1666,11 +1663,11 @@ object Similarity {
           val newRow = base.filter(col("id") === r.getLong(0))
             .select(lit(rank).as("pick_rank"), col("id").as("cand_id"),
               col("v").as("cvec"), lit(r.getLong(1)).as("mindist_q30"))
-          stagePath = Dedup.stageSignatures(cents.unionByName(newRow))
+          cents = Stage(cents.unionByName(newRow))
         case None => exhausted = true // fewer than k distinct points
       }
     }
-    spark.read.parquet(stagePath)
+    cents
       .select(col("pick_rank"), col("cand_id").as(idCol),
         col("mindist_q30"))
   }
@@ -1725,7 +1722,7 @@ object Similarity {
     val seedRow = base.orderBy(col("id")).limit(1).collect().headOption
       .getOrElse(throw new IllegalArgumentException(
         "kCenterBatch needs a non-empty frame"))
-    var stagePath = Dedup.stageSignatures(
+    var cents = Stage(
       Seq((1L, seedRow.getLong(0), seedRow.getSeq[Float](1).toArray.toSeq,
         Option.empty[Long]))
         .toDF("pick_rank", "cand_id", "cvec", "mindist_q30"))
@@ -1734,7 +1731,6 @@ object Similarity {
     var exhausted = false
     while (rank < k && !exhausted) {
       rounds += 1
-      val cents = spark.read.parquet(stagePath)
       val cands = cents.select(col("cand_id"), col("cvec"))
       val remaining = base.join(
         cands.select(col("cand_id").as("id")), Seq("id"), "left_anti")
@@ -1784,12 +1780,12 @@ object Similarity {
             first = false
           } else continue = false // an outside point may now dominate
         }
-        stagePath = Dedup.stageSignatures(cents.unionByName(
+        cents = Stage(cents.unionByName(
           accepted.toSeq.map { case (r, i, v, dd) => (r, i, v, Option(dd)) }
             .toDF("pick_rank", "cand_id", "cvec", "mindist_q30")))
       }
     }
-    (spark.read.parquet(stagePath)
+    (cents
       .select(col("pick_rank"), col("cand_id").as(idCol),
         col("mindist_q30")), rounds)
   }

@@ -171,28 +171,6 @@ object Sketch {
       .agg(max(col("reg")).as("reg"))
   }
 
-  /** Stage a sketch/register table to parquet — the persisted
-    * continuous-ingest artifact a later batch merges into — and read it
-    * back. Unique per-invocation dir (no cross-session overwrite
-    * races), registered for deletion at JVM exit. The write runs at
-    * construction time, the lshCandidatePairsStaged convention. */
-  private def stage(df: DataFrame, prefix: String): DataFrame = {
-    val dir = java.nio.file.Files.createTempDirectory(prefix)
-    Dedup.registerStageDirForCleanup(dir.toString)
-    df.write.mode("overwrite").parquet(dir.toString)
-    df.sparkSession.read.parquet(dir.toString)
-  }
-
-  /** [[cmsSketch]] staged to parquet — the base-corpus summary. */
-  def cmsSketchStaged(values: DataFrame, valueCol: String,
-                      width: Int, depth: Int): DataFrame =
-    stage(cmsSketch(values, valueCol, width, depth), "graft_cms_stage_")
-
-  /** [[hllRegisters]] staged to parquet — the base-corpus state. */
-  def hllRegistersStaged(df: DataFrame, keyCols: Seq[String],
-                         valueCol: String, p: Int): DataFrame =
-    stage(hllRegisters(df, keyCols, valueCol, p), "graft_hll_stage_")
-
   /** md5-derived 48-bit KMV hash of a value: the first 12 md5 hex digits
     * of "v:kmv" as a long — uniform on [0, 2⁴⁸), independent of the cms
     * and bloom chains by the salt, replayed in SQL by the 12-nibble
@@ -235,11 +213,6 @@ object Sketch {
     require(k >= 2 && k <= (1 << 16), s"k must be in [2, 2^16]: $k")
     states.reduce(_ unionByName _).distinct().orderBy(col("h")).limit(k)
   }
-
-  /** [[kmvState]] staged to parquet — the base-corpus sample a later
-    * batch merges into without rescanning the base. */
-  def kmvStateStaged(values: DataFrame, valueCol: String, k: Int): DataFrame =
-    stage(kmvState(values, valueCol, k), "graft_kmv_stage_")
 
   /** Cross-corpus overlap from two [[kmvState]] frames ALONE (the
     * corpora themselves are never touched): one row
@@ -376,12 +349,6 @@ object Sketch {
     require(k >= 2 && k <= (1 << 16), s"k must be in [2, 2^16]: $k")
     qsBottomK(states.reduce(_ unionByName _).distinct(), keyCols, k)
   }
-
-  /** [[qsState]] staged to parquet — the base-corpus sample a later
-    * batch merges into without rescanning the base. */
-  def qsStateStaged(df: DataFrame, keyCols: Seq[String], idCol: String,
-                    valueCol: String, k: Int): DataFrame =
-    stage(qsState(df, keyCols, idCol, valueCol, k), "graft_qs_stage_")
 
   /** Quantile estimates from a [[qsState]] frame ALONE (the corpus is
     * never touched): for each group key and requested permille p, the

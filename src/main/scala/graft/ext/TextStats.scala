@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.ops.Stage
 
 /** One row of a BPE merge table: at `merge_rank` the pair (a, b) — the
   * corpus's most frequent adjacent token pair at that round, `n`
@@ -439,8 +440,8 @@ object TextStats {
     * linearly with the round count, so for deep runs (real tokenizers do
     * tens of thousands of merges) pass `stagePerIteration = true` to stage
     * each round's corpus to a unique temp parquet (JVM-exit cleanup, the
-    * kMeansTrain/stageSignatures contract) — constant plan size, one text
-    * pass per round. */
+    * kMeansTrain/[[graft.ops.Stage]] contract) — constant plan size, one
+    * text pass per round. */
   def bpeTrain(df: DataFrame, textCol: String, nMerges: Int,
                sep: String = "\u0001",
                stagePerIteration: Boolean = false): Seq[BpeMerge] = {
@@ -460,7 +461,7 @@ object TextStats {
         merges += BpeMerge(rank, a, b, n)
         cur = cur.select(bpeApplyMerge(col("_bpe_t"), a, b, sep).as("_bpe_t"))
         if (stagePerIteration)
-          cur = Dedup.stageAndRead(cur)
+          cur = Stage(cur)
         rank += 1
       }
     }
@@ -936,16 +937,6 @@ object TextStats {
     tables.reduce(_ unionByName _)
       .groupBy((keyCols :+ tokenCol).map(col): _*)
       .agg(sum(col(cntCol)).as(cntCol))
-  }
-
-  /** A token-count table staged to parquet — the persisted base-corpus
-    * distribution a later batch merges into (the cmsSketchStaged
-    * convention: unique per-invocation dir, deleted at JVM exit). */
-  def tokenCountsStaged(counts: DataFrame): DataFrame = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_tokcnt_stage_")
-    Dedup.registerStageDirForCleanup(dir.toString)
-    counts.write.mode("overwrite").parquet(dir.toString)
-    counts.sparkSession.read.parquet(dir.toString)
   }
 
   /** Shared x97-family plumbing: the (keys, token)-keyed full-outer

@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.ops.Stage
 
 /** Unigram-LM (SentencePiece-style) tokenizer trainer — the other major
   * subword algorithm beside the BPE family ([[TextStats]] x38–x38d, x68):
@@ -228,8 +229,7 @@ object Unigram {
     // discipline): the seed collects, every EM round's E-step, and the
     // final count pass all consume it — lazily each would re-run the
     // full-corpus word aggregation (emRounds+3 corpus scans)
-    val words = spark.read.parquet(
-      Dedup.stageSignatures(wordCounts(df, textCol, maxWordLen)))
+    val words = Stage(wordCounts(df, textCol, maxWordLen))
     val subs = substringCounts(words, maxPieceLen)
 
     def ceilingChecked(m: Map[String, Long], stage: String): Map[String, Long] = {
@@ -481,9 +481,7 @@ object Unigram {
     require(nSeed >= 1, "nSeed must be >= 1")
     require(emRounds >= 1, "emRounds must be >= 1")
     require(vocabSize >= 1, "vocabSize must be >= 1")
-    val spark = df.sparkSession
-    val words = spark.read.parquet(
-      Dedup.stageSignatures(wordCounts(df, textCol, maxWordLen)))
+    val words = Stage(wordCounts(df, textCol, maxWordLen))
     val subs = substringCounts(words, maxPieceLen)
     val chars = subs.filter(length(col("piece")) === 1)
     val nChars = chars.count()
@@ -496,15 +494,14 @@ object Unigram {
     val seedTop = subs.orderBy(col("cnt").desc, col("piece")).limit(nSeed)
     val v0 = chars.unionByName(seedTop).groupBy(col("piece"))
       .agg(max(col("cnt")).as("cnt")) // distinct (chars ∩ seedTop agree on cnt)
-    var vocab = Dedup.stageAndRead(scoresOfDf(v0))
+    var vocab = Stage(scoresOfDf(v0))
     for (_ <- 1 until emRounds) {
       val cnts = emPieceCountsJoin(words, vocab, maxPieceLen)
       val floored = chars.select(col("piece"))
         .join(cnts, Seq("piece"), "left")
         .select(col("piece"), coalesce(col("cnt"), lit(1L)).as("cnt"))
         .unionByName(cnts.filter(length(col("piece")) > 1))
-      vocab = spark.read.parquet(
-        Dedup.stageSignatures(scoresOfDf(floored)))
+      vocab = Stage(scoresOfDf(floored))
     }
     val last = emPieceCountsJoin(words, vocab, maxPieceLen)
     val charsFin = chars.select(col("piece"))

@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.ops.Stage
 
 /** WordPiece tokenizer (Schuster & Nakajima 2012; the BERT tokenizer) —
   * the third major subword algorithm beside BPE ([[TextStats]] x38
@@ -117,9 +118,9 @@ object WordPiece {
     // ~2× per round — the corpus is read exactly once now and rounds
     // scan only the (distinct words × counts) table (vocabulary-sized).
     // Measured at the 100× rehearsal: exponent 0.72 → (re-measured after
-    // this change — see PERF round 16). stageSignatures = unique temp
-    // dir, JVM-exit cleanup, the engine's standard staging contract.
-    var cur = Dedup.stageAndRead(
+    // this change — see PERF round 16). Stage: unique temp dir, JVM-exit
+    // cleanup, the engine's standard staging contract.
+    var cur = Stage(
       Unigram.wordCounts(df, textCol, maxWordLen)
         .select(wordUnits(col("word")).as("_wp_t"), col("wcnt")))
     val merges = Seq.newBuilder[WpMerge]
@@ -142,7 +143,7 @@ object WordPiece {
         cur = cur.select(applyMerge(col("_wp_t"), a, b, m).as("_wp_t"),
           col("wcnt"))
         if (stagePerIteration)
-          cur = Dedup.stageAndRead(cur)
+          cur = Stage(cur)
         rank += 1
       }
     }

@@ -230,17 +230,6 @@ object Scale {
       .write.mode("overwrite").parquet(path)
   }
 
-  /** Unique temp directory for a written layout, registered in the shared
-    * staging-dir registry (Dedup) — deleted at JVM exit, or earlier by the
-    * Bench/Verify per-query `drainStageDirs()` hygiene so a long catalog
-    * session doesn't accumulate dozens of layouts' disk + page-cache
-    * pressure (the round-11 bench-tail amplification). */
-  def tempLayoutDir(prefix: String): String = {
-    val dir = java.nio.file.Files.createTempDirectory(prefix)
-    graft.ext.Dedup.registerStageDirForCleanup(dir.toString)
-    dir.toString
-  }
-
   /** Per-file skipping manifest for a parquet directory: one row per data
     * file with its row count and per-key min/max — the file-skipping
     * index a lake maintains (Delta/Iceberg manifests, Hive stats). Built

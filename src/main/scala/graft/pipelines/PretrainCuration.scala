@@ -3,6 +3,7 @@ package graft.pipelines
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.ext.{Curation, Dedup}
+import graft.ops.Stage
 
 /** End-to-end pretraining-corpus curation: the library's LLM-data ops
   * composed as ONE lazy flow (each stage is individually oracle- or
@@ -48,8 +49,8 @@ object PretrainCuration {
       .join(kept1.drop("text"), Seq("doc_id"))
 
     // 3. fuzzy dedup: stage signatures once, candidates, clusters, apply
-    val clusters = Dedup.dupClusters(Dedup.lshCandidatePairsStaged(
-      Dedup.minhashSignature(lineDeduped, "text", 4), "doc_id", 4, 2))
+    val clusters = Dedup.dupClusters(Dedup.lshCandidatePairs(
+      Stage(Dedup.minhashSignature(lineDeduped, "text", 4)), "doc_id", 4, 2))
     val deduped = Dedup.applyDedup(lineDeduped, clusters, "doc_id")
 
     // 4. decontamination: anti-join the contaminated id list (id-only key)

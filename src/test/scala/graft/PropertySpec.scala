@@ -124,7 +124,7 @@ class PropertySpec extends SparkSpec {
     val df = docs.toDF("doc_id", "text")
     val sigAll = graft.ext.Dedup.minhashSignature(df, "text", 8)
     val newIds = docs.map(_._1).filter(_ % 3 == 0).toSet
-    val stage = graft.ext.Dedup.stageSignatures(
+    val stage = graft.ops.Stage.path(
       sigAll.filter(!col("doc_id").isin(newIds.toSeq: _*)))
     val inc = graft.ext.Dedup.lshCandidatePairsIncremental(
       sigAll.filter(col("doc_id").isin(newIds.toSeq: _*)), stage, "doc_id", 8, 2)

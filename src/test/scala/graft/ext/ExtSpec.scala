@@ -1,6 +1,7 @@
 package graft.ext
 
 import graft.SparkSpec
+import graft.ops.Stage
 import org.apache.spark.sql.functions._
 
 class ExtSpec extends SparkSpec {
@@ -41,10 +42,9 @@ class ExtSpec extends SparkSpec {
     assert(!pairs.exists { case (a, b) => a == 4L || b == 4L })
   }
 
-  test("lshCandidatePairsStaged: same pairs, ONE signature pass (plan-checked)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sig").toString
+  test("lshCandidatePairs over a Stage: same pairs, ONE signature pass (plan-checked)") {
     val sig = Dedup.minhashSignature(docs, "text", 8)
-    val staged = Dedup.lshCandidatePairsStaged(sig, "doc_id", 8, 2, s"$dir/sig")
+    val staged = Dedup.lshCandidatePairs(Stage(sig), "doc_id", 8, 2)
     val unstaged = Dedup.lshCandidatePairs(sig, "doc_id", 8, 2)
     assert(staged.as[(Long, Long)].collect().toSet ==
       unstaged.as[(Long, Long)].collect().toSet)
@@ -1291,8 +1291,8 @@ class ExtSpec extends SparkSpec {
     val newIds = Set(2L, 4L)
     val sigOld = sigAll.filter(!col("doc_id").isin(newIds.toSeq: _*))
     val sigNew = sigAll.filter(col("doc_id").isin(newIds.toSeq: _*))
-    val stage = Dedup.stageSignatures(sigOld)
-    assert(Dedup.registeredStageDirs.contains(stage)) // JVM-exit cleaned
+    val stage = Stage.path(sigOld)
+    assert(Stage.registered.contains(stage)) // drained by Catalog.reset / JVM exit
     val inc = Dedup.lshCandidatePairsIncremental(sigNew, stage, "doc_id", 8, 2)
       .as[(Long, Long)].collect().toSet
     // oracle: the full self-join restricted to pairs with >= 1 new side
@@ -1301,18 +1301,6 @@ class ExtSpec extends SparkSpec {
       .filter(p => newIds(p._1) || newIds(p._2))
     assert(inc == full)
     assert(inc.forall { case (a, b) => a < b })
-  }
-
-  test("lshCandidatePairsStaged no-path overload registers its temp dir for JVM-exit cleanup") {
-    val sig = Dedup.minhashSignature(docs, "text", 8)
-    val before = Dedup.registeredStageDirs
-    val staged = Dedup.lshCandidatePairsStaged(sig, "doc_id", 8, 2)
-    assert(staged.count() > 0)
-    val added = Dedup.registeredStageDirs -- before
-    assert(added.size == 1, s"expected exactly one new staging dir, got $added")
-    val dir = java.nio.file.Paths.get(added.head)
-    assert(java.nio.file.Files.exists(dir), s"staging dir missing: $dir")
-    assert(dir.getFileName.toString.startsWith("graft_sig_stage_"))
   }
 
   test("dupClusters: connected components with min-id labels (chains + pairs)") {
@@ -2100,7 +2088,7 @@ class ExtSpec extends SparkSpec {
     val cp = clique.as[(Long, Long)].collect().toSet
     assert(sp.subsetOf(cp), (sp -- cp).toString)
     // staged form is path-for-path the same pairs
-    assert(Dedup.lshCandidateStarPairsStaged(sig, "doc_id", 4, 2)
+    assert(Dedup.lshCandidateStarPairs(Stage(sig), "doc_id", 4, 2)
       .as[(Long, Long)].collect().toSet == sp)
   }
 
@@ -2147,7 +2135,7 @@ class ExtSpec extends SparkSpec {
       (10L, "m u v w x y z n"),
       (14L, "a1 a2 a3 a4 a5 G2 H b1 b2 b3 b4 b5")
     ).toDF("doc_id", "text")
-    val stage = Dedup.stageSignatures(
+    val stage = Stage.path(
       Dedup.spanHashes(base, "text", "doc_id", 5))
     val got = Dedup.sharedSpansExactIncremental(batch, base, stage,
         "text", "doc_id", 5)
@@ -2338,7 +2326,7 @@ class ExtSpec extends SparkSpec {
       .as[(Long, Long, Long)].collect().toSet
     assert(oneShot.exists(p => !isNew(p._1) && isNew(p._2)),
       "fixture must have cross-batch overlap")
-    val stage = Dedup.stageSignatures(Dedup.chunkSignatures(
+    val stage = Stage.path(Dedup.chunkSignatures(
       corpus.filter(col("doc_id") < 10), "text", "doc_id", 60, 4))
     val inc = Dedup.chunkNearDupPairsIncremental(
       corpus.filter(col("doc_id") >= 10), stage, "text", "doc_id", 60, 4, 2)

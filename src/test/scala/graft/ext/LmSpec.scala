@@ -493,7 +493,7 @@ class LmSpec extends SparkSpec {
     val oneShot = counts(docs).orderBy("g", "tok")
       .as[(String, String, Long)].collect().toSeq
     val merged = TextStats.mergeTokenCounts(Seq(
-        TextStats.tokenCountsStaged(counts(docs.limit(2))),
+        graft.ops.Stage(counts(docs.limit(2))),
         counts(docs.except(docs.limit(2)))),
       Seq("g"), "tok", "c").orderBy("g", "tok")
       .as[(String, String, Long)].collect().toSeq

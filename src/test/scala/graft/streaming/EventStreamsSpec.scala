@@ -854,7 +854,7 @@ class EventStreamsSpec extends SparkSpec {
       Dedup.lshCandidatePairsIncremental(s, stage, "doc_id", k, rpb)
 
     // expected: the batch-incremental flow, batch by batch
-    val stageExp = Dedup.stageSignatures(sig(base))
+    val stageExp = graft.ops.Stage.path(sig(base))
     val p1 = inc(sig(b1), stageExp).as[(Long, Long)].collect().toSet
     sig(b1).write.mode("append").parquet(stageExp)
     val p2 = inc(sig(b2), stageExp).as[(Long, Long)].collect().toSet
@@ -862,7 +862,7 @@ class EventStreamsSpec extends SparkSpec {
     assert(expected.contains((1L, 10L)) && expected.contains((11L, 20L)))
 
     // streamed: the same batches as AvailableNow micro-batches
-    val stage = Dedup.stageSignatures(sig(base))
+    val stage = graft.ops.Stage.path(sig(base))
     val src = Files.createTempDirectory("dedupsrc").toString
     val ckpt = Files.createTempDirectory("dedupckpt").toString
     val out = Files.createTempDirectory("dedupout").resolve("pairs").toString
@@ -907,7 +907,7 @@ class EventStreamsSpec extends SparkSpec {
     def csig(df: org.apache.spark.sql.DataFrame) =
       Dedup.chunkSignatures(df, "text", "doc_id", 60, 4)
 
-    val stageExp = Dedup.stageSignatures(csig(base))
+    val stageExp = graft.ops.Stage.path(csig(base))
     val p1 = inc(b1, stageExp).as[(Long, Long, Long)].collect().toSet
     csig(b1).write.mode("append").parquet(stageExp)
     val p2 = inc(b2, stageExp).as[(Long, Long, Long)].collect().toSet
@@ -916,7 +916,7 @@ class EventStreamsSpec extends SparkSpec {
     assert(expected.exists(p => p._1 == 10L && p._2 == 21L),
       s"cross-batch pair via the staged b1 chunk: $expected")
 
-    val stage = Dedup.stageSignatures(csig(base))
+    val stage = graft.ops.Stage.path(csig(base))
     val src = Files.createTempDirectory("chunksrc").toString
     val ckpt = Files.createTempDirectory("chunkckpt").toString
     val out = Files.createTempDirectory("chunkout").resolve("pairs").toString
@@ -1045,7 +1045,7 @@ class EventStreamsSpec extends SparkSpec {
       df.as[(Long, Long, Double)].collect().toSet
 
     // expected: the batch-incremental flow, batch by batch
-    val stageExp = Dedup.stageSignatures(assign(base))
+    val stageExp = graft.ops.Stage.path(assign(base))
     val p1 = pairSet(inc(b1, stageExp))
     // the no-broadcast fallback (backfill batches too big to broadcast)
     // must find the identical pair set
@@ -1059,14 +1059,14 @@ class EventStreamsSpec extends SparkSpec {
 
     // one-shot batch pairing of the FINAL corpus over an empty stage must
     // equal base-base pairs ∪ the incremental pairs — incremental ≡ batch
-    val emptyStage = Dedup.stageSignatures(assign(base.limit(0)))
+    val emptyStage = graft.ops.Stage.path(assign(base.limit(0)))
     val fullPairs = pairSet(inc(base.unionByName(b1).unionByName(b2), emptyStage))
     val basePairs = pairSet(inc(base, emptyStage))
     assert(fullPairs == basePairs ++ expected,
       s"one-shot $fullPairs vs composed ${basePairs ++ expected}")
 
     // streamed: the same batches as AvailableNow micro-batches
-    val stage = Dedup.stageSignatures(assign(base))
+    val stage = graft.ops.Stage.path(assign(base))
     val src = Files.createTempDirectory("embsrc").toString
     val ckpt = Files.createTempDirectory("embckpt").toString
     val out = Files.createTempDirectory("embout").resolve("pairs").toString
@@ -1112,7 +1112,7 @@ class EventStreamsSpec extends SparkSpec {
       Dedup.repeatedSpanStatsIncremental(df, stage, "text", "doc_id", 5,
         broadcastNew = bc)
 
-    val stage = Dedup.stageSignatures(Dedup.spanHashes(base, "text", "doc_id", 5))
+    val stage = graft.ops.Stage.path(Dedup.spanHashes(base, "text", "doc_id", 5))
     val s1 = statSet(inc(b1, stage))
     assert(statSet(inc(b1, stage, bc = false)) == s1, "no-broadcast parity")
     assert(s1 == Set((10L, 2L, 1L, 0.5), (11L, 2L, 0L, 0.0)), s1)
@@ -1132,7 +1132,7 @@ class EventStreamsSpec extends SparkSpec {
     val src = Files.createTempDirectory("spansrc").toString
     val ckpt = Files.createTempDirectory("spanckpt").toString
     val out = Files.createTempDirectory("spanout").resolve("stats").toString
-    val stage2 = Dedup.stageSignatures(Dedup.spanHashes(base, "text", "doc_id", 5))
+    val stage2 = graft.ops.Stage.path(Dedup.spanHashes(base, "text", "doc_id", 5))
     def drain(): Unit = {
       val q = spark.readStream.schema(b1.schema).parquet(src)
         .writeStream.trigger(Trigger.AvailableNow())
